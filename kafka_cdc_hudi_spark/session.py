@@ -51,6 +51,12 @@ def get_spark(
         # Arrow for the few pandas-UDF paths (multimodal / ANN refine)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # generated-class cache (Spark default 100). A warm 3-table fan-out
+        # micro-batch with SCD2 on one table generates ~140 classes, so the
+        # default LRU evicted each one before the next batch asked for it
+        # and Janino recompiled the whole set every batch; at 1000 a warm
+        # batch compiles under 15 (tests/test_streaming_fanout.py pins it)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

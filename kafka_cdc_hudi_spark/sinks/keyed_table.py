@@ -1319,6 +1319,14 @@ class KeyedParquetTable:
             # never manifested — same contract as the old pre-check,
             # without re-running the lineage for isEmpty.
             meta = self._commit_meta_entry(ddir, "delta", t0)
+            if meta["rows"] is None:
+                # an unreadable footer leaves emptiness unknown: never
+                # commit a delta nobody can vouch for — fail stop
+                shutil.rmtree(ddir, ignore_errors=True)
+                raise RuntimeError(
+                    f"{self.root}: delta {new_version} has an unreadable "
+                    "parquet footer; rolled back, batch not committed"
+                )
             if meta["rows"] == 0:
                 shutil.rmtree(ddir, ignore_errors=True)
                 return False

@@ -16,11 +16,18 @@ the reference's per-table Python-UDF filter + per-table schema-inference job
 + per-table parse (N full passes with Python round-trips).
 
 Dynamic-schema mode: when a table has no declared payload schema, the driver
-infers one from the first non-empty batch and caches it; each batch then runs
-a cheap codegen'd key-set probe (``json_object_keys``) and re-infers ONLY
-when the batch carries payload keys the cached schema lacks — schema drift
-support (FIXTURES §A3.8) without the reference's per-batch inference job
-(SURVEY §4.3.3).
+infers one from the first non-empty batch and caches it; later batches
+re-infer ONLY when the batch carries payload keys the cached schema lacks —
+schema drift support (FIXTURES §A3.8) without the reference's per-batch
+inference job (SURVEY §4.3.3).
+
+Batch probe: the drift check and the dead-letter check share ONE grouped
+job over the persisted batch (:meth:`CdcStreamDriver._probe_batch`). It
+returns every cached-schema table's payload key set (``json_object_keys``
+on the exactly-routed rows) plus the malformed-line count, however many
+tables the batch fans out to. It runs only when some table has a cached
+inferred schema or a quarantine dir is set, so a declared-schema stream
+without quarantine pays no probe at all.
 """
 
 from __future__ import annotations
@@ -28,6 +35,7 @@ from __future__ import annotations
 import logging
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +52,16 @@ from kafka_cdc_hudi_spark.operators.cdc import (
 from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable
 
 log = logging.getLogger(__name__)
+
+
+class BatchProbe(NamedTuple):
+    """Answers of the per-batch probe job (:meth:`CdcStreamDriver._probe_batch`)."""
+
+    #: payload key set per probed table (qualified name); a probed table
+    #: with no exactly-routed rows in the batch maps to an empty set
+    payload_keys: dict[str, set[str]]
+    #: lines lacking the dialect's operation field (quarantine candidates)
+    n_malformed: int
 
 
 @dataclass
@@ -123,14 +141,16 @@ class CdcStreamDriver:
         foreign-table rows); anything feeding schema inference must be
         exactly this table's events, or the cached payload schema would
         permanently absorb other tables' columns as null-filled fields."""
+        db, tbl = self._raw_routing()
+        return df.filter((db == spec.db) & (tbl == spec.table))
+
+    def _raw_routing(self):
+        """The dialect's (db, table) routing fields read from raw JSON."""
         if self.config.dialect == DIALECT_DMS:
             db_path, tbl_path = "$['metadata']['schema-name']", "$['metadata']['table-name']"
         else:
             db_path, tbl_path = "$['db']", "$['table']"
-        return df.filter(
-            (F.get_json_object("value", db_path) == spec.db)
-            & (F.get_json_object("value", tbl_path) == spec.table)
-        )
+        return F.get_json_object("value", db_path), F.get_json_object("value", tbl_path)
 
     def _schema_for(self, spec: TableSpec, table_slice: DataFrame) -> StructType | None:
         declared = self._declared_schema(spec)
@@ -157,31 +177,76 @@ class CdcStreamDriver:
             return ("$.data",)
         return ("$.after", "$.before")  # deletes carry the row in `before`
 
-    def _drifted(self, sliced: DataFrame, schema: StructType) -> bool:
-        """True when the batch carries payload keys the cached schema lacks.
+    def _malformed(self):
+        """Raw lines that cannot carry this pipeline's envelope: unparseable
+        JSON, or missing the dialect's operation field."""
+        op_path = (
+            "$['metadata']['operation']" if self.config.dialect == DIALECT_DMS else "$['op']"
+        )
+        return F.get_json_object("value", op_path).isNull()
 
-        Detection is one narrow codegen'd aggregation over the (persisted)
-        raw slice — ``json_object_keys`` of the payload object, distinct,
-        collected (the key set is tiny). New fields can't be detected from
-        ``from_json`` output (PERMISSIVE mode silently ignores extras), and
-        re-running full inference per batch is the reference's big
-        inefficiency (SURVEY §4.3.3) — this pays the full inference job only
-        when drift actually happened. The probe runs on the exactly-routed
-        slice so foreign-table payload keys can neither trigger a spurious
-        re-infer nor leak into the merged schema.
-        """
+    def _probe_batch(self, batch_df: DataFrame) -> BatchProbe | None:
+        """One grouped job over the (persisted) batch answering every
+        per-batch question the driver asks before it parses: each
+        cached-schema table's payload key set, and the malformed-line
+        count for the quarantine. Rows group by their EXACT routing fields
+        (only the probed tables' rows keep a group key), so foreign-table
+        payload keys can neither trigger a spurious re-infer nor leak into
+        a merged schema, and the job's cost does not grow with the number
+        of tables. Returns None — and runs nothing — when no table has a
+        cached inferred schema and no quarantine dir is set."""
+        probed = [
+            s
+            for s in self.config.tables
+            if self._declared_schema(s) is None and s.qualified_name in self._inferred
+        ]
+        if not probed and self.config.quarantine_dir is None:
+            return None
+        db, tbl = self._raw_routing()
+        raw = batch_df.select(
+            "value", db.alias("db"), tbl.alias("tbl"), self._malformed().alias("bad")
+        )
+        hit = F.lit(False)
+        for s in probed:
+            hit = hit | ((F.col("db") == s.db) & (F.col("tbl") == s.table))
         arrs = ", ".join(
             f"coalesce(json_object_keys(get_json_object(value, '{p}')), "
             f"cast(array() as array<string>))"
             for p in self._payload_key_paths()
         )
-        observed = {
-            r["k"]
-            for r in sliced.select(F.explode(F.expr(f"concat({arrs})")).alias("k"))
-            .distinct()
+        rows = (
+            raw.groupBy(
+                F.when(hit, F.col("db")).alias("db"), F.when(hit, F.col("tbl")).alias("tbl")
+            )
+            .agg(
+                F.collect_set(F.when(hit, F.expr(f"concat({arrs})"))).alias("keys"),
+                F.count_if("bad").alias("n_bad"),
+            )
             .collect()
-        }
-        return not observed <= set(schema.fieldNames())
+        )
+        keys = {s.qualified_name: set() for s in probed}
+        names = {(s.db, s.table): s.qualified_name for s in probed}
+        for r in rows:
+            name = names.get((r["db"], r["tbl"]))
+            if name is not None:
+                keys[name] = set().union(*r["keys"])
+        return BatchProbe(keys, sum(r["n_bad"] for r in rows))
+
+    def _drifted(self, spec: TableSpec, schema: StructType, probe: BatchProbe | None) -> bool:
+        """True when the batch carries payload keys the cached schema lacks.
+
+        The key set comes from the batch probe (:meth:`_probe_batch`), one
+        job for all tables. New fields can't be detected from ``from_json``
+        output (PERMISSIVE mode silently ignores extras), and re-running
+        full inference per batch is the reference's big inefficiency
+        (SURVEY §4.3.3) — this pays the full inference job only when drift
+        actually happened. A table whose schema was inferred in this very
+        batch is not in the probe: its fresh schema already covers it.
+        """
+        if probe is None:
+            return False
+        observed = probe.payload_keys.get(spec.qualified_name)
+        return observed is not None and not observed <= set(schema.fieldNames())
 
     def _merge_schemas(self, old: StructType, new: StructType) -> StructType:
         """Union of fields; existing fields keep their established type so a
@@ -189,7 +254,9 @@ class CdcStreamDriver:
         return merge_payload_schemas(old, new)
 
     # -- per-batch processing --------------------------------------------------
-    def _run_table(self, spec: TableSpec, raw_batch: DataFrame, batch_id: int) -> bool:
+    def _run_table(
+        self, spec: TableSpec, raw_batch: DataFrame, batch_id: int, probe: BatchProbe | None
+    ) -> bool:
         # per-table scheduler pool: FAIR mode arbitrates BETWEEN pools, so
         # each table needs its own or the per-table jobs queue FIFO in the
         # default pool and one huge table starves the rest (reference O7)
@@ -201,11 +268,7 @@ class CdcStreamDriver:
         schema = self._schema_for(spec, sliced)
         if schema is None:
             return False  # empty slice, nothing to infer or write
-        if (
-            self._declared_schema(spec) is None  # dynamic mode only
-            and spec.qualified_name in self._inferred
-            and self._drifted(self._exact_route_raw(sliced, spec), schema)
-        ):
+        if self._drifted(spec, schema, probe):
             old = schema
             self.invalidate_schema(spec)
             schema = self._merge_schemas(old, self._schema_for(spec, sliced))
@@ -254,24 +317,19 @@ class CdcStreamDriver:
             sink.sync_catalog(self.spark, spec.qualified_name)
         return committed
 
-    def _quarantine(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _quarantine(self, batch_df: DataFrame, batch_id: int, probe: BatchProbe | None) -> None:
         """Dead-letter pass: raw records that cannot carry this pipeline's
         envelope (unparseable JSON, or missing the dialect's operation
         field) are preserved under ``<quarantine_dir>/batch_<id>/`` instead
         of silently vanishing in the PERMISSIVE parse — the operational gap
         the reference leaves open. Per-batch overwrite keeps replays
-        idempotent. Detection is one codegen'd ``get_json_object`` probe
-        over the already-persisted batch; the happy path pays ~nothing."""
-        if self.config.quarantine_dir is None:
-            return
-        op_path = (
-            "$['metadata']['operation']" if self.config.dialect == DIALECT_DMS else "$['op']"
-        )
-        bad = batch_df.filter(F.get_json_object("value", op_path).isNull())
-        if bad.isEmpty():
+        idempotent. Detection is the batch probe's malformed count (the
+        probe always runs when a quarantine dir is set); the happy path
+        pays no job of its own."""
+        if self.config.quarantine_dir is None or probe.n_malformed == 0:
             return
         out = f"{self.config.quarantine_dir}/batch_{batch_id}"
-        bad.write.mode("overwrite").text(out)
+        batch_df.filter(self._malformed()).write.mode("overwrite").text(out)
         log.warning("quarantined malformed records from batch %s to %s", batch_id, out)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -281,19 +339,21 @@ class CdcStreamDriver:
         try:
             if batch_df.isEmpty():  # single-action gate (vs reference double count)
                 return
-            self._quarantine(batch_df, batch_id)
+            probe = self._probe_batch(batch_df)
+            self._quarantine(batch_df, batch_id, probe)
             specs = self.config.tables
             if self.config.max_workers > 1 and len(specs) > 1:
                 # FAIR-scheduled concurrent per-table jobs (reference O7)
                 with ThreadPoolExecutor(max_workers=self.config.max_workers) as ex:
                     futures = {
-                        ex.submit(self._run_table, s, batch_df, batch_id): s for s in specs
+                        ex.submit(self._run_table, s, batch_df, batch_id, probe): s
+                        for s in specs
                     }
                     for fut, spec in futures.items():
                         fut.result()  # fail-stop: first exception propagates
             else:
                 for spec in specs:
-                    self._run_table(spec, batch_df, batch_id)
+                    self._run_table(spec, batch_df, batch_id, probe)
         finally:
             batch_df.unpersist()
 

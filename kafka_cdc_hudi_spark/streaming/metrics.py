@@ -31,13 +31,18 @@ class BatchMetricsListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
+        durations = dict(p.get("durationMs") or {})
         rec = {
             "query_id": p.get("id"),
             "batch_id": p.get("batchId"),
             "num_input_rows": p.get("numInputRows"),
             "input_rows_per_second": p.get("inputRowsPerSecond"),
             "process_rows_per_second": p.get("processedRowsPerSecond"),
-            "batch_duration_ms": (p.get("durationMs") or {}).get("triggerExecution"),
+            "batch_duration_ms": durations.get("triggerExecution"),
+            # the trigger's full phase split: addBatch (the foreachBatch
+            # body), latestOffset, getBatch, queryPlanning, walCommit,
+            # commitOffsets — idle triggers carry only some of them
+            "duration_ms": durations,
             "state_rows": sum(
                 s.get("numRowsTotal", 0) for s in p.get("stateOperators") or []
             ),

@@ -138,24 +138,32 @@ class Scd2HistoryMaintainer:
             b = b.withColumnRenamed("_deleted", _OP_DELETED)
         else:
             b = b.withColumn(_OP_DELETED, F.lit(False))
-        if b.isEmpty():
-            return False
         b = b.persist()
-        # NULL-key rows would be appended to the log but never selected by
-        # the affected-key predicate (NULL IN (...) is NULL, and the
-        # semi-join fallback drops NULL keys too) — that key's chain would
-        # silently never materialize. Fail fast instead (ADVICE r9).
-        null_key = None
-        for k in keys:
-            c = F.col(k).isNull()
-            null_key = c if null_key is None else (null_key | c)
-        if not b.filter(null_key).isEmpty():
-            b.unpersist()
-            raise ValueError(
-                f"scd2 batch {batch_id} carries rows with NULL primary-key "
-                f"values in {keys}; filter or quarantine them upstream"
-            )
         try:
+            # ONE job answers emptiness, the NULL-key check and the
+            # affected-key set: the capped key collect. NULL-key rows would
+            # be appended to the log but never selected by the affected-key
+            # predicate (NULL IN (...) is NULL, and the semi-join fallback
+            # drops NULL keys too) — that key's chain would silently never
+            # materialize. Fail fast instead, before the log append
+            # (ADVICE r9). Only a batch past the literal cap may hide a
+            # NULL key beyond the collected prefix and pays a separate job.
+            affected = b.select(*keys).distinct()
+            aff_rows = affected.limit(_MAX_KEY_LITERALS + 1).collect()
+            if not aff_rows:
+                return False
+            has_null = any(r[k] is None for r in aff_rows for k in keys)
+            if not has_null and len(aff_rows) > _MAX_KEY_LITERALS:
+                null_key = None
+                for k in keys:
+                    c = F.col(k).isNull()
+                    null_key = c if null_key is None else (null_key | c)
+                has_null = not b.filter(null_key).isEmpty()
+            if has_null:
+                raise ValueError(
+                    f"scd2 batch {batch_id} carries rows with NULL primary-key "
+                    f"values in {keys}; filter or quarantine them upstream"
+                )
             # 1. log append (no-op on replay: batch-id pointer protocol)
             self.log.merge_batch(spark, b, batch_id=batch_id)
             # 2. rebuild ONLY the affected keys' chains from the log.
@@ -164,8 +172,6 @@ class Scd2HistoryMaintainer:
             # read prunes at the parquet scan and costs O(affected keys'
             # rows), not O(log); oversized batches fall back to the
             # broadcast semi-join above the fold.
-            affected = b.select(*keys).distinct()
-            aff_rows = affected.limit(_MAX_KEY_LITERALS + 1).collect()
             pred = (
                 _key_predicate(aff_rows, keys, b.select(*keys).schema)
                 if len(aff_rows) <= _MAX_KEY_LITERALS

@@ -220,6 +220,31 @@ class TestMorCrashRecovery:
         assert mor.merge_batch(spark, _df(spark, BATCHES[1]), batch_id=1)
         assert _state(mor.read(spark)) == {1: ("a2", 20), 3: ("c", 20)}
 
+    def test_unreadable_delta_footer_fails_stop(self, spark, tmp_path, monkeypatch):
+        """The MOR empty gate counts rows from the delta's footers; an
+        unreadable footer leaves the count unknown. The merge must roll the
+        delta back and raise, not commit it unexamined."""
+        import pyarrow.parquet as pq
+
+        mor = _mor(tmp_path)
+        mor.merge_batch(spark, _df(spark, BATCHES[0]), batch_id=0)
+        with open(mor._pointer_path) as f:
+            before = f.read()
+
+        def unreadable(*a, **kw):
+            raise OSError("corrupt footer")
+
+        monkeypatch.setattr(pq, "ParquetFile", unreadable)
+        with pytest.raises(RuntimeError, match="unreadable parquet footer"):
+            mor.merge_batch(spark, _df(spark, BATCHES[1]), batch_id=1)
+        monkeypatch.undo()
+
+        with open(mor._pointer_path) as f:
+            assert f.read() == before
+        assert mor._commit_dirs()[1] == [1]  # rolled-back delta dir removed
+        assert mor.last_batch_id() == 0
+        assert _state(mor.read(spark)) == {1: ("a1", 11), 2: ("b", 10)}
+
     def test_read_beyond_committed_version_raises(self, spark, tmp_path):
         mor = _mor(tmp_path)
         mor.merge_batch(spark, _df(spark, BATCHES[0]), batch_id=0)

@@ -128,7 +128,8 @@ def test_dynamic_schema_inference_stream(spark, tmp_path):
 
 def test_metrics_listener_records_batches(spark, tmp_path):
     """Observability: the progress listener captures per-batch input rows
-    and durations for the CDC stream."""
+    and durations, including the trigger's full phase split, for the CDC
+    stream."""
     from kafka_cdc_hudi_spark.streaming.metrics import attach_metrics
 
     src = tmp_path / "src"
@@ -158,6 +159,16 @@ def test_metrics_listener_records_batches(spark, tmp_path):
         t = listener.totals()
         assert t["total_input_rows"] >= 2, listener.progress
         assert t["n_batches"] >= 1
+        # the full trigger timing split is kept, not just triggerExecution
+        data = [r for r in listener.progress if r["num_input_rows"]]
+        assert data, listener.progress
+        for r in data:
+            phases = r["duration_ms"]
+            assert {
+                "addBatch", "latestOffset", "queryPlanning", "walCommit", "commitOffsets"
+            } <= set(phases), phases
+            assert phases["triggerExecution"] == r["batch_duration_ms"]
+            assert phases["addBatch"] <= r["batch_duration_ms"]
     finally:
         spark.streams.removeListener(listener)
 

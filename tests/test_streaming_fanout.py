@@ -562,3 +562,144 @@ def test_maintained_hybrid_two_indexes_one_driver(spark, tmp_path):
     # churn non-vacuity: the three checkpoints are pairwise distinct —
     # the scripts really moved rankings on both arms
     assert ck1_live != ck2_live and ck2_live != ck3_live
+
+
+# -- per-batch fixed cost: generated-code reuse and the fused batch probe -----
+
+
+def _dms(op, table, data, ts):
+    return json.dumps(
+        {
+            "data": data,
+            "metadata": {
+                "operation": op,
+                "timestamp": f"2024-01-01T00:{ts // 60:02d}:{ts % 60:02d}.000Z",
+                "record-type": "data",
+                "schema-name": "d1",
+                "table-name": table,
+            },
+        }
+    )
+
+
+def _dms_batch(spark, batch_id, tables, n_keys=40, extra_col=None):
+    """One same-shape DMS micro-batch per ``batch_id``: every table gets
+    ``n_keys`` upserts on a batch-shifted key window, one delete and one
+    malformed line; ``extra_col`` adds a drifted payload column to the
+    named table."""
+    lines = ["not json {{"]
+    for t in tables:
+        for i in range(n_keys):
+            row = {"id": batch_id * 7 + i, "name": f"n{i}", "amount": i * 1.5,
+                   "qty": i, "status": "ok"}
+            if extra_col is not None and extra_col[0] == t:
+                row[extra_col[1]] = i
+            lines.append(_dms("update" if i else "insert", t, row, batch_id))
+        lines.append(_dms("delete", t, {"id": batch_id * 7, "name": None, "amount": None,
+                                        "qty": None, "status": None}, batch_id + 1))
+    return spark.createDataFrame([(v,) for v in lines], "value string")
+
+
+def _dms_fanout_cfg(tmp_path, tables, quarantine=True, scd2=True):
+    from kafka_cdc_hudi_spark.config import DIALECT_DMS
+
+    return JobConfig(
+        dialect=DIALECT_DMS,
+        tables=[TableSpec("d1", t, ("id",)) for t in tables],
+        sink_root=str(tmp_path / "sink"),
+        checkpoint_location=str(tmp_path / "ckpt"),
+        quarantine_dir=str(tmp_path / "quarantine") if quarantine else None,
+        max_workers=3,
+        scd2_history=scd2,
+        scd2_history_mode="mor",
+        scd2_tables=(tables[0],),
+        trigger_interval="1 seconds",
+    )
+
+
+def test_warm_fanout_batch_reuses_generated_code(spark, tmp_path):
+    """A warm fan-out batch (3 dynamic-schema tables, SCD2 on one, the
+    quarantine on) must find its generated classes in Spark's codegen
+    cache. With the default 100-entry cache each batch's ~140 classes
+    evicted one another and every batch recompiled all of them; the
+    session's larger cache leaves only the classes whose per-batch
+    literals differ."""
+    tables = ("t0", "t1", "t2")
+    driver = CdcStreamDriver(spark, _dms_fanout_cfg(tmp_path, tables))
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    per_batch = []
+    for bid in range(4):
+        batch = _dms_batch(spark, bid, tables)
+        before = compiles.getCount()
+        driver.process_batch(batch, bid)
+        per_batch.append(compiles.getCount() - before)
+    assert per_batch[-1] <= 15, per_batch
+    assert driver.scd2_for(driver.config.tables[0]).read(spark) is not None
+
+
+class _ProbeSpy:
+    """Counts, per batch, the probe jobs the driver runs and the collects
+    they issue."""
+
+    def __init__(self, monkeypatch, batch_type):
+        self.runs: list[int] = []
+        self.collects = 0
+        probe, collect = CdcStreamDriver._probe_batch, batch_type.collect
+
+        def spy_probe(drv, batch_df):
+            before = self.collects
+            out = probe(drv, batch_df)
+            if out is not None:
+                self.runs.append(self.collects - before)
+            return out
+
+        def spy_collect(df):
+            self.collects += 1
+            return collect(df)
+
+        monkeypatch.setattr(CdcStreamDriver, "_probe_batch", spy_probe)
+        monkeypatch.setattr(batch_type, "collect", spy_collect)
+
+
+@pytest.mark.parametrize("n_tables", [1, 3])
+def test_one_probe_job_per_batch(spark, tmp_path, monkeypatch, n_tables):
+    """Drift detection and the quarantine read their answers from ONE
+    probe collect per batch, whether the batch fans out to 1 table or 3;
+    drift on one table re-infers that table only."""
+    tables = ("t0", "t1", "t2")[:n_tables]
+    driver = CdcStreamDriver(spark, _dms_fanout_cfg(tmp_path, tables, scd2=False))
+    spy = _ProbeSpy(monkeypatch, type(_dms_batch(spark, 0, tables)))
+    for bid in range(3):
+        drift = (tables[-1], "score") if bid == 2 else None
+        driver.process_batch(_dms_batch(spark, bid, tables, n_keys=5, extra_col=drift), bid)
+        # batch 0 probes for the quarantine alone (no schema cached yet)
+        assert spy.runs == [1] * (bid + 1), spy.runs
+    fields = {t: set(driver._inferred[f"d1.{t}"].fieldNames()) for t in tables}
+    assert "score" in fields[tables[-1]]
+    assert all("score" not in fields[t] for t in tables[:-1])
+    for bid in range(3):
+        qdir = tmp_path / "quarantine" / f"batch_{bid}"
+        assert {r.value for r in spark.read.text(str(qdir)).collect()} == {"not json {{"}
+    live = {r.id for r in driver.sink_for(driver.config.tables[-1]).read(spark).collect()}
+    assert live == {b * 7 + i for b in range(3) for i in range(1, 5)}
+
+
+def test_no_probe_for_declared_schemas_without_quarantine(spark, tmp_path, monkeypatch):
+    """A declared-schema stream without a quarantine dir has nothing to
+    probe: the driver runs no probe job at all."""
+    tables = ("t0", "t1", "t2")
+    schema = StructType(
+        [StructField("id", LongType()), StructField("name", StringType()),
+         StructField("amount", DoubleType()), StructField("qty", LongType()),
+         StructField("status", StringType())]
+    )
+    driver = CdcStreamDriver(
+        spark,
+        _dms_fanout_cfg(tmp_path, tables, quarantine=False, scd2=False),
+        payload_schemas={t: schema for t in tables},
+    )
+    spy = _ProbeSpy(monkeypatch, type(_dms_batch(spark, 0, tables)))
+    for bid in range(2):
+        driver.process_batch(_dms_batch(spark, bid, tables, n_keys=5), bid)
+    assert spy.runs == []
+    assert driver.sink_for(driver.config.tables[0]).read(spark).count() == 8

@@ -241,6 +241,27 @@ class TestAdviceR9:
         # nothing committed: neither the log nor the history advanced
         assert m.read(spark) is None
 
+    def test_null_key_rejected_past_key_literal_cap(self, spark, tmp_path):
+        """Past the key-literal cap the affected-key collect sees only a
+        prefix of the keys, so a NULL key beyond it must still be caught
+        (by the separate NULL-key job) before the log append; the same
+        batch without the NULL commits through the semi-join path."""
+        from kafka_cdc_hudi_spark.streaming.scd2 import _MAX_KEY_LITERALS
+
+        m = Scd2HistoryMaintainer(root=str(tmp_path / "cap"), keys=["id"], ts_col="mtime")
+        n = _MAX_KEY_LITERALS + 904
+        rows = spark.range(n).selectExpr(
+            "id", "10L AS mtime", "'v' AS val", "false AS _deleted"
+        )
+        with_null = rows.unionByName(
+            spark.createDataFrame([(None, 10, "n", False)], SCHEMA)
+        )
+        with pytest.raises(ValueError, match="NULL primary-key"):
+            m.apply_batch(spark, with_null, batch_id=0)
+        assert m.read(spark) is None and m.log.last_batch_id() is None
+        assert m.apply_batch(spark, rows, batch_id=0)
+        assert m.read(spark).filter("is_current").count() == n
+
     def test_null_tiebreaker_row_survives_rebuilds(self, spark, tmp_path):
         """A NULL tiebreaker value under a plain-equality anti-join makes an
         unchanged history row fail to match ITSELF — tombstoned and

@@ -87,8 +87,18 @@ import uuid
 import warnings
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from kafka_cdc_hudi_spark.functions.zorder import zorder_key
 from kafka_cdc_hudi_spark.operators.dedup import latest_per_key_agg
@@ -107,6 +117,66 @@ MODE_COW_BUCKETED = "cow-bucketed"
 
 #: hive-style partition column for the bucketed-COW layout
 _BUCKET_COL = "__bucket"
+
+
+#: typed SQL literal suffix per integral key type (``5L`` is a BIGINT)
+_INT_SUFFIX = {ByteType(): "Y", ShortType(): "S", IntegerType(): "", LongType(): "L"}
+
+
+def _sql_literal(v, dt) -> str | None:
+    """``v`` as a SQL literal of exactly type ``dt`` whose text no value
+    can break out of: integral values through ``int()``, strings as a hex
+    binary literal cast to STRING (no string byte reaches the SQL text).
+    None for any other type."""
+    if dt in _INT_SUFFIX:
+        return f"CAST(NULL AS {dt.simpleString()})" if v is None else f"{int(v)}{_INT_SUFFIX[dt]}"
+    if dt == StringType():
+        if v is None:
+            return "CAST(NULL AS STRING)"
+        try:
+            return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+        except UnicodeEncodeError:  # lone surrogate: not valid UTF-8
+            return None
+    return None
+
+
+def _sql_tuples(rows: Sequence[Sequence], fields: Sequence[StructField]) -> str | None:
+    """``rows`` as the SQL row list ``(v1, v2), ...``, each value rendered
+    by :func:`_sql_literal` for its positional field; None when any value
+    has no such rendering."""
+    out = []
+    for r in rows:
+        lits = [_sql_literal(v, f.dataType) for v, f in zip(r, fields)]
+        if None in lits:
+            return None
+        out.append(f"({', '.join(lits)})")
+    return ", ".join(out)
+
+
+def _sql_columns(fields: Sequence[StructField]) -> str:
+    return ", ".join("`" + f.name.replace("`", "``") + "`" for f in fields)
+
+
+def key_set_predicate(rows: Sequence[Sequence], fields: Sequence[StructField]) -> Column:
+    """``(k1, ..) IN (rows)`` over the key columns ``fields`` — selects
+    exactly what ``isin`` over literals cast to the key types selects.
+    Integral and string keys render the whole IN-list as ONE ``F.expr``
+    (one JVM call, not one py4j round trip per literal); other key types
+    build one typed literal per value. ``rows`` is non-empty, each row
+    positional with ``fields``."""
+    tuples = _sql_tuples(rows, fields)
+    if tuples is not None:
+        # one key: `(k) IN ((1L), ..)` is a plain column IN, which pushes
+        # down to the parquet scan; several: a struct IN, like isin's
+        return F.expr(f"({_sql_columns(fields)}) IN ({tuples})")
+    if len(fields) == 1:
+        f = fields[0]
+        return F.col(f.name).isin([F.lit(r[0]).cast(f.dataType) for r in rows])
+    lits = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, fields)])
+        for r in rows
+    ]
+    return F.struct(*[F.col(f.name).alias(f.name) for f in fields]).isin(lits)
 
 
 def _dir_bytes(path: str) -> int:
@@ -271,13 +341,19 @@ class KeyedParquetTable:
             )
         os.replace(tmp, self._pointer_path)  # atomic on POSIX
 
-    def _commit_meta_entry(self, path: str, op: str, t0: float) -> dict:
+    def _commit_meta_entry(
+        self, path: str, op: str, t0: float, schema: StructType
+    ) -> dict:
         """Per-commit operational metadata (the Hudi commit-metadata
         analog, kept in the pointer next to the commit it describes):
         operation kind, file count + bytes written (one metadata-only
-        walk), and wall time from the commit operation's start. Powers
-        round-over-round operational auditing (write amplification,
-        commit latency) without scanning data.
+        walk), wall time from the commit operation's start, and the
+        written data ``schema`` (JSON; layout columns such as the bucket
+        partition excluded). Powers round-over-round operational auditing
+        (write amplification, commit latency) without scanning data, and
+        lets every read pass the schema instead of inferring it from
+        parquet footers (:meth:`_scan`) — Hudi keeps the writer schema in
+        its commit metadata for the same reason.
 
         ``rows`` (footer num_rows sum) is recorded for the ops that read
         it: plain-COW base commits ("upsert"/"restore" — the write-
@@ -309,16 +385,50 @@ class KeyedParquetTable:
             "bytes": total,
             "rows": rows,
             "wall_ms": int((time.monotonic() - t0) * 1000),
+            "schema": schema.json(),
         }
 
     def commit_meta(self) -> dict[int, dict]:
         """Operational metadata per retained commit: {version: {op, files,
-        bytes, wall_ms}} — all three pointer layouts record it (empty only
-        for tables written before the field existed)."""
+        bytes, rows, wall_ms, schema}} — all three pointer layouts record
+        it (empty only for tables written before the field existed;
+        ``schema`` is missing for commits written before it was added)."""
         p = self._read_pointer()
         return {
             int(v): m for v, m in ((p or {}).get("commit_meta") or {}).items()
         }
+
+    @staticmethod
+    def _recorded_schema(p: dict | None, versions) -> StructType | None:
+        """Union, in version order, of the schemas the commits ``versions``
+        recorded in ``commit_meta``. None when one of them recorded none
+        (a commit written before commits carried a schema) or two disagree
+        on a column's type — the cases footer inference must settle."""
+        meta = (p or {}).get("commit_meta") or {}
+        fields: dict[str, StructField] = {}
+        for v in sorted(set(versions)):
+            recorded = (meta.get(str(v)) or {}).get("schema")
+            if recorded is None:
+                return None
+            for f in StructType.fromJson(json.loads(recorded)).fields:
+                if fields.setdefault(f.name, f).dataType != f.dataType:
+                    return None
+        return StructType(list(fields.values()))
+
+    def _scan(
+        self, spark: SparkSession, p: dict | None, versions, paths: Sequence[str]
+    ) -> DataFrame:
+        """Parquet scan of ``paths``, all written by the commits
+        ``versions``. Every sink read goes through here: it passes the
+        union of those commits' recorded schemas, so building the
+        DataFrame runs no Spark job (Spark otherwise runs one
+        footer-inference job per ``read.parquet``). Commits without a
+        recorded schema fall back to ``mergeSchema`` inference, which
+        also covers cross-version drift."""
+        schema = self._recorded_schema(p, versions)
+        if schema is None:
+            return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return spark.read.schema(schema).parquet(*paths)
 
     def _stats_cols(self) -> list[str]:
         """Columns carried in the per-file stats index: primary keys first
@@ -515,8 +625,9 @@ class KeyedParquetTable:
             )
         paths = [self._bucket_path(hv, b) for b, hv in sorted(bmap.items())]
         # leaf-dir reads drop the hive partition column — by design, the
-        # bucket id is layout, not data; mergeSchema covers cross-version drift
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        # bucket id is layout, not data; the holders' recorded schemas
+        # union to cover cross-version drift
+        return self._scan(spark, p, bmap.values(), paths)
 
     def _stats_keep_files(self, vdir: str, stats_all: dict, col: str, overlaps):
         """Shared file-skipping core for point lookups and range slices:
@@ -563,10 +674,10 @@ class KeyedParquetTable:
                 if kept is not None:
                     names, keep = kept
                     if names and not keep:
-                        return spark.read.parquet(vdir).filter(F.lit(False))
+                        return self._scan(spark, p, [p["version"]], [vdir]).filter(F.lit(False))
                     if names and len(keep) < len(names):
-                        return spark.read.parquet(
-                            *[os.path.join(vdir, n) for n in keep]
+                        return self._scan(
+                            spark, p, [p["version"]], [os.path.join(vdir, n) for n in keep]
                         ).filter(pred)
         return self.read(spark).filter(pred)
 
@@ -581,29 +692,18 @@ class KeyedParquetTable:
 
         ``key_values``: one tuple per lookup, positionally matching
         ``self.keys``. Bucket assignment for the literals runs through the
-        SAME ``_bucket_expr`` column (a #keys-row local job — metadata-
-        bounded, never data-bounded), so Python never re-implements
-        xxhash64."""
+        SAME ``_bucket_expr`` column, so Python never re-implements
+        xxhash64; for integral and string keys the literals form an inline
+        VALUES table the planner folds the hash into, so no job runs
+        (other key types pay a #keys-row local job)."""
         rows = [tuple(kv) for kv in key_values]
         if not rows:
             raise ValueError("read_keys: no keys given")
 
         def _match(df: DataFrame) -> DataFrame:
-            # literals cast to the table's key types: an INT literal vs a
-            # BIGINT column is a struct-IN type mismatch, not a coercion
-            key_schema = df.select(*self.keys).schema
-            lits = [
-                F.struct(
-                    *[
-                        F.lit(v).cast(f.dataType).alias(f.name)
-                        for v, f in zip(r, key_schema.fields)
-                    ]
-                )
-                for r in rows
-            ]
-            return df.filter(
-                F.struct(*[F.col(k).alias(k) for k in self.keys]).isin(lits)
-            )
+            # literals typed as the table's key columns: an INT literal vs
+            # a BIGINT column is a struct-IN type mismatch, not a coercion
+            return df.filter(key_set_predicate(rows, df.select(*self.keys).schema.fields))
 
         if self.mode == MODE_COW:
             pruned = self._cow_stats_pruned(spark, rows)
@@ -619,15 +719,22 @@ class KeyedParquetTable:
         key_schema = snapshot.select(*self.keys).schema
         # typed literals through the real bucket expression (type-faithful:
         # xxhash64(int) != xxhash64(bigint))
-        probe = spark.createDataFrame(rows, key_schema)
+        tuples = _sql_tuples(rows, key_schema.fields)
+        if tuples is None:
+            probe = spark.createDataFrame(rows, key_schema)
+        else:
+            probe = spark.sql(
+                f"SELECT * FROM VALUES {tuples} AS t({_sql_columns(key_schema.fields)})"
+            )
         buckets = sorted(
-            r["b"]
-            for r in probe.select(self._bucket_expr().alias("b")).distinct().collect()
+            {r["b"] for r in probe.select(self._bucket_expr().alias("b")).collect()}
         )
-        paths = [self._bucket_path(bmap[b], b) for b in buckets if b in bmap]
-        if not paths:
+        held = [b for b in buckets if b in bmap]
+        if not held:
             return _match(snapshot.filter(F.lit(False)))
-        pruned = spark.read.option("mergeSchema", "true").parquet(*paths)
+        pruned = self._scan(
+            spark, p, [bmap[b] for b in held], [self._bucket_path(bmap[b], b) for b in held]
+        )
         return _match(pruned)
 
     def _cow_stats_pruned(self, spark: SparkSession, rows: list[tuple]) -> DataFrame | None:
@@ -661,10 +768,10 @@ class KeyedParquetTable:
         names, keep = kept
         if not keep:
             # schema-only read: no file can contain any requested key
-            return spark.read.parquet(vdir).filter(F.lit(False))
+            return self._scan(spark, p, [p["version"]], [vdir]).filter(F.lit(False))
         if len(keep) == len(names):
-            return spark.read.parquet(vdir)
-        return spark.read.parquet(*[os.path.join(vdir, n) for n in keep])
+            return self._scan(spark, p, [p["version"]], [vdir])
+        return self._scan(spark, p, [p["version"]], [os.path.join(vdir, n) for n in keep])
 
     def _merge_batch_bucketed(
         self, spark: SparkSession, batch: DataFrame, batch_id: int | None, p: dict | None
@@ -679,12 +786,13 @@ class KeyedParquetTable:
             .distinct()
             .collect()
         )
-        exist_paths = [
-            self._bucket_path(old_map[b], b) for b in touched if b in old_map
-        ]
+        held = [b for b in touched if b in old_map]
         existing = (
-            spark.read.option("mergeSchema", "true").parquet(*exist_paths)
-            if exist_paths
+            self._scan(
+                spark, p, [old_map[b] for b in held],
+                [self._bucket_path(old_map[b], b) for b in held],
+            )
+            if held
             else None
         )
         merged = merge_upsert(
@@ -725,7 +833,9 @@ class KeyedParquetTable:
             commits,
             maps,
             commit_meta={
-                str(new_version): self._commit_meta_entry(vdir, "bucketed", t0)
+                str(new_version): self._commit_meta_entry(
+                    vdir, "bucketed", t0, merged.schema
+                )
             },
         )
         self._prune_bucketed(new_version, maps)
@@ -775,7 +885,7 @@ class KeyedParquetTable:
             base, _deltas = self._resolve(p["version"], p)
             if base is None:
                 return None
-            return spark.read.parquet(self._version_dir(base))
+            return self._scan(spark, p, [base], [self._version_dir(base)])
         if self.mode == MODE_COW_BUCKETED:
             return self._read_bucketed(spark, p, v)
         if v > p["version"]:
@@ -791,13 +901,13 @@ class KeyedParquetTable:
                     f"version {v} not available (retention keeps {self.keep_versions}; "
                     f"latest is {p['version']})"
                 )
-            return spark.read.parquet(self._version_dir(base))
+            return self._scan(spark, p, [base], [self._version_dir(base)])
         if deltas[-1] != v and base != v:
             raise FileNotFoundError(
                 f"version {v} not available (retention keeps {self.keep_versions}; "
                 f"latest is {p['version']})"
             )
-        return self._fold(spark, base, deltas)
+        return self._fold(spark, p, base, deltas)
 
     def read_where_keys(self, spark: SparkSession, predicate) -> DataFrame | None:
         """Current state restricted to keys satisfying ``predicate`` — a
@@ -808,9 +918,12 @@ class KeyedParquetTable:
         surviving key's fold), so it reaches the parquet scans — row-group
         skipping instead of shuffling the full log to answer a point or
         changed-keys read. The per-batch incremental maintainers
-        (streaming/scd2.py) live on this: their read cost becomes
-        O(affected keys' rows), not O(log). COW/bucketed modes delegate to
-        ``read().filter`` (already scan-pruned by normal pushdown)."""
+        (streaming/scd2.py, streaming/bm25_ivm.py) live on this with a
+        :func:`key_set_predicate`: their read cost becomes O(affected
+        keys' rows), not O(log). Like every sink read, building the frame
+        runs no job: the scans take the schemas the commits recorded.
+        COW/bucketed modes delegate to ``read().filter`` (already
+        scan-pruned by normal pushdown)."""
         p = self._read_pointer()
         if p is None:
             return None
@@ -820,12 +933,13 @@ class KeyedParquetTable:
         if not deltas:
             if base is None:
                 return None
-            return spark.read.parquet(self._version_dir(base)).filter(predicate)
-        return self._fold(spark, base, deltas, pre_filter=predicate)
+            return self._scan(spark, p, [base], [self._version_dir(base)]).filter(predicate)
+        return self._fold(spark, p, base, deltas, pre_filter=predicate)
 
     def _fold(
         self,
         spark: SparkSession,
+        p: dict,
         base: int | None,
         deltas: list[int],
         pre_filter=None,
@@ -835,17 +949,18 @@ class KeyedParquetTable:
         key; deltas were already collapsed to ≤1 row per key at commit time,
         so the commit sequence alone breaks cross-commit ties.
 
-        ``pre_filter`` (key-column predicate, see :meth:`read_where_keys`)
-        is applied to the base and delta scans BEFORE the fold."""
-        delta_df = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[self._delta_dir(d) for d in deltas])
-        )
+        The delta scan reads with the union of the deltas' recorded
+        schemas (a column added by a later delta reads as null in the
+        earlier ones), the base scan with the base's — no inference job
+        (:meth:`_scan`). ``pre_filter`` (key-column predicate, see
+        :meth:`read_where_keys`) is applied to the base and delta scans
+        BEFORE the fold."""
+        delta_df = self._scan(spark, p, deltas, [self._delta_dir(d) for d in deltas])
         if pre_filter is not None:
             delta_df = delta_df.filter(pre_filter)
         unioned = delta_df
         if base is not None:
-            base_df = spark.read.parquet(self._version_dir(base))
+            base_df = self._scan(spark, p, [base], [self._version_dir(base)])
             if pre_filter is not None:
                 base_df = base_df.filter(pre_filter)
             base_df = base_df.withColumn(
@@ -970,21 +1085,14 @@ class KeyedParquetTable:
             raise FileNotFoundError(f"no committed version at {self.root}")
         base, deltas = self._resolve(p["version"], p)
         if deltas:
-            schema = spark.read.parquet(self._delta_dir(deltas[-1])).schema
+            schema = self._scan(spark, p, deltas[-1:], [self._delta_dir(deltas[-1])]).schema
         elif base is not None:
             # No manifested delta to sample. NEVER sample an unmanifested
             # d_* dir — it may be a torn write with an unreadable/mismatched
             # footer. The delta schema is the base schema + the tombstone
             # flag + the commit sequence (exactly what merge_batch writes).
-            from pyspark.sql.types import (
-                BooleanType,
-                LongType,
-                StructField,
-                StructType,
-            )
-
             schema = StructType(
-                spark.read.parquet(self._version_dir(base)).schema.fields
+                self._scan(spark, p, [base], [self._version_dir(base)]).schema.fields
                 + [
                     StructField(self.deleted_col, BooleanType()),
                     StructField(_SEQ_COL, LongType()),
@@ -1318,7 +1426,7 @@ class KeyedParquetTable:
             # footers (metadata-only). An empty delta is rolled back and
             # never manifested — same contract as the old pre-check,
             # without re-running the lineage for isEmpty.
-            meta = self._commit_meta_entry(ddir, "delta", t0)
+            meta = self._commit_meta_entry(ddir, "delta", t0, delta.schema)
             if meta["rows"] is None:
                 # an unreadable footer leaves emptiness unknown: never
                 # commit a delta nobody can vouch for — fail stop
@@ -1366,7 +1474,7 @@ class KeyedParquetTable:
             file_stats={str(new_version): stats} if stats else None,
             commit_meta={
                 str(new_version): self._commit_meta_entry(
-                    self._version_dir(new_version), "upsert", t0
+                    self._version_dir(new_version), "upsert", t0, merged.schema
                 )
             },
         )
@@ -1461,7 +1569,7 @@ class KeyedParquetTable:
             commits,
             maps,
             commit_meta={
-                str(new_version): self._commit_meta_entry(vdir, op, t0)
+                str(new_version): self._commit_meta_entry(vdir, op, t0, state.schema)
             },
         )
         self._prune_bucketed(new_version, maps)
@@ -1608,7 +1716,7 @@ class KeyedParquetTable:
             file_stats={str(new_version): stats} if stats else None,
             commit_meta={
                 str(new_version): self._commit_meta_entry(
-                    self._version_dir(new_version), "restore", t0
+                    self._version_dir(new_version), "restore", t0, state.schema
                 )
             },
         )
@@ -1659,7 +1767,7 @@ class KeyedParquetTable:
         if not deltas:
             return None
         t0 = time.monotonic()
-        merged = self._fold(spark, base, deltas)
+        merged = self._fold(spark, p, base, deltas)
         new_version = self._next_version(p)
         # MOR compacted bases get the same clustering as COW bases: this is
         # the write the read-optimized (_ro) path scans, so row-group
@@ -1685,7 +1793,7 @@ class KeyedParquetTable:
             file_stats={str(new_version): stats} if stats else None,
             commit_meta={
                 str(new_version): self._commit_meta_entry(
-                    self._version_dir(new_version), "compact", t0
+                    self._version_dir(new_version), "compact", t0, merged.schema
                 )
             },
         )

@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_cdc_hudi_spark.functions.textfns import tokens
-from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable
+from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable, key_set_predicate
 
 #: BM25 constants (Robertson defaults)
 K1, B = 1.2, 0.75
@@ -250,8 +250,13 @@ class Bm25IndexMaintainer:
             if not changed_rows:
                 return False
             if len(changed_rows) <= _MAX_DOC_LITERALS:
+                # one JVM call builds the IN-list (key_set_predicate)
                 existing = self.postings.read_where_keys(
-                    spark, F.col("doc_id").isin([r["doc_id"] for r in changed_rows])
+                    spark,
+                    key_set_predicate(
+                        [(r["doc_id"],) for r in changed_rows],
+                        changed.select("doc_id").schema.fields,
+                    ),
                 )
             else:
                 existing = self.postings.read(spark)
@@ -324,26 +329,19 @@ class Bm25IndexMaintainer:
                 (F.col("seq") * 2).alias("seq"),
                 F.lit(True).alias("_deleted"),
             )
-            # the two table commits are independent (own roots, own locks,
-            # own replay guards) and both read the persisted `latest`:
-            # overlap them so the doclens job back-fills executor slots
-            # the postings job's tail leaves idle (guide §2.6). Replay
-            # semantics are unchanged — each table's last_batch_id gate
-            # skips its own already-committed side independently, exactly
-            # as a crash between the two sequential commits always could.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_post = pool.submit(
-                    self.postings.merge_batch, spark, posting_delta,
-                    batch_id=batch_id,
-                )
-                f_dl = pool.submit(
-                    self.doclens.merge_batch, spark,
-                    dl_ups.unionByName(dl_dels), batch_id=batch_id,
-                )
-                committed = f_post.result()
-                f_dl.result()
+            # postings first, then doclens, in sequence: a postings commit
+            # that fails (the seq guard above, or any job error) stops the
+            # batch before doclens can advance past it — doclens never
+            # leads postings, so N/avgdl never describe a corpus the
+            # postings lack. A crash between the two commits leaves
+            # doclens one batch behind; the replay commits it (each
+            # table's last_batch_id gate skips its own committed side).
+            committed = self.postings.merge_batch(
+                spark, posting_delta, batch_id=batch_id
+            )
+            self.doclens.merge_batch(
+                spark, dl_ups.unionByName(dl_dels), batch_id=batch_id
+            )
             return committed
         finally:
             latest.unpersist()

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_cdc_hudi_spark.operators.temporal import scd2_history
-from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable
+from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable, key_set_predicate
 
 #: the CDC op's delete flag travels through the log as DATA (a tombstone
 #: EVENT is a log row, not a deletion of a log row)
@@ -58,21 +58,6 @@ _HSEQ = "__hseq"
 #: sinks/keyed_table.py:read_where_keys); larger batches fall back to the
 #: broadcast semi-join AFTER the fold
 _MAX_KEY_LITERALS = 4096
-
-
-def _key_predicate(affected_rows, keys, schema):
-    """Build ``(k1, ..) IN (literals)`` over the key columns, literals cast
-    to the batch's key dtypes (an int literal vs bigint column is a
-    struct-IN type mismatch, not a coercion)."""
-    fields = {f.name: f.dataType for f in schema.fields}
-    if len(keys) == 1:
-        k = keys[0]
-        return F.col(k).isin([r[k] for r in affected_rows])
-    lits = [
-        F.struct(*[F.lit(r[k]).cast(fields[k]).alias(k) for k in keys])
-        for r in affected_rows
-    ]
-    return F.struct(*[F.col(k).alias(k) for k in keys]).isin(lits)
 
 
 @dataclass
@@ -172,8 +157,10 @@ class Scd2HistoryMaintainer:
             # read prunes at the parquet scan and costs O(affected keys'
             # rows), not O(log); oversized batches fall back to the
             # broadcast semi-join above the fold.
+            # The IN-list is built in one JVM call for integral/string keys
+            # (key_set_predicate), literals typed as the batch's key columns.
             pred = (
-                _key_predicate(aff_rows, keys, b.select(*keys).schema)
+                key_set_predicate(aff_rows, affected.schema.fields)
                 if len(aff_rows) <= _MAX_KEY_LITERALS
                 else None
             )

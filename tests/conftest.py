@@ -17,3 +17,10 @@ def spark():
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def settled_job_ids(spark) -> set[int]:
+    """Ids of the jobs the status tracker holds, read once the listener
+    bus has delivered every pending event (the tracker lags the jobs)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))

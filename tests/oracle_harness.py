@@ -73,20 +73,22 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str, float_ulp_exact: bool = True):
-    """Returns (ok, message)."""
+    """Assert ``spark_df`` equals the oracle ``sql`` result; raises
+    ``AssertionError`` naming the first difference, else returns a summary
+    message."""
     got = _normalize(spark_df.toPandas())
     exp = _normalize(con.sql(sql).df())
     if list(got.columns) != list(exp.columns):
-        return False, f"columns differ: spark={list(got.columns)} oracle={list(exp.columns)}"
+        raise AssertionError(f"columns differ: spark={list(got.columns)} oracle={list(exp.columns)}")
     if len(got) != len(exp):
-        return False, f"row count differs: spark={len(got)} oracle={len(exp)}"
+        raise AssertionError(f"row count differs: spark={len(got)} oracle={len(exp)}")
     for c in got.columns:
         # Mirror the driver's schema check: a tz-aware oracle column vs a
         # tz-naive Spark column is a schema mismatch, not something to paper
         # over by normalizing (caught us once: DuckDB to_timestamp -> TIMESTAMPTZ).
         gt, et = got[c].dtype, exp[c].dtype
         if isinstance(gt, pd.DatetimeTZDtype) != isinstance(et, pd.DatetimeTZDtype):
-            return False, f"col {c}: tz-awareness differs: spark={gt} oracle={et}"
+            raise AssertionError(f"col {c}: tz-awareness differs: spark={gt} oracle={et}")
         # Mirror the driver's value-hash: an int column vs a float column
         # renders differently (1677 vs 1677.0) even when numerically equal.
         # Caught us once: DuckDB SUM(CASE...) -> HUGEINT -> pandas float64
@@ -94,7 +96,7 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str, float_ulp_exact:
         if pd.api.types.is_integer_dtype(gt) != pd.api.types.is_integer_dtype(et) and (
             pd.api.types.is_numeric_dtype(gt) and pd.api.types.is_numeric_dtype(et)
         ):
-            return False, f"col {c}: int-vs-float dtype mismatch: spark={gt} oracle={et}"
+            raise AssertionError(f"col {c}: int-vs-float dtype mismatch: spark={gt} oracle={et}")
     for c in got.columns:
         a, b = got[c], exp[c]
         for i, (x, y) in enumerate(zip(a, b)):
@@ -104,9 +106,9 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str, float_ulp_exact:
                 if math.isnan(x) and math.isnan(y):
                     continue
                 if x != y:
-                    return False, f"col {c} row {i}: {x!r} != {y!r} (float)"
+                    raise AssertionError(f"col {c} row {i}: {x!r} != {y!r} (float)")
             elif pd.isna(x) and pd.isna(y):
                 continue
             elif x != y:
-                return False, f"col {c} row {i}: {x!r} != {y!r}"
-    return True, f"ok ({len(got)} rows, {len(got.columns)} cols)"
+                raise AssertionError(f"col {c} row {i}: {x!r} != {y!r}")
+    return f"ok ({len(got)} rows, {len(got.columns)} cols)"

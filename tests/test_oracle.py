@@ -35,8 +35,34 @@ ORACLE_CASES = [
 
 @pytest.mark.parametrize("name,fn,sql", ORACLE_CASES, ids=[c[0] for c in ORACLE_CASES])
 def test_query_matches_oracle(spark, con, name, fn, sql):
-    ok, msg = compare(fn(spark, SF_DIR), con, sql)
-    assert ok, f"{name}: {msg}"
+    compare(fn(spark, SF_DIR), con, sql)
+
+
+class _Frame:
+    """A collected result standing in for a Spark DataFrame."""
+
+    def __init__(self, pdf):
+        self.pdf = pdf
+
+    def toPandas(self):
+        return self.pdf
+
+
+def test_compare_raises_on_mismatch(con):
+    """compare() asserts by itself: a caller that ignores its return value
+    still fails on a wrong result."""
+    import pandas as pd
+
+    sql = "SELECT * FROM (VALUES (1, 'a'), (2, 'b')) t(id, s)"
+    assert compare(_Frame(pd.DataFrame({"id": [2, 1], "s": ["b", "a"]})), con, sql).startswith("ok")
+    for bad, why in (
+        (pd.DataFrame({"id": [1, 2], "s": ["a", "c"]}), "row 1"),
+        (pd.DataFrame({"id": [1], "s": ["a"]}), "row count"),
+        (pd.DataFrame({"id": [1, 2]}), "columns differ"),
+        (pd.DataFrame({"id": [1.0, 2.0], "s": ["a", "b"]}), "int-vs-float"),
+    ):
+        with pytest.raises(AssertionError, match=why):
+            compare(_Frame(bad), con, sql)
 
 
 @pytest.fixture(scope="module")

@@ -333,3 +333,19 @@ def test_crash_between_postings_and_doclens_commits(spark, tmp_path, queries):
     assert _topk_set(m2.topk(spark, queries, k=5)) == _topk_set(
         _rebuild_topk(spark, live, queries, k=5)
     )
+
+
+def test_postings_failure_mid_batch_leaves_doclens_behind(spark, tmp_path):
+    """process() commits postings, then doclens, in sequence: when the
+    postings merge job raises mid-batch (here the non-monotonic seq guard),
+    doclens must not advance past it — a doclens table ahead of postings
+    would count the failed batch's docs in N and avgdl."""
+    m = Bm25IndexMaintainer(root=str(tmp_path / "fs"))
+    b0 = spark.createDataFrame([("i", 1, DOCS[1], 5), ("i", 3, DOCS[3], 6)], SCHEMA)
+    assert m.process(spark, b0, batch_id=0)
+    bad = spark.createDataFrame([("u", 1, DOCS[4], 5), ("i", 6, DOCS[6], 9)], SCHEMA)
+    with pytest.raises(Exception, match="non-monotonic seq"):
+        m.process(spark, bad, batch_id=1)
+    assert m.postings.last_batch_id() == 0
+    assert m.doclens.last_batch_id() == 0
+    assert {r["doc_id"] for r in m.live_doclens(spark).collect()} == {1, 3}

@@ -29,7 +29,7 @@ from kafka_cdc_hudi_spark.operators.temporal import scd2_history
 from kafka_cdc_hudi_spark.sources.kafka import json_file_value_stream
 from kafka_cdc_hudi_spark.streaming.driver import CdcStreamDriver
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, settled_job_ids
 
 KV_PAYLOAD = StructType(
     [StructField("id", LongType(), True), StructField("val", StringType(), True)]
@@ -703,3 +703,19 @@ def test_no_probe_for_declared_schemas_without_quarantine(spark, tmp_path, monke
         driver.process_batch(_dms_batch(spark, bid, tables, n_keys=5), bid)
     assert spy.runs == []
     assert driver.sink_for(driver.config.tables[0]).read(spark).count() == 8
+
+
+def test_warm_fanout_batch_job_count(spark, tmp_path):
+    """A warm 3-table fan-out batch with SCD2 on one table runs no
+    schema-inference job for any sink read: the main tables' COW reads and
+    the SCD2 log/history folds take their schema from the commits that
+    wrote the files. Inferring it from parquet footers cost 5 of the 30
+    jobs this batch ran before."""
+    tables = ("t0", "t1", "t2")
+    driver = CdcStreamDriver(spark, _dms_fanout_cfg(tmp_path, tables))
+    per_batch = []
+    for bid in range(4):
+        before = settled_job_ids(spark)
+        driver.process_batch(_dms_batch(spark, bid, tables), bid)
+        per_batch.append(len(settled_job_ids(spark) - before))
+    assert per_batch[-1] <= 30 - 5, per_batch

@@ -41,6 +41,14 @@ def latest_per_key(
     )
 
 
+def struct_sql(cols: Sequence[str]) -> str:
+    """SQL text of ``struct(<cols>)`` over top-level column names. Parsed
+    by one ``F.expr`` it costs one JVM call; ``F.struct(*map(F.col, cols))``
+    costs one per column, and on a micro-batch's small data those calls
+    are a large share of the merge's driver time."""
+    return "struct(" + ", ".join("`" + c.replace("`", "``") + "`" for c in cols) + ")"
+
+
 def latest_per_key_agg(
     df: DataFrame,
     keys: Sequence[str],
@@ -51,9 +59,10 @@ def latest_per_key_agg(
     combine; preferred at scale for high-duplication streams). Skew-immune
     for top-1: the partial aggregate collapses every hot key to one row per
     input partition before the shuffle."""
-    ord_struct = F.struct(F.col(order_col), *[F.col(t) for t in tiebreakers])
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    agg = df.groupBy(*[F.col(k) for k in keys]).agg(F.max_by(payload, ord_struct).alias("__row"))
+    latest = F.expr(
+        f"max_by({struct_sql(df.columns)}, {struct_sql([order_col, *tiebreakers])})"
+    )
+    agg = df.groupBy(*[F.col(k) for k in keys]).agg(latest.alias("__row"))
     return agg.select("__row.*")
 
 

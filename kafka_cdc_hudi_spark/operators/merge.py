@@ -33,7 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_cdc_hudi_spark.operators.dedup import latest_per_key_agg
+from kafka_cdc_hudi_spark.operators.dedup import latest_per_key_agg, struct_sql
 
 _SRC_COL = "__src_priority"
 
@@ -59,16 +59,11 @@ def _with_det_tiebreak(df: DataFrame, exclude: Sequence[str]) -> tuple[DataFrame
     canonical JSON serialization (NOT ``xxhash64(*cols)``, which skips
     null children and would conflate column-swapped rows)."""
     det_col = "__det_tb"
-    payload_cols = [c for c in df.columns if c not in exclude]
+    payload = struct_sql([c for c in df.columns if c not in exclude])
     return (
         df.withColumn(
             det_col,
-            F.xxhash64(
-                F.to_json(
-                    F.struct(*[F.col(c) for c in payload_cols]),
-                    {"ignoreNullFields": "false"},
-                )
-            ),
+            F.expr(f"xxhash64(to_json({payload}, map('ignoreNullFields', 'false')))"),
         ),
         det_col,
     )

@@ -136,7 +136,7 @@ def scd2_history(
     keys: Sequence[str],
     ts_col: str,
     tiebreakers: Sequence[str] = (),
-    deleted_col: str = "_deleted",
+    deleted_col: str | None = "_deleted",
 ) -> DataFrame:
     """Slowly-changing-dimension TYPE-2 reconstruction from a CDC change
     log — the canonical warehouse read of a Debezium/DMS stream the
@@ -149,7 +149,9 @@ def scd2_history(
     Delete rows close the prior interval but emit no row themselves, so a
     deleted key has no current version and a re-insert afterwards opens a
     fresh one — all falling out of one ``lead()`` over (key, time) BEFORE
-    the tombstone filter.
+    the tombstone filter. ``deleted_col=None`` skips that filter: delete
+    rows are kept with their own interval (the stored form of the
+    incremental history, streaming/scd2.py).
 
     Scale shape: ONE shuffle on the key + one sort — identical cost to the
     latest-per-key dedup the merge sink already pays; no self-join, no

@@ -12,6 +12,7 @@ end, plus fail-stop when one table's task raises.
 """
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -707,10 +708,11 @@ def test_no_probe_for_declared_schemas_without_quarantine(spark, tmp_path, monke
 
 def test_warm_fanout_batch_job_count(spark, tmp_path):
     """A warm 3-table fan-out batch with SCD2 on one table runs no
-    schema-inference job for any sink read: the main tables' COW reads and
-    the SCD2 log/history folds take their schema from the commits that
-    wrote the files. Inferring it from parquet footers cost 5 of the 30
-    jobs this batch ran before."""
+    schema-inference job for any sink read (the main tables' COW reads and
+    the SCD2 history fold take their schema from the commits that wrote
+    the files), and the SCD2 history commits one table, not an event log
+    plus a history. Inference cost 5 of the 30 jobs this batch ran, the
+    log another 5 of the 25 left."""
     tables = ("t0", "t1", "t2")
     driver = CdcStreamDriver(spark, _dms_fanout_cfg(tmp_path, tables))
     per_batch = []
@@ -718,4 +720,7 @@ def test_warm_fanout_batch_job_count(spark, tmp_path):
         before = settled_job_ids(spark)
         driver.process_batch(_dms_batch(spark, bid, tables), bid)
         per_batch.append(len(settled_job_ids(spark) - before))
-    assert per_batch[-1] <= 30 - 5, per_batch
+    assert per_batch[-1] <= 21, per_batch
+    scd2_root = driver.scd2_for(driver.config.tables[0]).root
+    assert os.path.isdir(os.path.join(scd2_root, "history"))
+    assert not os.path.exists(os.path.join(scd2_root, "log"))

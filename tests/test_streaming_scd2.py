@@ -106,6 +106,110 @@ class TestMaintainerEquivalence:
         assert seq[(2, 10)] == 1 and seq[(2, 20)] == 1  # affected key rebuilt
 
 
+MODES = ["cow", "cow-bucketed", "mor"]
+
+
+def _fed_oracle(spark, batches):
+    """scd2_history over every event fed so far; an event replaces an
+    earlier-fed one with the same event key (id, mtime, val), the rule
+    the maintainer applies across batches."""
+    latest = {}
+    for rows in batches:
+        for r in rows:
+            latest[r[:3]] = r
+    return _hist_set(_batch_oracle(spark, list(latest.values())))
+
+
+class TestStoredTombstones:
+    """Hard cases of the one-table history: delete events are stored rows,
+    so a later batch's late event still sees every earlier delete."""
+
+    def _run(self, spark, tmp_path, mode, batches):
+        m = Scd2HistoryMaintainer(
+            root=str(tmp_path / "st"), keys=["id"], ts_col="mtime",
+            tiebreakers=["val"], history_mode=mode, n_buckets=4,
+            history_compact_every=2,
+        )
+        for i, rows in enumerate(batches):
+            assert m.apply_batch(spark, spark.createDataFrame(rows, SCHEMA), batch_id=i)
+            got = _hist_set(m.read(spark))
+            assert got == _fed_oracle(spark, batches[: i + 1]), f"divergence after batch {i}"
+        return {(r[0], r[3]): r for r in got}
+
+    @pytest.mark.parametrize("history_mode", MODES)
+    def test_late_insert_between_two_stored_deletes(self, spark, tmp_path, history_mode):
+        # without the delete@7 row stored, the late insert@6 would stay open
+        final = self._run(spark, tmp_path, history_mode, [
+            [(1, 1, "a", False)],
+            [(1, 5, None, True)],
+            [(1, 7, None, True)],
+            [(1, 6, "b", False)],
+        ])
+        assert {(k[1], r[4]) for k, r in final.items()} == {(1, 5), (6, 7)}
+
+    @pytest.mark.parametrize("history_mode", MODES)
+    def test_delete_of_unknown_key_then_earlier_late_insert(self, spark, tmp_path, history_mode):
+        final = self._run(spark, tmp_path, history_mode, [
+            [(2, 10, None, True), (3, 10, "k", False)],
+            [(2, 5, "x", False)],
+        ])
+        assert final[(2, 5)][4] == 10 and not final[(2, 5)][5]
+
+    @pytest.mark.parametrize("history_mode", MODES)
+    def test_same_event_key_in_later_batch_replaces_stored(self, spark, tmp_path, history_mode):
+        # the event (3, 10, "a") turns into a delete and back into an insert
+        final = self._run(spark, tmp_path, history_mode, [
+            [(3, 10, "a", False), (3, 20, "b", False)],
+            [(3, 10, "a", True)],
+            [(3, 10, "a", False)],
+        ])
+        assert final[(3, 10)][4] == 20 and final[(3, 20)][5]
+
+    @pytest.mark.parametrize("history_mode", MODES)
+    def test_over_cap_batch_touches_stored_keys(self, spark, tmp_path, history_mode):
+        """A second batch past the key-literal cap reads the stored rows
+        through the broadcast semi-join, over keys that already have
+        history: updates, deletes and late events on every stored key."""
+        from kafka_cdc_hudi_spark.streaming.scd2 import _MAX_KEY_LITERALS
+
+        n = _MAX_KEY_LITERALS + 50
+        m = Scd2HistoryMaintainer(
+            root=str(tmp_path / "oc"), keys=["id"], ts_col="mtime",
+            tiebreakers=["val"], history_mode=history_mode, n_buckets=4,
+        )
+        b0 = spark.range(n).selectExpr("id", "10L AS mtime", "'a' AS val", "false AS _deleted")
+        b1 = spark.range(n).selectExpr(
+            "id",
+            "CASE WHEN id % 3 = 0 THEN 5L WHEN id % 3 = 1 THEN 20L ELSE 15L END AS mtime",
+            "CASE WHEN id % 3 = 2 THEN NULL ELSE 'b' END AS val",
+            "id % 3 = 2 AS _deleted",
+        )
+        fed = None
+        for i, b in enumerate([b0, b1]):
+            assert m.apply_batch(spark, b, batch_id=i)
+            fed = b if fed is None else fed.unionByName(b)
+            want = _hist_set(
+                scd2_history(fed, ["id"], "mtime", tiebreakers=["val"]).drop("_deleted")
+            )
+            assert _hist_set(m.read(spark)) == want, f"divergence after batch {i}"
+        cur = m.read(spark).filter("is_current").count()
+        assert cur == n - len(range(2, n, 3))
+
+    @pytest.mark.parametrize("history_mode", MODES)
+    def test_two_table_root_fails_stop(self, spark, tmp_path, history_mode):
+        root = tmp_path / "legacy"
+        (root / "log").mkdir(parents=True)
+        m = Scd2HistoryMaintainer(
+            root=str(root), keys=["id"], ts_col="mtime", history_mode=history_mode
+        )
+        batch = spark.createDataFrame([(1, 10, "a", False)], SCHEMA)
+        with pytest.raises(ValueError, match="two-table SCD2 layout"):
+            m.apply_batch(spark, batch, batch_id=0)
+        with pytest.raises(ValueError, match="two-table SCD2 layout"):
+            m.read(spark)
+        assert not (root / "history").exists()
+
+
 def _dbz(op, after=None, before=None, ts_ms=0, db="d1", table="t1"):
     return json.dumps(
         {"before": before, "after": after, "op": op, "ts_ms": ts_ms, "db": db, "table": table}
@@ -227,7 +331,7 @@ class TestAdviceR9:
     tiebreakers, config validation, routed persist)."""
 
     def test_null_key_rows_rejected(self, spark, tmp_path):
-        """A NULL primary-key row would be logged but never selected by the
+        """A NULL primary-key row would be stored but never selected by the
         affected-key predicate (NULL IN (...) is NULL) — the chain would
         silently never materialize. apply_batch must fail fast instead."""
         m = Scd2HistoryMaintainer(
@@ -238,13 +342,13 @@ class TestAdviceR9:
         )
         with pytest.raises(ValueError, match="NULL primary-key"):
             m.apply_batch(spark, bad, batch_id=0)
-        # nothing committed: neither the log nor the history advanced
+        # nothing committed: the history did not advance
         assert m.read(spark) is None
 
     def test_null_key_rejected_past_key_literal_cap(self, spark, tmp_path):
         """Past the key-literal cap the affected-key collect sees only a
         prefix of the keys, so a NULL key beyond it must still be caught
-        (by the separate NULL-key job) before the log append; the same
+        (by the separate NULL-key job) before the history commit; the same
         batch without the NULL commits through the semi-join path."""
         from kafka_cdc_hudi_spark.streaming.scd2 import _MAX_KEY_LITERALS
 
@@ -258,7 +362,7 @@ class TestAdviceR9:
         )
         with pytest.raises(ValueError, match="NULL primary-key"):
             m.apply_batch(spark, with_null, batch_id=0)
-        assert m.read(spark) is None and m.log.last_batch_id() is None
+        assert m.read(spark) is None and m.history.last_batch_id() is None
         assert m.apply_batch(spark, rows, batch_id=0)
         assert m.read(spark).filter("is_current").count() == n
 
@@ -335,20 +439,20 @@ class TestAdviceR9:
 
 
 class TestCrashConsistency:
-    def test_crash_between_log_and_history_commits(self, spark, tmp_path):
-        """apply_batch commits TWO tables in sequence (log, then history).
-        Kill the writer after the log committed batch 1 but before the
-        history did: a fresh maintainer must read the batch-0 history, and
-        replaying batch 1 must converge — the log skips via replay
-        protection while the history recomputes the affected chains from
-        the (already-landed) log rows. Final history == batch oracle."""
+    @pytest.mark.parametrize("history_mode", ["cow", "cow-bucketed", "mor"])
+    def test_crash_inside_history_commit(self, spark, tmp_path, history_mode):
+        """apply_batch commits ONE table. Kill the writer inside the
+        history's merge_batch for batch 1, after its data files are written
+        and before the pointer swap: a fresh maintainer must read the
+        batch-0 history, and replaying batch 1 must converge to the batch
+        oracle over both batches."""
 
         class InjectedCrash(RuntimeError):
             pass
 
         mk = lambda: Scd2HistoryMaintainer(  # noqa: E731
             root=str(tmp_path / "scd2"), keys=["id"], ts_col="mtime",
-            tiebreakers=["val"],
+            tiebreakers=["val"], history_mode=history_mode, n_buckets=4,
         )
         m = mk()
         b0 = [(1, 10, "a", False), (2, 10, "x", False)]
@@ -356,25 +460,23 @@ class TestCrashConsistency:
         m.apply_batch(spark, spark.createDataFrame(b0, SCHEMA), batch_id=0)
         h0 = _hist_set(m.read(spark))
 
-        real = m.history.merge_batch
+        name = "_write_bucketed_pointer" if history_mode == "cow-bucketed" else "_write_pointer"
+        real = getattr(m.history, name)
 
-        def dying(spark_, delta, batch_id=None):
+        def dying(version, batch_id, *a, **kw):
             if batch_id == 1:
-                raise InjectedCrash("history commit dies")
-            return real(spark_, delta, batch_id=batch_id)
+                raise InjectedCrash("history pointer swap dies")
+            return real(version, batch_id, *a, **kw)
 
-        m.history.merge_batch = dying
+        setattr(m.history, name, dying)
         with pytest.raises(InjectedCrash):
             m.apply_batch(spark, spark.createDataFrame(b1, SCHEMA), batch_id=1)
-        # the log committed batch 1; the history did not
-        assert m.log.last_batch_id() == 1
         assert m.history.last_batch_id() == 0
 
         # fresh maintainer: history still reads as the pre-crash state
         m2 = mk()
         assert _hist_set(m2.read(spark)) == h0
-        # replay batch 1: log no-ops, history applies from the landed log
-        m2.apply_batch(spark, spark.createDataFrame(b1, SCHEMA), batch_id=1)
-        assert m2.log.last_batch_id() == 1
+        # replay batch 1: recomputed from the batch-0 rows and committed
+        assert m2.apply_batch(spark, spark.createDataFrame(b1, SCHEMA), batch_id=1)
         assert m2.history.last_batch_id() == 1
         assert _hist_set(m2.read(spark)) == _hist_set(_batch_oracle(spark, b0 + b1))

@@ -36,17 +36,23 @@ Layout::
       d_00000002/ ...   immutable parquet delta commits (MOR appends)
       _VERSION          text file: latest committed version + batch id
 
-Commit protocol: write the new snapshot/delta directory fully, then
-atomically rewrite the ``_VERSION`` pointer (rename). The pointer carries a
-manifest of committed versions (``commits: {version: "base"|"delta"}``) —
-readers resolve ONLY manifested directories, so a crashed write leaves an
-orphan directory that is never read and is swept at the next prune — a
+Commit protocol (every layout, every commit kind: :meth:`_commit`): write
+the new snapshot/delta directory fully; decide retention — keep the newest
+``keep_versions`` snapshot versions (bases or bucketed versions) plus
+savepoints (reference cleaner retained=2..4 commits,
+/root/reference/glue/cdc_hudi.py:198-200), a delta retiring with the base
+it applies to and compaction folding its deltas away; then atomically
+rewrite the ``_VERSION`` pointer ONCE (rename); then sweep every
+directory at or below the new version that the pointer no longer
+references. The pointer carries a manifest of committed versions
+(``commits: {version: "base"|"delta"|"bucketed"}``) — readers resolve ONLY
+manifested directories, so a crashed write leaves an orphan directory that
+is never read and is swept by the next commit (deltas included), and a
+crash inside the sweep leaves only directories no pointer names — a
 miniature of Hudi's timeline/commit files. New versions are allocated past
 ``max(committed version, any directory on disk)`` so an orphan base from a
 crashed compaction can never collide with (and shadow) the next delta
-commit. Old versions are pruned keeping ``keep_versions`` bases (reference
-cleaner retained=2..4 commits, /root/reference/glue/cdc_hudi.py:198-200);
-deltas are pruned at compaction.
+commit.
 
 Read-time fold (MOR): base ∪ deltas → latest-per-key by
 ``(order_col, commit_seq)`` → drop tombstones. Precombine semantics match
@@ -309,21 +315,25 @@ class KeyedParquetTable:
         savepoints: dict[str, int] | None = None,
         file_stats: dict[str, dict] | None = None,
         commit_meta: dict[str, dict] | None = None,
+        bucket_maps: dict[int, dict[int, int]] | None = None,
     ) -> None:
+        """The one writer of ``_VERSION`` (atomic rename). Savepoints and
+        bucket maps carry over from the current pointer when not given.
+        The column-stats index and the per-commit metadata keep prior
+        versions' entries, fold in the new commit's, and are trimmed to the
+        versions still holding data (manifested commits and bucket
+        holders), so retention cleans them too. A key missing from an
+        older pointer reads as empty."""
         prev = self._read_pointer()
-        if savepoints is None:  # preserve existing savepoints on every commit
+        if savepoints is None:
             savepoints = self._savepoints(prev)
-        # column-stats index + per-commit operational metadata: preserve
-        # prior versions' entries, fold in the new commit's, and trim to
-        # versions still in the commit map so retention pruning cleans
-        # both maps too
-        live = {str(v) for v in commits}
-        stats = dict((prev or {}).get("file_stats") or {})
-        stats.update(file_stats or {})
-        stats = {v: s for v, s in stats.items() if v in live}
-        meta = dict((prev or {}).get("commit_meta") or {})
-        meta.update(commit_meta or {})
-        meta = {v: m for v, m in meta.items() if v in live}
+        if bucket_maps is None:
+            bucket_maps = self._bucket_maps(prev)
+        live = {str(v) for v in commits} | {
+            str(hv) for m in bucket_maps.values() for hv in m.values()
+        }
+        stats = {**((prev or {}).get("file_stats") or {}), **(file_stats or {})}
+        meta = {**((prev or {}).get("commit_meta") or {}), **(commit_meta or {})}
         self._assert_lock_owned("pointer write")
         self._assert_version_monotonic(version, "pointer write", prev)
         tmp = self._pointer_path + ".tmp"
@@ -334,12 +344,120 @@ class KeyedParquetTable:
                     "last_batch_id": batch_id,
                     "savepoints": savepoints,
                     "commits": {str(v): k for v, k in sorted(commits.items())},
-                    "file_stats": stats,
-                    "commit_meta": meta,
+                    "bucket_maps": {
+                        str(v): {str(b): hv for b, hv in sorted(m.items())}
+                        for v, m in sorted(bucket_maps.items())
+                    },
+                    "file_stats": {v: s for v, s in stats.items() if v in live},
+                    "commit_meta": {v: m for v, m in meta.items() if v in live},
                 },
                 f,
             )
         os.replace(tmp, self._pointer_path)  # atomic on POSIX
+
+    def _commit(
+        self, p: dict | None, version: int, batch_id: int | None, kind: str, meta: dict,
+        file_stats: dict[str, dict] | None = None, bucket_map: dict[int, int] | None = None,
+        folded: Sequence[int] = (),
+    ) -> int:
+        """Publish ``version`` (its directory already written) on top of
+        the pointer ``p`` — every commit of every layout ends here:
+
+        1. manifest ``version`` as ``kind`` (with its ``bucket_map`` on the
+           bucketed layout) and drop the ``folded`` deltas;
+        2. retention: keep the newest ``keep_versions`` snapshot versions
+           (bases or bucketed versions) plus savepoints; a delta retires
+           with the base it applies to;
+        3. swap the pointer once (:meth:`_write_pointer`);
+        4. :meth:`_sweep` what the new pointer no longer references.
+
+        A crash before step 3 leaves the previous pointer whole and the new
+        directory an unread orphan; a crash inside step 4 leaves only
+        unreferenced directories, which the next commit sweeps."""
+        commits = self._commits_map(p)
+        for d in folded:
+            commits.pop(d, None)
+        commits[version] = kind
+        maps = self._bucket_maps(p)
+        if bucket_map is not None:
+            maps[version] = bucket_map
+        snaps = sorted(v for v, k in commits.items() if k != "delta")
+        keep = set(snaps[-self.keep_versions :]) | set(self._savepoints(p).values())
+        for v in sorted(commits):
+            snap = v if commits[v] != "delta" else max((s for s in snaps if s < v), default=None)
+            if snap is not None and snap not in keep:
+                del commits[v]
+                maps.pop(v, None)
+        self._write_pointer(
+            version, batch_id, commits, commit_meta={str(version): meta}, bucket_maps=maps,
+            file_stats={str(version): file_stats} if file_stats else None,
+        )
+        self._sweep(version, commits, maps)
+        return version
+
+    def _sweep(
+        self, version: int, commits: dict[int, str], maps: dict[int, dict[int, int]]
+    ) -> None:
+        """Delete every ``v_``/``d_`` directory at or below ``version`` that
+        the pointer just written does not reference: retired snapshots,
+        folded deltas, and orphans of crashed or rolled-back writes. Safe
+        against in-flight writers: a live write is allocated above the
+        committed pointer (:meth:`_next_version`)."""
+        snaps = {v for v, k in commits.items() if k != "delta"}
+        snaps |= {hv for m in maps.values() for hv in m.values()}
+        bases, deltas = self._commit_dirs()
+        for v in bases:
+            if v <= version and v not in snaps:
+                shutil.rmtree(self._version_dir(v), ignore_errors=True)
+        for v in deltas:
+            if v <= version and commits.get(v) != "delta":
+                shutil.rmtree(self._delta_dir(v), ignore_errors=True)
+
+    def _commit_base(
+        self, p: dict | None, version: int, batch_id: int | None, op: str,
+        state: DataFrame, t0: float, folded: Sequence[int] = (),
+    ) -> int:
+        """Write ``state`` as the plain-layout base snapshot ``version``
+        (clustered per the table's options), harvest its footer stats and
+        commit it: COW upserts, MOR compactions (which fold the deltas
+        ``folded``) and restores."""
+        vdir = self._version_dir(version)
+        self._write_parquet(self._cluster_sort(state, bucketed=False), vdir)
+        stats = self._collect_file_stats(vdir)
+        meta = self._commit_meta_entry(vdir, op, t0, state.schema)
+        return self._commit(p, version, batch_id, "base", meta, file_stats=stats, folded=folded)
+
+    def _commit_buckets(
+        self, p: dict | None, version: int, batch_id: int | None, op: str,
+        state: DataFrame, t0: float, touched: Sequence[int] | None = None,
+    ) -> int:
+        """Write ``state`` into key buckets under ``version`` and commit the
+        new bucket map. ``touched`` lists the buckets a merge rewrote: the
+        others keep their holders from the current map, and a touched
+        bucket left without rows drops out of it. ``None`` writes every
+        bucket — a complete snapshot whose map names ``version`` alone, so
+        older directories become prunable (compaction, restore)."""
+        vdir = self._version_dir(version)
+        out = state.withColumn(_BUCKET_COL, self._bucket_expr()).repartition(
+            self.n_buckets if touched is None else max(1, len(touched)), F.col(_BUCKET_COL)
+        )
+        self._write_parquet(self._cluster_sort(out), vdir, partition_by=_BUCKET_COL)
+        present = {
+            int(n.split("=", 1)[1])
+            for n in os.listdir(vdir)
+            if n.startswith(f"{_BUCKET_COL}=")
+        }
+        if touched is None:
+            bmap = dict.fromkeys(present, version)
+        else:
+            bmap = dict(self._bucket_maps(p).get(p["version"], {}) if p is not None else {})
+            for b in touched:
+                if b in present:
+                    bmap[b] = version
+                else:
+                    bmap.pop(b, None)  # bucket fully deleted by this batch
+        meta = self._commit_meta_entry(vdir, op, t0, state.schema)
+        return self._commit(p, version, batch_id, "bucketed", meta, bucket_map=bmap)
 
     def _commit_meta_entry(
         self, path: str, op: str, t0: float, schema: StructType
@@ -519,8 +637,11 @@ class KeyedParquetTable:
         """Committed {version: "base"|"delta"} from the pointer manifest.
         Pre-manifest tables (pointer without ``commits``) fall back to the
         disk listing — the legacy behavior, adopted into the manifest on the
-        next commit."""
-        if p is not None and "commits" in p:
+        next commit. No pointer means nothing is committed: directories on
+        disk are then orphans of a crashed first commit."""
+        if p is None:
+            return {}
+        if "commits" in p:
             return {int(v): k for v, k in p["commits"].items()}
         bases, deltas = self._commit_dirs()
         return {**{b: "base" for b in bases}, **{d: "delta" for d in deltas}}
@@ -569,47 +690,6 @@ class KeyedParquetTable:
 
     def _bucket_path(self, holder: int, bucket: int) -> str:
         return os.path.join(self._version_dir(holder), f"{_BUCKET_COL}={bucket}")
-
-    def _write_bucketed_pointer(
-        self,
-        version: int,
-        batch_id: int | None,
-        commits: dict[int, str],
-        maps: dict[int, dict[int, int]],
-        savepoints: dict[str, int] | None = None,
-        commit_meta: dict[str, dict] | None = None,
-    ) -> None:
-        prev = self._read_pointer()
-        if savepoints is None:  # preserve existing savepoints on every commit
-            savepoints = self._savepoints(prev)
-        # per-commit operational metadata (write-amplification auditing
-        # parity with the COW/MOR pointer): preserve prior entries, fold in
-        # the new commit's, trim to versions still holding data
-        live = {str(v) for v in commits} | {
-            str(hv) for m in maps.values() for hv in m.values()
-        }
-        meta = dict((prev or {}).get("commit_meta") or {})
-        meta.update(commit_meta or {})
-        meta = {v: m for v, m in meta.items() if v in live}
-        self._assert_lock_owned("bucketed pointer write")
-        self._assert_version_monotonic(version, "bucketed pointer write", prev)
-        tmp = self._pointer_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "savepoints": savepoints,
-                    "commits": {str(v): k for v, k in sorted(commits.items())},
-                    "bucket_maps": {
-                        str(v): {str(b): hv for b, hv in sorted(m.items())}
-                        for v, m in sorted(maps.items())
-                    },
-                    "commit_meta": meta,
-                },
-                f,
-            )
-        os.replace(tmp, self._pointer_path)
 
     def _read_bucketed(self, spark: SparkSession, p: dict, version: int) -> DataFrame:
         maps = self._bucket_maps(p)
@@ -777,9 +857,7 @@ class KeyedParquetTable:
         self, spark: SparkSession, batch: DataFrame, batch_id: int | None, p: dict | None
     ) -> bool:
         t0 = time.monotonic()
-        new_version = self._next_version(p)
-        maps = self._bucket_maps(p)
-        old_map = maps.get(p["version"], {}) if p is not None else {}
+        old_map = self._bucket_maps(p).get(p["version"], {}) if p is not None else {}
         touched = sorted(
             r[_BUCKET_COL]
             for r in batch.select(self._bucket_expr().alias(_BUCKET_COL))
@@ -803,54 +881,10 @@ class KeyedParquetTable:
             deleted_col=self.deleted_col,
             tiebreakers=self.tiebreakers,
         )
-        vdir = self._version_dir(new_version)
-        out = merged.withColumn(_BUCKET_COL, self._bucket_expr()).repartition(
-            max(1, len(touched)), F.col(_BUCKET_COL)
+        self._commit_buckets(
+            p, self._next_version(p), batch_id, "bucketed", merged, t0, touched=touched
         )
-        out = self._cluster_sort(out)
-        self._write_parquet(out, vdir, partition_by=_BUCKET_COL)
-        present = {
-            int(n.split("=", 1)[1])
-            for n in os.listdir(vdir)
-            if n.startswith(f"{_BUCKET_COL}=")
-        }
-        new_map = dict(old_map)
-        for b in touched:
-            if b in present:
-                new_map[b] = new_version
-            else:
-                new_map.pop(b, None)  # bucket fully deleted by this batch
-        maps[new_version] = new_map
-        protected = set(self._savepoints(p).values()) & set(maps)
-        retained = sorted(set(sorted(maps)[-self.keep_versions :]) | protected)
-        maps = {v: maps[v] for v in retained}
-        commits = self._commits_map(p)
-        commits[new_version] = "bucketed"
-        commits = {v: k for v, k in commits.items() if v in maps or k != "bucketed"}
-        self._write_bucketed_pointer(
-            new_version,
-            batch_id,
-            commits,
-            maps,
-            commit_meta={
-                str(new_version): self._commit_meta_entry(
-                    vdir, "bucketed", t0, merged.schema
-                )
-            },
-        )
-        self._prune_bucketed(new_version, maps)
         return True
-
-    def _prune_bucketed(self, current: int, maps: dict[int, dict[int, int]]) -> None:
-        """Drop version dirs no retained bucket map references. Safe against
-        in-flight writers for the same reason as ``_prune``: live writes
-        allocate above the committed pointer, and only dirs at-or-below it
-        are swept."""
-        referenced = {hv for m in maps.values() for hv in m.values()} | set(maps)
-        disk_bases, _ = self._commit_dirs()
-        for v in disk_bases:
-            if v <= current and v not in referenced:
-                shutil.rmtree(self._version_dir(v), ignore_errors=True)
 
     # -- public API ---------------------------------------------------------
     def exists(self) -> bool:
@@ -981,8 +1015,6 @@ class KeyedParquetTable:
         merge-on-read mode, delta commits — any of them time-travel-readable;
         in bucketed mode, the versions with a retained bucket map)."""
         p = self._read_pointer()
-        if self.mode == MODE_COW_BUCKETED:
-            return sorted(self._bucket_maps(p))
         latest = p["version"] if p else 0
         return sorted(v for v in self._commits_map(p) if v <= latest)
 
@@ -1069,9 +1101,11 @@ class KeyedParquetTable:
         once; consumers needing exactly-once should gate on the pointer
         manifest via ``versions()``.
 
-        Retention interaction: ``compact()``/``_prune`` DELETE folded and
-        unmanifested ``d_*`` directories. A tail that discovered such a
-        file but has not processed it yet fails its next micro-batch
+        Retention interaction: ``compact()`` DELETES the deltas it folds,
+        and every commit's sweep (:meth:`_sweep`) deletes unmanifested
+        ``d_*`` directories — an orphan batch is gone at the next commit.
+        A tail that discovered such a file but has not processed it yet
+        fails its next micro-batch
         (FileNotFoundException) — same contract as tailing any file source
         with a retention sweeper. Keep ``compact_every`` comfortably above
         the tail's trigger cadence, or pause compaction while a tail runs.
@@ -1168,9 +1202,8 @@ class KeyedParquetTable:
         write site inside the critical section, that the lock file still
         holds this thread's token. Shrinks the stale-break exposure from
         the whole commit duration to the instants before each write; the
-        pointer-monotonicity check in ``_write_pointer`` /
-        ``_write_bucketed_pointer`` independently rejects any regression
-        that slips through the residual window."""
+        pointer-monotonicity check in ``_write_pointer`` independently
+        rejects any regression that slips through the residual window."""
         token = getattr(self._held, "token", None)
         if token is None:
             return  # not inside _table_lock (single-writer callers)
@@ -1403,7 +1436,6 @@ class KeyedParquetTable:
         if self.mode == MODE_COW_BUCKETED:
             return self._merge_batch_bucketed(spark, batch, batch_id, p)
         new_version = self._next_version(p)
-        commits = self._commits_map(p)
         if self.mode == MODE_MOR:
             # O(batch) commit: collapse to ≤1 row per key (map-side combine),
             # keep tombstones, stamp the commit sequence, append as a delta.
@@ -1438,13 +1470,7 @@ class KeyedParquetTable:
             if meta["rows"] == 0:
                 shutil.rmtree(ddir, ignore_errors=True)
                 return False
-            commits[new_version] = "delta"
-            self._write_pointer(
-                new_version,
-                batch_id,
-                commits,
-                commit_meta={str(new_version): meta},
-            )
+            self._commit(p, new_version, batch_id, "delta", meta)
             base, pending = self._resolve(new_version)
             if (self.compact_every is not None and len(pending) >= self.compact_every) or (
                 self.compact_bytes_ratio is not None
@@ -1453,32 +1479,15 @@ class KeyedParquetTable:
                 self._compact_locked(spark)  # merge already holds the lock
             return True
         self._check_write_amplification(p, batch)
-        existing = self.read(spark)
         merged = merge_upsert(
-            existing,
+            self.read(spark),
             batch,
             self.keys,
             order_col=self.order_col,
             deleted_col=self.deleted_col,
             tiebreakers=self.tiebreakers,
         )
-        self._write_parquet(
-            self._cluster_sort(merged, bucketed=False), self._version_dir(new_version)
-        )
-        stats = self._collect_file_stats(self._version_dir(new_version))
-        commits[new_version] = "base"
-        self._write_pointer(
-            new_version,
-            batch_id,
-            commits,
-            file_stats={str(new_version): stats} if stats else None,
-            commit_meta={
-                str(new_version): self._commit_meta_entry(
-                    self._version_dir(new_version), "upsert", t0, merged.schema
-                )
-            },
-        )
-        self._prune(new_version)
+        self._commit_base(p, new_version, batch_id, "upsert", merged, t0)
         return True
 
     def _write_parquet(
@@ -1538,43 +1547,6 @@ class KeyedParquetTable:
             return exprs
         return [int(self.cluster_range_files), *exprs]
 
-    def _commit_bucketed_snapshot(
-        self, state: DataFrame, p: dict, new_version: int, op: str = "snapshot"
-    ) -> int:
-        """Write ``state`` as a complete bucketed snapshot committed at
-        ``new_version``: full bucket map collapsed to one holder version, so
-        older version dirs become prunable. Shared by ``compact`` (file-count
-        hygiene) and ``restore`` (roll-forward revert)."""
-        t0 = time.monotonic()
-        maps = self._bucket_maps(p)
-        vdir = self._version_dir(new_version)
-        out = state.withColumn(_BUCKET_COL, self._bucket_expr()).repartition(
-            self.n_buckets, F.col(_BUCKET_COL)
-        )
-        out = self._cluster_sort(out)
-        self._write_parquet(out, vdir, partition_by=_BUCKET_COL)
-        present = {
-            int(n.split("=", 1)[1])
-            for n in os.listdir(vdir)
-            if n.startswith(f"{_BUCKET_COL}=")
-        }
-        maps[new_version] = {b: new_version for b in present}
-        protected = set(self._savepoints(p).values()) & set(maps)
-        retained = sorted(set(sorted(maps)[-self.keep_versions :]) | protected)
-        maps = {v: maps[v] for v in retained}
-        commits = {v: "bucketed" for v in maps}
-        self._write_bucketed_pointer(
-            new_version,
-            p.get("last_batch_id"),
-            commits,
-            maps,
-            commit_meta={
-                str(new_version): self._commit_meta_entry(vdir, op, t0, state.schema)
-            },
-        )
-        self._prune_bucketed(new_version, maps)
-        return new_version
-
     def table_info(self) -> dict:
         """Operational snapshot (Hudi CLI ``commits show`` parity): every
         committed version with its kind, parquet file count, and bytes on
@@ -1631,15 +1603,7 @@ class KeyedParquetTable:
             p = self._read_pointer()
         version = p["version"]
         sps[name] = version
-        if self.mode == MODE_COW_BUCKETED:
-            self._write_bucketed_pointer(
-                version, p.get("last_batch_id"), self._commits_map(p),
-                self._bucket_maps(p), savepoints=sps,
-            )
-        else:
-            self._write_pointer(
-                version, p.get("last_batch_id"), self._commits_map(p), savepoints=sps
-            )
+        self._write_pointer(version, p.get("last_batch_id"), self._commits_map(p), savepoints=sps)
         return version
 
     def drop_savepoint(self, name: str) -> None:
@@ -1654,16 +1618,9 @@ class KeyedParquetTable:
         if name not in sps:
             raise KeyError(f"no savepoint {name!r}")
         del sps[name]
-        if self.mode == MODE_COW_BUCKETED:
-            self._write_bucketed_pointer(
-                p["version"], p.get("last_batch_id"), self._commits_map(p),
-                self._bucket_maps(p), savepoints=sps,
-            )
-        else:
-            self._write_pointer(
-                p["version"], p.get("last_batch_id"), self._commits_map(p),
-                savepoints=sps,
-            )
+        self._write_pointer(
+            p["version"], p.get("last_batch_id"), self._commits_map(p), savepoints=sps
+        )
 
     def restore(self, spark: SparkSession, version: int | None = None, name: str | None = None) -> int:
         with self._table_lock():
@@ -1700,28 +1657,8 @@ class KeyedParquetTable:
             version = sps[name]
         t0 = time.monotonic()
         state = self.read(spark, version=version)  # raises if not retained
-        new_version = self._next_version(p)
-        if self.mode == MODE_COW_BUCKETED:
-            return self._commit_bucketed_snapshot(state, p, new_version, op="restore")
-        self._write_parquet(
-            self._cluster_sort(state, bucketed=False), self._version_dir(new_version)
-        )
-        stats = self._collect_file_stats(self._version_dir(new_version))
-        commits = self._commits_map(p)
-        commits[new_version] = "base"
-        self._write_pointer(
-            new_version,
-            p.get("last_batch_id"),
-            commits,
-            file_stats={str(new_version): stats} if stats else None,
-            commit_meta={
-                str(new_version): self._commit_meta_entry(
-                    self._version_dir(new_version), "restore", t0, state.schema
-                )
-            },
-        )
-        self._prune(new_version)
-        return new_version
+        commit = self._commit_buckets if self.mode == MODE_COW_BUCKETED else self._commit_base
+        return commit(p, self._next_version(p), p.get("last_batch_id"), "restore", state, t0)
 
     def _pending_bytes_reached(self, base: int | None, pending: list[int]) -> bool:
         """Size trigger: pending delta bytes >= ratio * base bytes. With no
@@ -1756,19 +1693,19 @@ class KeyedParquetTable:
         p = self._read_pointer()
         if p is None:
             return None
+        t0 = time.monotonic()
         if self.mode == MODE_COW_BUCKETED:
-            maps = self._bucket_maps(p)
-            bmap = maps.get(p["version"], {})
+            bmap = self._bucket_maps(p).get(p["version"], {})
             if not bmap or set(bmap.values()) == {p["version"]}:
                 return None  # empty, or already a single-version snapshot
             state = self._read_bucketed(spark, p, p["version"])
-            return self._commit_bucketed_snapshot(state, p, self._next_version(p))
+            return self._commit_buckets(
+                p, self._next_version(p), p.get("last_batch_id"), "snapshot", state, t0
+            )
         base, deltas = self._resolve(p["version"], p)
         if not deltas:
             return None
-        t0 = time.monotonic()
         merged = self._fold(spark, p, base, deltas)
-        new_version = self._next_version(p)
         # MOR compacted bases get the same clustering as COW bases: this is
         # the write the read-optimized (_ro) path scans, so row-group
         # min/max selectivity matters most here. Unclustered bases are
@@ -1776,56 +1713,7 @@ class KeyedParquetTable:
         # one tiny file per shuffle partition.
         if not self.cluster_cols:
             merged = merged.hint("rebalance")
-        self._write_parquet(
-            self._cluster_sort(merged, bucketed=False), self._version_dir(new_version)
+        return self._commit_base(
+            p, self._next_version(p), p.get("last_batch_id"), "compact", merged, t0,
+            folded=deltas,
         )
-        stats = self._collect_file_stats(self._version_dir(new_version))
-        commits = self._commits_map(p)
-        for d in deltas:
-            commits.pop(d, None)
-        commits[new_version] = "base"
-        # pointer first (atomic commit), then remove the folded delta dirs —
-        # a crash in between leaves unmanifested dirs for _prune to sweep
-        self._write_pointer(
-            new_version,
-            p.get("last_batch_id"),
-            commits,
-            file_stats={str(new_version): stats} if stats else None,
-            commit_meta={
-                str(new_version): self._commit_meta_entry(
-                    self._version_dir(new_version), "compact", t0, merged.schema
-                )
-            },
-        )
-        for d in deltas:
-            shutil.rmtree(self._delta_dir(d), ignore_errors=True)
-        self._prune(new_version)
-        return new_version
-
-    def _prune(self, current: int) -> None:
-        """Retention: drop old bases past ``keep_versions``, sweep orphan
-        directories from crashed writes, and record both in the manifest.
-        Safe against in-flight writers: any live write is allocated ABOVE
-        the committed pointer (``_next_version``), and only dirs at-or-below
-        it are swept."""
-        p = self._read_pointer()
-        if p is None:
-            return
-        commits = self._commits_map(p)
-        bases = sorted(v for v, k in commits.items() if k == "base")
-        protected = set(self._savepoints(p).values())
-        dropped = False
-        for b in bases[: -self.keep_versions]:
-            if b < current and b not in protected:
-                shutil.rmtree(self._version_dir(b), ignore_errors=True)
-                commits.pop(b, None)
-                dropped = True
-        disk_bases, disk_deltas = self._commit_dirs()
-        for v in disk_bases:
-            if v <= p["version"] and commits.get(v) != "base":
-                shutil.rmtree(self._version_dir(v), ignore_errors=True)
-        for v in disk_deltas:
-            if v <= p["version"] and commits.get(v) != "delta":
-                shutil.rmtree(self._delta_dir(v), ignore_errors=True)
-        if dropped:
-            self._write_pointer(p["version"], p.get("last_batch_id"), commits)

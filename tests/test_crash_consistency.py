@@ -53,10 +53,6 @@ def _mk(tmp_path, mode, name="t", **kw):
     )
 
 
-def _pointer_method(mode: str) -> str:
-    return "_write_bucketed_pointer" if mode == "cow-bucketed" else "_write_pointer"
-
-
 def _crash(monkeypatch, name: str, when: str = "before"):
     """Patch KeyedParquetTable.<name> to die `when` ('before'|'after') the
     real call — 'before' models a crash with none of that step's effects on
@@ -89,7 +85,7 @@ def test_crash_between_data_write_and_pointer_swap(
     if step == "after_data_files":
         _crash(monkeypatch, "_write_parquet", when="after")
     else:
-        _crash(monkeypatch, _pointer_method(mode), when="before")
+        _crash(monkeypatch, "_write_pointer", when="before")
     with pytest.raises(InjectedCrash):
         t.merge_batch(spark, _batch(spark, B1), batch_id=1)
     monkeypatch.undo()
@@ -106,6 +102,25 @@ def test_crash_between_data_write_and_pointer_swap(
     # past disk max)
     assert fresh.merge_batch(spark, _batch(spark, B1), batch_id=1)
     assert _state(fresh, spark) == S1
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_crashed_first_commit_never_becomes_visible(spark, tmp_path, monkeypatch, mode):
+    """Kill the table's very first commit after its data files land: with
+    no pointer, nothing is committed, so the next commit neither adopts
+    the orphan into its manifest nor folds its rows — it sweeps it."""
+    t = _mk(tmp_path, mode)
+    _crash(monkeypatch, "_write_parquet", when="after")
+    with pytest.raises(InjectedCrash):
+        t.merge_batch(spark, _batch(spark, B0), batch_id=0)
+    monkeypatch.undo()
+    assert not t.exists() and os.listdir(t.root)
+
+    fresh = _mk(tmp_path, mode)
+    assert fresh.merge_batch(spark, _batch(spark, B1), batch_id=0)
+    assert _state(fresh, spark) == {(1, "a2"), (4, "d")}
+    disk = sorted(int(d[2:]) for d in os.listdir(fresh.root) if d[:2] in ("v_", "d_"))
+    assert disk == fresh.versions() == [fresh.versions()[-1]]
 
 
 @pytest.mark.parametrize("mode", MODES)
@@ -198,7 +213,7 @@ def test_crash_mid_restore(spark, tmp_path, monkeypatch, mode):
     t.merge_batch(spark, _batch(spark, B1), batch_id=1)
     assert _state(t, spark) == S1
 
-    _crash(monkeypatch, _pointer_method(mode), when="before")
+    _crash(monkeypatch, "_write_pointer", when="before")
     with pytest.raises(InjectedCrash):
         t.restore(spark, v1)
     monkeypatch.undo()
@@ -324,3 +339,103 @@ def test_merge_retry_conflicts_recovers_from_fencing(spark, tmp_path, monkeypatc
     assert _state(t, spark) == S1
     # the lock was released on every failed attempt (no deadlock residue)
     assert not os.path.exists(os.path.join(t.root, ".commit_lock"))
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_one_pointer_write_per_commit(spark, tmp_path, monkeypatch, mode):
+    """Every commit swaps the pointer exactly once — merges past
+    ``keep_versions``, compactions that retire a base, restores: retention
+    is decided before the swap, not applied by a second one."""
+    t = _mk(tmp_path, mode, keep_versions=1)
+    real_replace = kt_mod.os.replace
+    swaps = []
+
+    def counting_replace(src, dst, *a, **k):
+        if dst.endswith("_VERSION"):
+            swaps.append(dst)
+        return real_replace(src, dst, *a, **k)
+
+    monkeypatch.setattr(kt_mod.os, "replace", counting_replace)
+
+    def swaps_of(op):
+        del swaps[:]
+        out = op()
+        return out, len(swaps)
+
+    for i in range(4):
+        rows = [(k, 10 + i, False, f"v{i}") for k in (range(16) if i == 0 else [i])]
+        assert swaps_of(lambda: t.merge_batch(spark, _batch(spark, rows), batch_id=i)) == (True, 1)
+        if mode == "mor" and i % 2:  # the second compaction retires the first base
+            v, n = swaps_of(lambda: t.compact(spark))
+            assert v is not None and n == 1
+    if mode == "cow-bucketed":
+        v, n = swaps_of(lambda: t.compact(spark))
+        assert v is not None and n == 1
+    v, n = swaps_of(lambda: t.restore(spark, t.versions()[0]))
+    assert n == 1 and t.versions()[-1] == v
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_kill_at_first_retention_delete(spark, tmp_path, monkeypatch, mode):
+    """Kill the writer right after retention deletes its first retired
+    snapshot dir: the pointer swap already happened, so a fresh reader
+    reads every version it lists plus the current state, and the next
+    commit sweeps what the kill left behind. (On cow-bucketed the older
+    dirs still hold buckets, so nothing is deleted there.)"""
+    t = _mk(tmp_path, mode, keep_versions=1)
+    t.merge_batch(spark, _batch(spark, B0), batch_id=0)
+    if mode == "mor":
+        t.compact(spark)
+    t.merge_batch(spark, _batch(spark, B1), batch_id=1)
+
+    real_rmtree = kt_mod.shutil.rmtree
+
+    def dying_rmtree(path, *a, **k):
+        real_rmtree(path, *a, **k)
+        if os.path.basename(path).startswith("v_"):
+            raise InjectedCrash("after the first retention delete")
+
+    monkeypatch.setattr(kt_mod.shutil, "rmtree", dying_rmtree)
+    with pytest.raises(InjectedCrash):
+        if mode == "mor":
+            t.compact(spark)  # retires the first base
+        else:
+            t.merge_batch(spark, _batch(spark, [(5, 30, False, "e")]), batch_id=2)
+    monkeypatch.undo()
+
+    fresh = _mk(tmp_path, mode, keep_versions=1)
+    for v in fresh.versions():
+        fresh.read(spark, version=v).collect()
+    want = S1 if mode == "mor" else S1 | {(5, "e")}
+    assert _state(fresh, spark) == want
+    assert fresh.merge_batch(spark, _batch(spark, [(6, 40, False, "f")]), batch_id=3)
+    assert _state(fresh, spark) == want | {(6, "f")}
+    disk = sorted(int(d[2:]) for d in os.listdir(fresh.root) if d[:2] in ("v_", "d_"))
+    assert disk == fresh.versions()
+
+
+def test_orphaned_empty_delta_swept_at_next_commit(spark, tmp_path, monkeypatch):
+    """MOR: kill between an empty delta's write and its rollback. The
+    orphan is never read, and the next delta commit sweeps it: the ``d_*``
+    dirs on disk are exactly the manifested deltas (not left until the
+    next compaction)."""
+    t = _mk(tmp_path, "mor")
+    t.merge_batch(spark, _batch(spark, B0), batch_id=0)
+
+    def dying_rmtree(path, *a, **k):
+        raise InjectedCrash("before the empty delta's rollback")
+
+    monkeypatch.setattr(kt_mod.shutil, "rmtree", dying_rmtree)
+    with pytest.raises(InjectedCrash):
+        t.merge_batch(spark, _batch(spark, []), batch_id=1)
+    monkeypatch.undo()
+    orphans = [d for d in os.listdir(t.root) if d.startswith("d_")]
+    assert len(orphans) == 2, "injection did not leave the empty delta behind"
+
+    fresh = _mk(tmp_path, "mor")
+    assert _state(fresh, spark) == S0
+    assert fresh.last_batch_id() == 0
+    assert fresh.merge_batch(spark, _batch(spark, B1), batch_id=1)
+    assert _state(fresh, spark) == S1
+    on_disk = sorted(int(d[2:]) for d in os.listdir(fresh.root) if d.startswith("d_"))
+    assert on_disk == fresh._resolve(fresh.versions()[-1])[1]

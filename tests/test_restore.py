@@ -73,6 +73,30 @@ def test_restore_mor_materializes_tombstone_horizon(spark, tmp_path):
     assert _state(t, spark) == {(1, "back")}
 
 
+def test_mor_restore_retires_deltas_with_their_base(spark, tmp_path):
+    """A MOR restore keeps the deltas committed before it; once retention
+    retires the base they apply to, they retire too. Every version the
+    table still lists reads exactly the state it had when committed."""
+    t = KeyedParquetTable(
+        str(tmp_path / "m"), keys=["id"], order_col="mtime", mode="mor", keep_versions=1
+    )
+    seen = {}
+
+    def commit(op):
+        op()
+        seen[t.versions()[-1]] = _state(t, spark)
+
+    t.merge_batch(spark, _batch(spark, [(1, 10, False, "a"), (2, 10, False, "b")]), batch_id=0)
+    commit(lambda: t.compact(spark))
+    commit(lambda: t.merge_batch(spark, _batch(spark, [(3, 20, False, "c")]), batch_id=1))
+    v_delta = t.versions()[-1]
+    commit(lambda: t.merge_batch(spark, _batch(spark, [(1, 30, True, "a")]), batch_id=2))
+    commit(lambda: t.restore(spark, v_delta))
+    assert seen[t.versions()[-1]] == {(1, "a"), (2, "b"), (3, "c")}
+    for v in t.versions():
+        assert _state(t, spark, version=v) == seen[v], v
+
+
 @pytest.mark.parametrize("mode", ["cow", "mor", "cow-bucketed"])
 def test_savepoint_survives_retention_and_restores(spark, tmp_path, mode):
     t = KeyedParquetTable(

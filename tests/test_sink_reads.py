@@ -38,14 +38,16 @@ def _rows(df):
     return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
 
 
-def _strip_schemas(root):
+def _strip_schemas(root, *keys):
     """Rewrite the pointer as a table written before commits recorded
-    their schema."""
+    their schema, also dropping the top-level pointer ``keys``."""
     path = f"{root}/_VERSION"
     with open(path) as f:
         p = json.load(f)
     for m in p["commit_meta"].values():
         m.pop("schema")
+    for k in keys:
+        del p[k]
     with open(path, "w") as f:
         json.dump(p, f)
 
@@ -117,16 +119,27 @@ def test_mor_drift_folds_like_merge_schema(spark, tmp_path):
 
 
 def test_pointer_without_schema_reads_and_next_commit_records_one(spark, tmp_path):
-    root = str(tmp_path / "t")
-    t = KeyedParquetTable(root, keys=["id"])
-    t.merge_batch(spark, _batch(spark, [(1, "a", 1, False), (2, "b", 1, False)]), 0)
-    _strip_schemas(root)
-    assert all("schema" not in m for m in t.commit_meta().values())
-    assert {r["id"]: r["val"] for r in t.read(spark).collect()} == {1: "a", 2: "b"}
-    t.merge_batch(spark, _batch(spark, [(2, "b2", 2, False)]), 1)
-    meta = t.commit_meta()
-    assert "schema" in meta[max(meta)]
-    assert {r["id"]: r["val"] for r in t.read(spark).collect()} == {1: "a", 2: "b2"}
+    """Older pointers read and commit in every layout. Besides schemas,
+    each lacks one key the current writer always records: a bucketed
+    pointer has no ``file_stats``, a plain one no ``bucket_maps``. A
+    missing key reads as empty."""
+    for mode in (MODE_COW, MODE_MOR, MODE_COW_BUCKETED):
+        root = str(tmp_path / mode)
+        t = KeyedParquetTable(root, keys=["id"], mode=mode, n_buckets=4)
+        t.merge_batch(spark, _batch(spark, [(1, "a", 1, False), (2, "b", 1, False)]), 0)
+        missing = "file_stats" if mode == MODE_COW_BUCKETED else "bucket_maps"
+        _strip_schemas(root, missing)
+        assert all("schema" not in m for m in t.commit_meta().values())
+        assert {r["id"]: r["val"] for r in t.read(spark).collect()} == {1: "a", 2: "b"}
+        t.merge_batch(spark, _batch(spark, [(2, "b2", 2, False)]), 1)
+        meta = t.commit_meta()
+        assert "schema" in meta[max(meta)]
+        assert {r["id"]: r["val"] for r in t.read(spark).collect()} == {1: "a", 2: "b2"}
+        p = t._read_pointer()
+        if mode == MODE_COW_BUCKETED:
+            assert p["file_stats"] == {} and set(p["bucket_maps"]) == set(p["commits"])
+        else:
+            assert p["bucket_maps"] == {}
 
 
 # -- key-set predicates --------------------------------------------------------

@@ -460,15 +460,14 @@ class TestCrashConsistency:
         m.apply_batch(spark, spark.createDataFrame(b0, SCHEMA), batch_id=0)
         h0 = _hist_set(m.read(spark))
 
-        name = "_write_bucketed_pointer" if history_mode == "cow-bucketed" else "_write_pointer"
-        real = getattr(m.history, name)
+        real = m.history._write_pointer
 
         def dying(version, batch_id, *a, **kw):
             if batch_id == 1:
                 raise InjectedCrash("history pointer swap dies")
             return real(version, batch_id, *a, **kw)
 
-        setattr(m.history, name, dying)
+        m.history._write_pointer = dying
         with pytest.raises(InjectedCrash):
             m.apply_batch(spark, spark.createDataFrame(b1, SCHEMA), batch_id=1)
         assert m.history.last_batch_id() == 0

@@ -104,6 +104,9 @@ DIALECT_DEBEZIUM = "MSK-DEBEZIUM-CDC"
 # (/root/reference/glue/cdc_hudi.py:126-128,156-161).
 DEBEZIUM_LIKE = (DIALECT_FLINK, DIALECT_DEBEZIUM)
 ALL_DIALECTS = (DIALECT_DMS, DIALECT_FLINK, DIALECT_DEBEZIUM)
+#: keyed-table layouts (sinks/keyed_table.py), for both the merge sink and
+#: the SCD2 history table
+SINK_MODES = ("cow", "cow-bucketed", "mor")
 
 
 @dataclass(frozen=True)
@@ -205,17 +208,17 @@ class JobConfig:
     max_offsets_per_trigger: int = 1_000_000
     consumer_group: str | None = None
 
-    #: valid history-table layouts (streaming/scd2.py); validated at
-    #: construction so a properties typo fails at config parse, not at the
-    #: first micro-batch mid-flight (ADVICE r9)
-    _SCD2_MODES = ("cow", "cow-bucketed", "mor")
-
     def __post_init__(self) -> None:
-        if self.scd2_history_mode not in self._SCD2_MODES:
-            raise ValueError(
-                f"scd2_history_mode must be one of {self._SCD2_MODES}, "
-                f"got {self.scd2_history_mode!r}"
-            )
+        # a properties typo fails at config parse, not at the first
+        # micro-batch mid-flight
+        for name, allowed in (
+            ("dialect", ALL_DIALECTS),
+            ("sink_mode", SINK_MODES),
+            ("scd2_history_mode", SINK_MODES),
+        ):
+            value = getattr(self, name)
+            if value not in allowed:
+                raise ValueError(f"{name} must be one of {allowed}, got {value!r}")
 
     @staticmethod
     def from_properties(props: dict[str, str]) -> "JobConfig":

@@ -137,11 +137,8 @@ def srp_topk(
     n_tables: int = 4,
     id_col: str = "vec_id",
     col: str = "embedding",
-    pair_cosine=None,
 ) -> DataFrame:
-    """LSH-bucketed top-k: exact cosine only on bucket-colliding pairs.
-    ``pair_cosine``: optional (a, b) -> Column scorer (e.g.
-    :func:`_pair_cosine_udf`); default is the relational ``cosine``."""
+    """LSH-bucketed top-k: exact cosine only on bucket-colliding pairs."""
     # checkpoint both bucketized sides: this is the LSH INDEX BUILD — the
     # join should probe materialized signatures, not re-derive them, and
     # without the checkpoint the join plan carries the (n_tables * n_bits
@@ -168,8 +165,7 @@ def srp_topk(
         .select("qid", "qe", id_col, col)
         .distinct()
     )
-    cos_fn = pair_cosine if pair_cosine is not None else cosine
-    scored = cand.withColumn("cosine", cos_fn(F.col("qe"), F.col(col)))
+    scored = cand.withColumn("cosine", cosine(F.col("qe"), F.col(col)))
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
@@ -392,98 +388,6 @@ def ivf_assign_arrow(df: DataFrame, cents: np.ndarray, col: str = "embedding") -
     return df.withColumn("cell", assign(F.col(col)))
 
 
-def _pair_dot_np(xa: np.ndarray, xb: np.ndarray) -> np.ndarray:
-    """Row-wise dot of two equal-shape (n, dim) matrices, accumulated
-    vectorized over ROWS but strictly left-to-right over DIMENSIONS from
-    the fold's 0.0 seed — bit-identical to ``functions.vectors.dot``'s
-    ``aggregate(zip_with(...), 0.0, acc + v)`` (the :func:`_pq_dot_tables_np`
-    rule; no matmul — BLAS pairwise summation reassociates adds)."""
-    acc = np.zeros(len(xa), dtype=np.float64)
-    for j in range(xa.shape[1]):
-        acc = acc + xa[:, j] * xb[:, j]  # oracle addition order
-    return acc
-
-
-def _sq_norm_np(x: np.ndarray) -> np.ndarray:
-    """Row-wise sum of squares with the same left-fold association as
-    ``functions.vectors.l2_norm`` (sqrt applied by the caller)."""
-    acc = np.zeros(len(x), dtype=np.float64)
-    for j in range(x.shape[1]):
-        acc = acc + x[:, j] * x[:, j]
-    return acc
-
-
-def _pair_arrays(a: pd.Series, b: pd.Series, dim: int):
-    """Shared validity screen for the pair kernels: rows where both arrays
-    are present with the expected width, stacked to float64 matrices.
-    Anything else degrades to NULL — the relational forms' behavior for a
-    NULL side, and a loud-enough stand-in for the width-mismatch case the
-    fixed-dim corpus never produces."""
-    valid = [
-        i
-        for i in range(len(a))
-        if a.iloc[i] is not None
-        and b.iloc[i] is not None
-        and len(a.iloc[i]) == dim
-        and len(b.iloc[i]) == dim
-    ]
-    if not valid:
-        return valid, None, None
-    xa = np.stack([np.asarray(a.iloc[i], dtype=np.float64) for i in valid])
-    xb = np.stack([np.asarray(b.iloc[i], dtype=np.float64) for i in valid])
-    return valid, xa, xb
-
-
-def _pair_dot_udf(dim: int):
-    """Per-PAIR dot product in one Arrow-batched numpy kernel — the
-    candidate-scoring twin of :func:`ivf_assign_arrow` for stages whose
-    norms are already hoisted per row (brute-force / IVF verify). Doubles
-    are bit-identical to the relational fold (:func:`_pair_dot_np`; pinned
-    by test_similarity.py::test_pair_dot_udf_matches_relational).
-
-    NOT wired into any query path: the r14 A/B (AB_PAIR_KERNEL_r14.json,
-    two independent runs) measured the kernel SLOWER than the fold on
-    every verify stage — shipping two ``dim``-double arrays per candidate
-    pair through the Arrow boundary costs more than the interpreted-fold
-    savings (unlike the corpus-side PQ/IVF kernels, whose Arrow input is
-    one array per ROW). Kept as the measured counter-example and as an
-    optional hook (``pair_dot=`` / ``pair_cosine=``) should the trade flip
-    at higher dim."""
-
-    @pandas_udf("double")
-    def pdot(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = pd.array([None] * len(a), dtype="Float64")
-        valid, xa, xb = _pair_arrays(a, b, dim)
-        if valid:
-            out[np.asarray(valid)] = _pair_dot_np(xa, xb)
-        return pd.Series(out, dtype="Float64")
-
-    return pdot
-
-
-def _pair_cosine_udf(dim: int):
-    """Per-PAIR cosine (dot + both norms) in one Arrow kernel pass — for
-    pair stages that score with ``cosine()`` directly (SRP buckets,
-    embedding dedup). Division association matches the relational
-    ``dot / (l2_norm * l2_norm)`` exactly; every fold uses the oracle's
-    left-to-right addition order, so the doubles are bit-identical
-    (pinned by test_similarity.py::test_pair_cosine_udf_matches_relational).
-    NOT wired into any query path — same negative A/B verdict as
-    :func:`_pair_dot_udf` (AB_PAIR_KERNEL_r14.json)."""
-
-    @pandas_udf("double")
-    def pcos(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = pd.array([None] * len(a), dtype="Float64")
-        valid, xa, xb = _pair_arrays(a, b, dim)
-        if valid:
-            out[np.asarray(valid)] = _pair_dot_np(xa, xb) / (
-                np.sqrt(_sq_norm_np(xa)) * np.sqrt(_sq_norm_np(xb))
-            )
-        return pd.Series(out, dtype="Float64")
-
-    return pcos
-
-
 def ivf_assign(df: DataFrame, cents: np.ndarray, col: str = "embedding") -> DataFrame:
     """Assign each vector to its nearest centroid cell (argmax dot).
     Native expressions; centroids are broadcast literals."""
@@ -506,11 +410,8 @@ def ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     col: str = "embedding",
-    pair_dot=None,
 ) -> DataFrame:
-    """Probe the n_probe best cells per query, exact cosine within them.
-    ``pair_dot``: optional (a, b) -> Column scorer for the per-candidate
-    dot (e.g. :func:`_pair_dot_udf`); default is the relational fold."""
+    """Probe the n_probe best cells per query, exact cosine within them."""
     n_cells = len(cents)
     # r14: candidate norms once per corpus ROW, query norms once per query
     # — not once per probed PAIR (same doubles: the division association
@@ -535,9 +436,8 @@ def ivf_topk(
     q = q.withColumn("probe_cells", probe).drop(*[f"c{i}" for i in range(n_cells)])
     qx = q.select("qid", "qe", "_qn", F.explode("probe_cells").alias("cell"))
     cand = qx.join(candidates_assigned, "cell").filter(F.col("qid") != F.col(id_col))
-    dot_fn = pair_dot if pair_dot is not None else dot
     scored = cand.withColumn(
-        "cosine", dot_fn(F.col("qe"), F.col(col)) / (F.col("_qn") * F.col("_n"))
+        "cosine", dot(F.col("qe"), F.col(col)) / (F.col("_qn") * F.col("_n"))
     )
     from pyspark.sql import Window
 

@@ -915,10 +915,6 @@ _SIMHASH_SC_WIDTH = _SIMHASH_SC_BITS // _SIMHASH_SC_BANDS
 _SIMHASH_SC_HAMMING_MAX = _SIMHASH_SC_BANDS - 1  # pigeonhole guarantee
 
 
-def _sc_word_of(j: int) -> int:
-    return j // _SIMHASH_SC_WORD
-
-
 #: packed-lane vote aggregation (r12, VERDICT r11 item 3): each md5 nibble
 #: carries 4 bit-votes; each nibble value v in [0,16) maps through a
 #: 16-long literal lookup to a bigint packing those 4 votes (as 0/1 bit

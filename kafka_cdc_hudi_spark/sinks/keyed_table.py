@@ -106,6 +106,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from kafka_cdc_hudi_spark.config import SINK_MODES
 from kafka_cdc_hudi_spark.functions.zorder import zorder_key
 from kafka_cdc_hudi_spark.operators.dedup import latest_per_key_agg
 from kafka_cdc_hudi_spark.operators.merge import align_by_name, dedupe_batch, merge_upsert
@@ -222,11 +223,8 @@ class KeyedParquetTable:
         cluster_range_files: bool | int = False,
         parquet_bloom_keys: bool = False,
     ):
-        if mode not in (MODE_COW, MODE_MOR, MODE_COW_BUCKETED):
-            raise ValueError(
-                f"mode must be one of '{MODE_COW}', '{MODE_MOR}', "
-                f"'{MODE_COW_BUCKETED}', got {mode!r}"
-            )
+        if mode not in SINK_MODES:
+            raise ValueError(f"mode must be one of {SINK_MODES}, got {mode!r}")
         self.root = root
         self.keys = list(keys)
         #: per-thread record of the held lock token — created EAGERLY so

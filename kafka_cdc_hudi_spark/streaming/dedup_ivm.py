@@ -29,6 +29,7 @@ stream).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -42,11 +43,18 @@ def _sig_cols() -> list[str]:
 def live_index(spark: SparkSession, sig_ops_store: str, before_bid: int | None = None) -> DataFrame | None:
     """Fold the signature-op log to the live index: latest op per doc
     (ties impossible — one op per doc per batch), deletes dropped. The
-    MOR read shape: at scale this fold is what compaction amortizes."""
+    MOR read shape: at scale this fold is what compaction amortizes.
+
+    ``None`` means no index yet: the store is absent, or holds only a torn
+    first write under ``_temporary``. Any other read error (a corrupt
+    committed file) propagates — pairing against an empty index would
+    write wrong pair deltas without a word."""
     try:
         ops = spark.read.parquet(sig_ops_store)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
     if before_bid is not None:
         ops = ops.filter(F.col("bid") < before_bid)
     w = Window.partitionBy("doc_id").orderBy(F.col("bid").desc())

@@ -10,10 +10,13 @@ Re-expresses reference O4-O7 (/root/reference/glue/cdc_hudi.py:254-287):
   failure stops the app (O7, fail-stop:
   /root/reference/glue/cdc_hudi.py:269-274)
 
-Key structural improvement over the reference: the batch is parsed ONCE per
-dialect into typed columns, then each table is a cheap typed filter — versus
-the reference's per-table Python-UDF filter + per-table schema-inference job
-+ per-table parse (N full passes with Python round-trips).
+Per table (:meth:`CdcStreamDriver._run_table`): a raw-string prefilter cuts
+the persisted batch to the lines that can belong to the table, only that
+slice is parsed with the table's own payload schema, and an exact typed
+route follows the parse. Everything is native expressions — versus the
+reference's per-table Python-UDF filter + per-table schema-inference job
++ per-table parse of the whole batch (N full passes with Python
+round-trips).
 
 Dynamic-schema mode: when a table has no declared payload schema, the driver
 infers one from the first non-empty batch and caches it; later batches

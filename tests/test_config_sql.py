@@ -86,15 +86,20 @@ def test_job_config_scd2_properties_and_driver_wiring(spark, tmp_path):
     # PARSE (ADVICE r9 — not mid-flight at the first micro-batch; the
     # dialect-string lesson: never silently fall back)
     assert JobConfig.from_properties_text("").scd2_history_mode == "cow"
-    try:
-        JobConfig.from_properties_text(
-            "scd2_history_mode = morr\n"
-            'sync_table_list = [{"db_name": "d1", "table_name": "t1", "primary_key": "id"}]\n'
-        )
-    except ValueError as e:
-        assert "scd2_history_mode" in str(e)
-    else:
-        raise AssertionError("unknown scd2_history_mode must raise at parse")
+    for field, line in (
+        ("scd2_history_mode", "scd2_history_mode = morr"),
+        ("sink_mode", "sink_mode = mro"),
+        ("dialect", "cdc_format = DMS"),
+    ):
+        try:
+            JobConfig.from_properties_text(
+                f"{line}\n"
+                'sync_table_list = [{"db_name": "d1", "table_name": "t1", "primary_key": "id"}]\n'
+            )
+        except ValueError as e:
+            assert field in str(e)
+        else:
+            raise AssertionError(f"unknown {field} must raise at parse")
 
 
 def test_job_config_reference_properties_format():

@@ -508,3 +508,16 @@ class TestWriteAmplificationAdvisory:
         t.merge_batch(spark, _df(spark, [(i, "v", 10, False) for i in range(7)]), batch_id=1)
         meta = t.commit_meta()
         assert [m["rows"] for m in meta.values()] == [7]
+
+
+def test_merge_annotations_resolve():
+    """Every annotation in operators/merge.py names an imported type
+    (``from __future__ import annotations`` defers the lookup to here)."""
+    import inspect
+    import typing
+
+    from kafka_cdc_hudi_spark.operators import merge
+
+    for _, fn in inspect.getmembers(merge, inspect.isfunction):
+        if fn.__module__ == merge.__name__:
+            typing.get_type_hints(fn)

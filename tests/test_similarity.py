@@ -196,94 +196,6 @@ def test_ivf_assign_arrow_matches_native(spark, emb):
     assert all(v is not None for k, v in rows.items() if k != 0)
 
 
-def test_pair_dot_udf_matches_relational(spark, emb):
-    """The per-pair Arrow dot kernel must be BIT-identical to the
-    relational fold (same left-to-right addition order from the 0.0
-    seed) — this licenses its use in the exact-cosine verify stages of
-    the oracled ANN entries."""
-    from kafka_cdc_hudi_spark.functions.vectors import dot
-    from kafka_cdc_hudi_spark.operators.similarity import _pair_dot_udf
-
-    s = emb.limit(60).select("vec_id", "embedding")
-    pairs = (
-        s.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("ea"))
-        .join(
-            s.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("eb")),
-            F.col("a_id") < F.col("b_id"),
-        )
-    )
-    both = pairs.select(
-        "a_id",
-        "b_id",
-        dot(F.col("ea"), F.col("eb")).alias("fold"),
-        _pair_dot_udf(DIM)(F.col("ea"), F.col("eb")).alias("arrow"),
-    ).collect()
-    assert both, "no pairs built"
-    for r in both:
-        assert r["fold"] == r["arrow"], (r["a_id"], r["b_id"], r["fold"], r["arrow"])
-
-
-def test_pair_cosine_udf_matches_relational(spark, emb):
-    """Same pin for the one-pass pair cosine kernel (dot + both norms):
-    identical division association, identical fold order per term."""
-    from kafka_cdc_hudi_spark.functions.vectors import cosine
-    from kafka_cdc_hudi_spark.operators.similarity import _pair_cosine_udf
-
-    s = emb.limit(60).select("vec_id", "embedding")
-    pairs = (
-        s.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("ea"))
-        .join(
-            s.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("eb")),
-            F.col("a_id") < F.col("b_id"),
-        )
-    )
-    both = pairs.select(
-        "a_id",
-        "b_id",
-        cosine(F.col("ea"), F.col("eb")).alias("fold"),
-        _pair_cosine_udf(DIM)(F.col("ea"), F.col("eb")).alias("arrow"),
-    ).collect()
-    assert both, "no pairs built"
-    for r in both:
-        assert r["fold"] == r["arrow"], (r["a_id"], r["b_id"], r["fold"], r["arrow"])
-
-
-def test_pair_kernels_null_degradation(spark):
-    """NULL on either side -> NULL score, matching the relational folds
-    (zip_with with a NULL array yields NULL). A ragged array paired with
-    a full-width one is NULL in both forms too (zip_with pads the short
-    side with NULLs, poisoning the sum)."""
-    from kafka_cdc_hudi_spark.functions.vectors import dot
-    from kafka_cdc_hudi_spark.operators.similarity import (
-        _pair_cosine_udf,
-        _pair_dot_udf,
-    )
-
-    full = [float(i % 7) + 0.5 for i in range(DIM)]
-    rows = [
-        (1, full, full),
-        (2, None, full),
-        (3, full, None),
-        (4, [1.0, 2.0], full),  # ragged vs full: NULL both ways
-    ]
-    df = spark.createDataFrame(
-        rows, "pid long, ea array<double>, eb array<double>"
-    )
-    got = df.select(
-        "pid",
-        dot(F.col("ea"), F.col("eb")).alias("fold"),
-        _pair_dot_udf(DIM)(F.col("ea"), F.col("eb")).alias("arrow"),
-        _pair_cosine_udf(DIM)(F.col("ea"), F.col("eb")).alias("arrow_cos"),
-    ).collect()
-    by_pid = {r["pid"]: r for r in got}
-    assert by_pid[1]["fold"] == by_pid[1]["arrow"]
-    assert by_pid[1]["arrow_cos"] is not None
-    for pid in (2, 3, 4):
-        assert by_pid[pid]["fold"] is None
-        assert by_pid[pid]["arrow"] is None, pid
-        assert by_pid[pid]["arrow_cos"] is None, pid
-
-
 def test_ivf_assign_pandas_null_embedding(spark, emb):
     from pyspark.sql import functions as F
     from kafka_cdc_hudi_spark.operators.similarity import ivf_assign_pandas

@@ -336,3 +336,24 @@ def test_crash_between_delta_and_sigops_writes_then_replay(spark, tmp_path):
     got = {(r.doc_a, r.doc_b) for r in m.live_pairs().collect()}
     want = set(_truth_pairs(spark, live))
     assert got == want
+
+
+def test_live_index_empty_only_when_no_store(spark, tmp_path):
+    """No store (absent, or only a torn first write under ``_temporary``)
+    is an empty index; a committed file with a corrupt footer raises
+    instead of pairing the batch against nothing."""
+    import shutil
+
+    from kafka_cdc_hudi_spark.streaming.dedup_ivm import live_index
+
+    assert live_index(spark, str(tmp_path / "absent")) is None
+    src = tmp_path / "src"
+    spark.range(3).selectExpr("id AS doc_id", "'u' AS op").write.parquet(str(src))
+    shutil.copytree(src, tmp_path / "torn" / "bid=0" / "_temporary" / "0")
+    assert live_index(spark, str(tmp_path / "torn")) is None
+    shutil.copytree(src, tmp_path / "corrupt" / "bid=0", ignore=shutil.ignore_patterns("*.crc"))
+    for f in (tmp_path / "corrupt" / "bid=0").glob("*.parquet"):
+        b = f.read_bytes()
+        f.write_bytes(b[:-8] + bytes(4) + b[-4:])  # zero footer length, keep magic
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        live_index(spark, str(tmp_path / "corrupt"))

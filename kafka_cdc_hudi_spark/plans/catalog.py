@@ -4,18 +4,25 @@ Two views of the same catalog:
 
 - ``FULL_REGISTRY`` — every implemented query. tests/test_oracle.py and
   tests/test_plan_invariants.py run ALL of these against their DuckDB
-  oracles / plan invariants locally, so nothing loses verification.
-- ``REGISTRY`` — the driver-facing subset (the correctness driver evaluates
-  at most ~50 entries, in order). Ordered so the entries whose fixes are
-  freshest — the ones that most need a driver row — come first, and pruned
-  of near-duplicate plan *shapes* whose operators are fully exercised by a
-  surviving entry (see ``PRUNED`` for the covered-by mapping). Pruned
-  queries remain implemented, exported, and locally oracle-verified.
+  oracles / plan invariants locally, and the sweep times them, so nothing
+  loses verification.
+- ``REGISTRY`` — the driver-facing subset: the correctness driver evaluates
+  at most ``DRIVER_CAP`` entries per round, in order, and commits one
+  ``CORRECTNESS_r<N>.json`` row per entry. ``driver_order`` derives the
+  order from those committed rows: entries never driver-tested first, then
+  entries whose latest row failed, then green entries whose latest row is
+  oldest. Each round's artifact therefore rotates the next round's set;
+  nothing is kept by hand.
 
 Consumed by __spark_entry__.py (driver contract) and bench.py.
 """
 
 from __future__ import annotations
+
+import json
+import re
+from collections.abc import Iterable
+from pathlib import Path
 
 from kafka_cdc_hudi_spark.plans.catalog_analytics import ANALYTICS_QUERIES
 from kafka_cdc_hudi_spark.plans.catalog_cdc import CDC_QUERIES
@@ -35,9 +42,9 @@ FULL_REGISTRY.update(STREAMING_QUERIES)
 #: name stays implemented + exported in its catalog_* module, keeps its
 #: oracle SQL, and is smoke-executed every session by
 #: tests/test_demoted.py; its operator surface is fully exercised by the
-#: named survivor — the same covered-by mapping that kept these in PRUNED
-#: (never in the driver set) for 4+ rounds. Demotion is reversible by
-#: deleting the entry here.
+#: named survivor — the same covered-by mapping that kept them out of the
+#: driver set for 4+ rounds. Demotion is reversible by deleting the entry
+#: here.
 DEMOTED: dict[str, str] = {
     "global_counts": "events_sketches n / q1 count_order (count aggregate everywhere)",
     "events_rollup": "events_cube (same Expand/grouping-sets shape)",
@@ -57,261 +64,54 @@ DEMOTED: dict[str, str] = {
 for _n in DEMOTED:
     del FULL_REGISTRY[_n]
 
-#: ROTATION SCHEDULE (standing commitment since r6, per VERDICT r5 item 7 /
-#: VERDICT r6 item 1): every FULL_REGISTRY entry earns a driver CORRECTNESS
-#: row within 2 rounds of rotating out (or of being born). All entries stay
-#: locally oracle-checked in test_oracle.py every session regardless of
-#: driver status, and the full-registry sf0.01 sweep artifact
-#: (SWEEP_r{N}.json, scripts/sweep.py) is committed each round.
-#:
-#: ROUND-14 ROTATION (this file's current state; executes the schedule
-#: pre-committed in r13 verbatim, VERDICT r13 item 1). IN (50 slots, in
-#: order):
-#:   1. the 3 entries born r13 past that round's driver-set freeze
-#:      (multimodal_webp_anim_frames, corpus_warc_extract,
-#:      pipeline_warc_corpus) — the only entries never driver-tested,
-#:      all sweep-green r13 with full DuckDB oracles.
-#:   2. the 16 slipped r10 entries (graph_pagerank_neardup ..
-#:      cdc_incremental_agg_maintenance) — due back r14, "must not slip
-#:      twice".
-#:   3. 31 slots of the r11 green block in CORRECTNESS_r11 row order
-#:      (text_bm25_topk .. multimodal_audio_segments). The last 19 r11
-#:      entries (multimodal_video_cuts .. events_hourly_agg) slip to r15
-#:      and must not slip twice.
-#: OUT: the 50 green r13 driver entries (due back r15+ oldest-row-first)
-#: and the 50 green r12 entries (due back r15 as slots allow).
-#:
-#: ROUND-15 ROTATION (committed in advance, the standing pattern):
-#: IN (50 slots, in order):
-#:   1. the entries born in r14 past this driver-set freeze (4:
-#:      corpus_warc_http_decode, multimodal_webp_lossy_meta,
-#:      pipeline_warc_html_corpus, pipeline_wet_roundtrip) plus any
-#:      born later in r14.
-#:   2. the 19 slipped r11 entries (multimodal_video_cuts,
-#:      events_histogram_quantile_rollup, text_bpe_pair_counts,
-#:      text_bpe_train_merges, pipeline_audio_manifest,
-#:      text_bloom_decontaminate, dedup_fuzzy_editdist,
-#:      dedup_fuzzy_canonicalize, text_bpe_encode,
-#:      cdc_incremental_enriched_agg_maintenance, dataset_negative_sample,
-#:      text_duplicated_span_fraction, text_fingerprint, text_language_id,
-#:      embedding_quantize_int8, events_pivot_user_counts,
-#:      active_user_set_ops, text_quality_score, events_hourly_agg) —
-#:      must not slip twice.
-#:   3. the r12 green block in CORRECTNESS_r12 row order as slots allow
-#:      (~27 slots with the 4 born entries; the rest slip to r16 and
-#:      must not slip twice).
-#:   4. r13/r14 greens rest and return r16 oldest-row-first.
-#: Structural near-duplicates stay DEMOTED (see ``DEMOTED``) with
-#: covered-by reasons and a smoke test.
+#: the correctness driver evaluates at most this many entries per round
+DRIVER_CAP = 50
 
-#: held out of the driver-facing registry (entry cap) — each is either a
-#: near-duplicate of a surviving entry's physical plan shape or a
-#: driver-green entry resting between rotations; the operator itself stays
-#: covered by the named survivor + local oracle tests + the committed sweep
-PRUNED: dict[str, str] = {
-    # ---- born r14 AFTER the r14 driver-set freeze (rotate r15 slot 1) ----
-    "corpus_warc_http_decode": "born r14 (chunked/gzip/charset HTTP wire framings through the WARC extractor, full oracle); rotate r15",
-    "multimodal_webp_lossy_meta": "born r14 (lossy-VP8 key-frame header metadata, RFC 6386 uncompressed header; full oracle); rotate r15",
-    "pipeline_warc_html_corpus": "born r14 (crawl flagship v2: HTML pages behind wire framings -> markup strip -> hash-keyed dedup; full composed oracle); rotate r15",
-    "pipeline_wet_roundtrip": "born r14 (WET extracted-text output: warcinfo + conversion records, round-tripped through the WARC walker; full oracle); rotate r15",
-    # ---- structural near-duplicates (standing; each covered by survivor) ----
-    "cdc_latest_per_key": 'cdc_latest_per_composite_key (same dedup operator, composite keys; r2-r6 green)',
-    "q6_forecast_revenue": 'q1_pricing_summary/q14 (filter+agg; pushdown pinned in test_plan_invariants)',
-    "big_orders_semi_join": 'q4_order_priority (left-semi against aggregated/filtered build side)',
-    "events_tumbling_windows": 'events_sliding_windows (same windowed-agg family) + test_streaming_windows builder tests',
-    # ---- r11 greens slipped one round to r15 (slots consumed by the
-    #      born-r13 + must-not-slip-twice r10 blocks; must not slip twice) ----
-    "multimodal_video_cuts": "green r11; slipped r14, due back r15",
-    "events_histogram_quantile_rollup": "green r11; slipped r14, due back r15",
-    "text_bpe_pair_counts": "green r11; slipped r14, due back r15",
-    "text_bpe_train_merges": "green r11; slipped r14, due back r15",
-    "pipeline_audio_manifest": "green r11; slipped r14, due back r15",
-    "text_bloom_decontaminate": "green r11; slipped r14, due back r15",
-    "dedup_fuzzy_editdist": "green r11; slipped r14, due back r15",
-    "dedup_fuzzy_canonicalize": "green r11; slipped r14, due back r15",
-    "text_bpe_encode": "green r11; slipped r14, due back r15",
-    "cdc_incremental_enriched_agg_maintenance": "green r11; slipped r14, due back r15",
-    "dataset_negative_sample": "green r11; slipped r14, due back r15",
-    "text_duplicated_span_fraction": "green r11; slipped r14, due back r15",
-    "text_fingerprint": "green r11; slipped r14, due back r15",
-    "text_language_id": "green r11; slipped r14, due back r15",
-    "embedding_quantize_int8": "green r11; slipped r14, due back r15",
-    "events_pivot_user_counts": "green r11; slipped r14, due back r15",
-    "active_user_set_ops": "green r11; slipped r14, due back r15",
-    "text_quality_score": "green r11; slipped r14, due back r15",
-    "events_hourly_agg": "green r11; slipped r14, due back r15",
-    # ---- r12 driver set, resting after green CORRECTNESS_r12 rows
-    #      (due back r15 oldest-row-first as slots allow) ----
-    "dedup_simhash_band_scaled": "green r12; due back r15",
-    "text_token_topk": "green r12; due back r15",
-    "ann_topk_ivf": "green r12; due back r15",
-    "dedup_ngram_jaccard": "green r12; due back r15",
-    "dataset_sample_stratified": "green r12; due back r15",
-    "text_tfidf_topk": "green r12; due back r15",
-    "events_user_rate_window": "green r12; due back r15",
-    "multimodal_decode_png": "green r12; due back r15",
-    "ann_topk_ivf_trained": "green r12; due back r15",
-    "multimodal_decode_jpeg": "green r12; due back r15",
-    "multimodal_video_frames": "green r12; due back r15",
-    "cdc_merge_partial_updates": "green r12; due back r15",
-    "events_cms_heavy_hitters": "green r12; due back r15",
-    "ann_topk_ivfpq": "green r12; due back r15",
-    "dedup_clusters_star": "green r12; due back r15",
-    "events_sketches": "green r12; due back r15",
-    "multimodal_video_keyframes": "green r12; due back r15",
-    "cdc_merge_dms_e2e": "green r12; due back r15",
-    "dedup_incremental_candidates": "green r12; due back r15",
-    "graph_triangles_neardup": "green r12; due back r15",
-    "ann_recall_at_k": "green r12; due back r15",
-    "dedup_spans_remove": "green r12; due back r15",
-    "events_partitioned_day_slice": "green r12; due back r15",
-    "ann_recall_trained_vs_static": "green r12; due back r15",
-    "events_ab_test": "green r12; due back r15",
-    "dedup_semantic_clusters": "green r12; due back r15",
-    "text_nb_classifier": "green r12; due back r15",
-    "dataset_dsir_weights": "green r12; due back r15",
-    "pipeline_rag_index": "green r12; due back r15",
-    "pipeline_quality_funnel": "green r12; due back r15",
-    "dedup_cdc_pair_ivm": "green r12; due back r15",
-    "ann_topk_ivfpq_rerank": "green r12; due back r15",
-    "dedup_cross_source_stats": "green r12; due back r15",
-    "dataset_epoch_order": "green r12; due back r15",
-    "text_containment_pairs": "green r12; due back r15",
-    "embedding_pca_whiten": "green r12; due back r15",
-    "pipeline_cdc_corpus_refresh": "green r12; due back r15",
-    "events_ewma_forecast": "green r12; due back r15",
-    "cdc_scd2_history": "green r12; due back r15",
-    "q12_priority_by_linestatus": "green r12; due back r15",
-    "events_hll_mergeable_rollup": "green r12; due back r15",
-    "cdc_parse_debezium": "green r12; due back r15",
-    "cdc_parse_dms": "green r12; due back r15",
-    "cdc_latest_per_composite_key": "green r12; due back r15",
-    "cdc_merge_two_batches": "green r12; due back r15",
-    "cdc_merge_mor": "green r12; due back r15",
-    "cdc_time_travel": "green r12; due back r15",
-    "cdc_incremental_diff": "green r12; due back r15",
-    "cdc_route_multitable": "green r12; due back r15",
-    "q1_pricing_summary": "green r12; due back r15",
-    # ---- r13 driver set, resting after green CORRECTNESS_r13 rows (50/50)
-    #      (due back r15+ as slots allow; all locally oracled + swept) ----
-    "multimodal_decode_webp": "green r13; due back r15+",
-    "q3_shipping_priority": "green r13; due back r15+",
-    "q4_order_priority": "green r13; due back r15+",
-    "q5_local_supplier": "green r13; due back r15+",
-    "topk_orders_per_customer": "green r13; due back r15+",
-    "asof_join_last_click": "green r13; due back r15+",
-    "customers_without_orders": "green r13; due back r15+",
-    "events_cube": "green r13; due back r15+",
-    "range_join_post_purchase": "green r13; due back r15+",
-    "events_retention_cohorts": "green r13; due back r15+",
-    "events_funnel_conversions": "green r13; due back r15+",
-    "dedup_exact": "green r13; due back r15+",
-    "dedup_minhash_lsh": "green r13; due back r15+",
-    "dedup_simhash": "green r13; due back r15+",
-    "ann_topk_bruteforce": "green r13; due back r15+",
-    "events_sliding_windows": "green r13; due back r15+",
-    "ann_topk_maintained": "green r13; due back r15+",
-    "text_repetition_stats": "green r13; due back r15+",
-    "text_pii_scrub": "green r13; due back r15+",
-    "text_decontaminate": "green r13; due back r15+",
-    "cdc_schema_drift_parse": "green r13; due back r15+",
-    "dataset_pack_sequences": "green r13; due back r15+",
-    "ann_topk_srp": "green r13; due back r15+",
-    "dedup_embedding_cosine": "green r13; due back r15+",
-    "multimodal_meta": "green r13; due back r15+",
-    "multimodal_frame_sample": "green r13; due back r15+",
-    "multimodal_resize": "green r13; due back r15+",
-    "events_session_windows": "green r13; due back r15+",
-    "user_running_stats_batch": "green r13; due back r15+",
-    "q10_returned_items": "green r13; due back r15+",
-    "q14_promo_revenue": "green r13; due back r15+",
-    "text_normalize": "green r13; due back r15+",
-    "dataset_split_assign": "green r13; due back r15+",
-    "dedup_clusters": "green r13; due back r15+",
-    "q2_min_cost_supplier": "green r13; due back r15+",
-    "q7_volume_shipping": "green r13; due back r15+",
-    "q8_market_share": "green r13; due back r15+",
-    "q9_product_profit": "green r13; due back r15+",
-    "q11_important_parts": "green r13; due back r15+",
-    "q13_customer_distribution": "green r13; due back r15+",
-    "q15_top_supplier": "green r13; due back r15+",
-    "q16_part_supplier_variety": "green r13; due back r15+",
-    "q17_small_quantity_revenue": "green r13; due back r15+",
-    "q18_large_volume_customers": "green r13; due back r15+",
-    "q19_disjunctive_revenue": "green r13; due back r15+",
-    "q20_excess_quantity_suppliers": "green r13; due back r15+",
-    "q21_last_shipper_blame": "green r13; due back r15+",
-    "q22_sales_opportunity": "green r13; due back r15+",
-    "embedding_pq_encode": "green r13; due back r15+",
-    "ann_topk_pq_adc": "green r13; due back r15+",
-}
+#: the repo root, where the driver's ``CORRECTNESS_r<N>.json`` rows are committed
+_ARTIFACT_DIR = Path(__file__).parents[2]
+_ARTIFACT_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
+_MATCH_FIELDS = ("rows_match", "schema_match", "hash_match")
 
-#: driver evaluation order, round 14: the 3 born-r13 entries first (the
-#: never-driver-tested set), then the 16 due-back-r10 slips (oldest rows),
-#: then 31 slots of the r11 green block in CORRECTNESS_r11 row order
-_DRIVER_ORDER = [
-    # -- born r13 (never driver-tested; full oracles, sweep-green r13) --
-    "multimodal_webp_anim_frames",
-    "corpus_warc_extract",
-    "pipeline_warc_corpus",
-    # -- the 16 slipped r10 entries (must not slip twice) --
-    "graph_pagerank_neardup",
-    "multimodal_decode_bmp",
-    "multimodal_decode_gif",
-    "multimodal_decode_tiff",
-    "multimodal_decode_wav",
-    "multimodal_resize_png_real",
-    "pipeline_pretraining_corpus",
-    "pipeline_multimodal_manifest",
-    "dataset_pack_materialize",
-    "dataset_quota_per_group",
-    "dataset_weighted_sample",
-    "dataset_mixture_weights",
-    "dedup_lines_reconstruct",
-    "dedup_corpus_final",
-    "cdc_merge_bucketed",
-    "cdc_incremental_agg_maintenance",
-    # -- the r11 green block, 31 slots in CORRECTNESS_r11 row order --
-    "text_bm25_topk",
-    "text_bm25_maintained",
-    "hybrid_retrieval_rrf",
-    "hybrid_retrieval_maintained",
-    "cdc_incremental_minmax_maintenance",
-    "user_activity_reconciliation",
-    "events_anomaly_zscore",
-    "events_daily_ohlc",
-    "events_data_profile",
-    "events_kmv_distinct_rollup",
-    "events_markov_transitions",
-    "events_props_json_stats",
-    "parts_cooccurrence",
-    "text_bpe_pretokenize",
-    "text_lm_score",
-    "text_trigram_novelty",
-    "text_hash_embedding",
-    "dataset_interleave_order",
-    "dataset_length_buckets",
-    "embedding_mrl_energy",
-    "events_value_percentiles",
-    "events_user_gaps",
-    "events_active_users_rolling",
-    "text_rare_token_fraction",
-    "text_chunk_overlap",
-    "text_html_strip",
-    "orders_price_percentile_rank",
-    "events_type_cooccurrence",
-    "customers_rfm_segments",
-    "multimodal_decode_jpeg_color",
-    "multimodal_audio_segments",
-]
 
-assert set(_DRIVER_ORDER) | set(PRUNED) == set(FULL_REGISTRY), (
-    set(_DRIVER_ORDER) ^ (set(FULL_REGISTRY) - set(PRUNED))
-)
-assert not set(_DRIVER_ORDER) & set(PRUNED)
-assert len(_DRIVER_ORDER) <= 50, len(_DRIVER_ORDER)
+def driver_order(names: Iterable[str], artifact_dir: Path = _ARTIFACT_DIR) -> list[str]:
+    """The first ``DRIVER_CAP`` of ``names`` in driver evaluation order,
+    derived from the committed ``CORRECTNESS_r<N>.json`` rows.
 
-REGISTRY: dict[str, tuple] = {n: FULL_REGISTRY[n] for n in _DRIVER_ORDER}
+    An entry's latest row is its row in the highest-N file. Entries with
+    no row come first, in ``names`` order; then entries whose latest row
+    is not green; then green entries, oldest ``(N, row position)`` first.
+    Green means all three match fields true and no ``err``. Rows for
+    names outside ``names`` are ignored. A file that is not a JSON object
+    of rows, or a row without the match fields, raises."""
+    latest: dict[str, tuple[int, int, bool]] = {}
+    for path in artifact_dir.iterdir():
+        m = _ARTIFACT_NAME.fullmatch(path.name)
+        if m is None:
+            continue
+        try:
+            rows = json.loads(path.read_text())
+        except ValueError as e:
+            raise ValueError(f"{path}: {e}") from e
+        if not isinstance(rows, dict):
+            raise ValueError(f"{path}: expected an object of rows, got {type(rows).__name__}")
+        n = int(m.group(1))
+        for pos, (name, row) in enumerate(rows.items()):
+            if not isinstance(row, dict) or not set(_MATCH_FIELDS) <= row.keys():
+                raise ValueError(f"{path}: row {name!r} lacks one of {_MATCH_FIELDS}")
+            green = all(row[f] is True for f in _MATCH_FIELDS) and row.get("err") is None
+            if name not in latest or latest[name][0] < n:
+                latest[name] = (n, pos, green)
+
+    def rank(name: str) -> tuple[int, int, int]:
+        if name not in latest:
+            return (0, 0, 0)
+        n, pos, green = latest[name]
+        return (2 if green else 1, n, pos)
+
+    return sorted(names, key=rank)[:DRIVER_CAP]
+
+
+REGISTRY: dict[str, tuple] = {n: FULL_REGISTRY[n] for n in driver_order(FULL_REGISTRY)}
 
 
 def sf_dependent_sql_builders() -> dict:
@@ -340,11 +140,6 @@ def sf_dependent_sql_builders() -> dict:
         "text_bpe_train_merges": bpe_merges_sql_for,
         "text_bpe_encode": bpe_encode_sql_for,
     }
-
-
-def register(name: str, fn, oracle_sql: str | None) -> None:
-    FULL_REGISTRY[name] = (fn, oracle_sql)
-    REGISTRY[name] = (fn, oracle_sql)
 
 
 def queries():

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -115,11 +116,16 @@ class HudiKeyedTable:
         return f"{self.root}_last_batch_id"
 
     def last_batch_id(self, spark: SparkSession) -> int | None:
+        """The last committed batch id; None only when no marker exists.
+        An unreadable or garbled marker raises: reading it as "no marker"
+        would re-apply committed batches, deletes included."""
         try:
             row = spark.read.text(self._batch_marker_dir).first()
-            return int(row[0]) if row is not None else None
-        except Exception:
-            return None  # marker absent (new table) or unreadable
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
+        return int(row[0]) if row is not None else None
 
     def _write_batch_marker(self, spark: SparkSession, batch_id: int) -> None:
         spark.createDataFrame([(str(batch_id),)], "value string").coalesce(

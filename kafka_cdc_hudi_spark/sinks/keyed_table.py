@@ -295,11 +295,17 @@ class KeyedParquetTable:
         return os.path.join(self.root, "_VERSION")
 
     def _read_pointer(self) -> dict | None:
+        """The committed pointer, or None when the table has none yet.
+        Pointer writes are atomic renames, so a pointer that does not
+        parse is damage, not a torn write: it raises rather than read as
+        "no table" (whose next commit would sweep every version)."""
         try:
             with open(self._pointer_path) as f:
                 return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
+        except FileNotFoundError:
             return None
+        except json.JSONDecodeError as e:
+            raise ValueError(f"corrupt table pointer {self._pointer_path}: {e}") from e
 
     def _savepoints(self, p: dict | None) -> dict[str, int]:
         """Named savepoints from the pointer: {name: version}."""

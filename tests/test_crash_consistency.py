@@ -439,3 +439,26 @@ def test_orphaned_empty_delta_swept_at_next_commit(spark, tmp_path, monkeypatch)
     assert _state(fresh, spark) == S1
     on_disk = sorted(int(d[2:]) for d in os.listdir(fresh.root) if d.startswith("d_"))
     assert on_disk == fresh._resolve(fresh.versions()[-1])[1]
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_garbled_pointer_fails_stop(spark, tmp_path, mode):
+    """A pointer that does not parse is damage, not "no table yet": writes
+    are atomic renames, so no reader sees a torn one. Reading it as absent
+    would let a replayed batch commit as the first version and sweep every
+    older one; instead merge and read raise and every version stays."""
+    t = _mk(tmp_path, mode)
+    t.merge_batch(spark, _batch(spark, B0), batch_id=0)
+    t.merge_batch(spark, _batch(spark, B1), batch_id=1)
+    disk = sorted(os.listdir(t.root))
+    with open(t._pointer_path) as f:
+        text = f.read()
+    with open(t._pointer_path, "w") as f:
+        f.write(text[: len(text) // 2])
+
+    with pytest.raises(ValueError, match="corrupt table pointer"):
+        t.merge_batch(spark, _batch(spark, B1), batch_id=1)
+    with pytest.raises(ValueError, match="corrupt table pointer"):
+        t.read(spark)
+    assert sorted(os.listdir(t.root)) == disk
+    assert sum(d[:2] in ("v_", "d_") for d in disk) >= 2

@@ -35,3 +35,16 @@ def test_hudi_roundtrip_when_available(spark, tmp_path):
     t.merge_batch(spark, df2, batch_id=1)
     state = {r["id"]: r["val"] for r in t.read(spark).collect()}
     assert state == {1: "a2", 3: "c"}
+
+
+def test_batch_marker_only_absent_reads_as_none(spark, tmp_path):
+    """The replay gate: an absent marker is a new table, but a garbled one
+    must raise, or merge_batch would re-apply committed batches.
+    ``last_batch_id`` needs no Hudi bundle."""
+    t = HudiKeyedTable(root=str(tmp_path / "h3"), keys=["id"])
+    assert t.last_batch_id(spark) is None
+    t._write_batch_marker(spark, 7)
+    assert t.last_batch_id(spark) == 7
+    t._write_batch_marker(spark, "7x")
+    with pytest.raises(ValueError):
+        t.last_batch_id(spark)

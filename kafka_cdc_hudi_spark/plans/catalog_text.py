@@ -581,9 +581,9 @@ DEDUP_INCREMENTAL_CANDIDATES_SQL = _incremental_lsh_sql()
 _IVM_UPD_MOD, _IVM_UPD_RES = 11, 4
 _IVM_DEL_MOD, _IVM_DEL_RES = 13, 6
 
-#: session-scoped state stores for the pair-IVM entry, keyed by
-#: (application id, sf_dir) — the CDC script runs once; later calls fold
-#: the persisted delta stream (the same lifecycle/lock rationale as
+#: session-scoped state root for the pair-IVM entry, keyed by
+#: (application id, sf_dir) — the CDC script runs once; later calls read
+#: the maintained pairs table (the same lifecycle/lock rationale as
 #: catalog_cdc._MOR_SCRATCH)
 _PAIR_IVM_STATE: dict = {}
 _PAIR_IVM_LOCK = __import__("threading").Lock()
@@ -595,16 +595,16 @@ def dedup_cdc_pair_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     two thirds of the corpus, then insert the rest plus updates
     (doc_id % 11 == 4 takes its successor's text), then deletes
     (doc_id % 13 == 6) — is fed through ``DedupPairMaintainer``, which
-    per batch retracts the pairs of every changed doc's OLD signature and
-    probes the NEW signatures against the maintained index, emitting a
-    ±1 delta stream. The returned fold (cumulative delta = 1) must equal
-    a full LSH recompute over the final live corpus — which is exactly
-    what the oracle computes, so the driver value-checks the whole IVM
-    algebra (insert/update/delete, retraction, exactly-once fold), not
+    per batch retracts every live pair of a changed doc and probes the NEW
+    signatures against the maintained index, upserting into a keyed pairs
+    table. The returned read of that table must equal a full LSH
+    recompute over the final live corpus — which is exactly what the
+    oracle computes, so the driver value-checks the whole IVM algebra
+    (insert/update/delete, retraction, exactly-once replay gate), not
     just a single-shot query. Per-batch cost is O(changed docs): batch
-    signatures + two bounded band equi-joins + a latest-per-key index
-    fold — the shape that holds when the corpus is 100 TB and the daily
-    churn is 0.1% of it."""
+    signatures + two bounded band equi-joins + changed-key reads of the
+    two MOR tables — the shape that holds when the corpus is 100 TB and
+    the daily churn is 0.1% of it."""
     import tempfile
 
     from kafka_cdc_hudi_spark.streaming.dedup_ivm import DedupPairMaintainer
@@ -614,7 +614,7 @@ def dedup_cdc_pair_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         root = _PAIR_IVM_STATE.get(key)
         if root is None:
             root = tempfile.mkdtemp(prefix="pair_ivm_")
-            m = DedupPairMaintainer(spark, f"{root}/sig_ops", f"{root}/pair_deltas")
+            m = DedupPairMaintainer(spark, f"{root}/index", f"{root}/pairs")
             docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
             did = F.col("doc_id")
 
@@ -647,7 +647,7 @@ def dedup_cdc_pair_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             for bid, bdf in enumerate([b0, b1, b2]):
                 m.process(bdf, bid)
             _PAIR_IVM_STATE[key] = root
-    m = DedupPairMaintainer(spark, f"{root}/sig_ops", f"{root}/pair_deltas")
+    m = DedupPairMaintainer(spark, f"{root}/index", f"{root}/pairs")
     return m.live_pairs_with_est()
 
 

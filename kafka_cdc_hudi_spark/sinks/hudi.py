@@ -104,13 +104,16 @@ class HudiKeyedTable:
     # -- replay guard --------------------------------------------------------
     # Same contract as KeyedParquetTable.merge_batch: an at-least-once
     # foreachBatch replay of an already-committed batch id is a no-op. The
-    # marker lives NEXT TO the table as a one-row text dataset (written via
-    # Spark, so it works on any Hadoop-compatible filesystem, not just
-    # local paths). Written AFTER both Hudi writes — a crash in between
-    # replays the batch, which is safe for precombine upserts and matches
-    # the pure-Spark sink's belt-and-braces stance; unlike the pointer
-    # manifest there is no atomic swap, the Hudi timeline itself remains
-    # the source of truth for data commits.
+    # marker lives NEXT TO the table as a directory of one-row text
+    # datasets, one per batch id (written via Spark, so it works on any
+    # Hadoop-compatible filesystem, not just local paths), and reads as the
+    # max id. A new id lands BESIDE the old one, and the older ids are
+    # deleted only after it has landed: a writer killed mid-write leaves an
+    # uncommitted ``_temporary`` the reader skips, one killed before the
+    # delete leaves both ids, so the marker never reads as "no marker". The
+    # marker is written AFTER both Hudi writes — a crash in between replays
+    # the batch, which is safe for precombine upserts; the Hudi timeline
+    # itself remains the source of truth for data commits.
     @property
     def _batch_marker_dir(self) -> str:
         return f"{self.root}_last_batch_id"
@@ -120,17 +123,29 @@ class HudiKeyedTable:
         An unreadable or garbled marker raises: reading it as "no marker"
         would re-apply committed batches, deletes included."""
         try:
-            row = spark.read.text(self._batch_marker_dir).first()
+            rows = (
+                spark.read.option("recursiveFileLookup", "true")
+                .text(self._batch_marker_dir)
+                .collect()
+            )
         except AnalysisException as e:
             if e.getCondition() == "PATH_NOT_FOUND":
                 return None
             raise
-        return int(row[0]) if row is not None else None
+        return max((int(r[0]) for r in rows), default=None)
 
     def _write_batch_marker(self, spark: SparkSession, batch_id: int) -> None:
         spark.createDataFrame([(str(batch_id),)], "value string").coalesce(
             1
-        ).write.mode("overwrite").text(self._batch_marker_dir)
+        ).write.mode("overwrite").text(f"{self._batch_marker_dir}/{batch_id}")
+        self._drop_older_markers(spark, str(batch_id))
+
+    def _drop_older_markers(self, spark: SparkSession, keep: str) -> None:
+        marker_dir = spark._jvm.org.apache.hadoop.fs.Path(self._batch_marker_dir)
+        fs = marker_dir.getFileSystem(spark._jsc.hadoopConfiguration())
+        for st in fs.listStatus(marker_dir):
+            if st.getPath().getName() != keep:
+                fs.delete(st.getPath(), True)
 
     def merge_batch(
         self, spark: SparkSession, batch: DataFrame, batch_id: int | None = None

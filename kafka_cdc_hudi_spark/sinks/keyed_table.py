@@ -164,6 +164,13 @@ def _sql_columns(fields: Sequence[StructField]) -> str:
     return ", ".join("`" + f.name.replace("`", "``") + "`" for f in fields)
 
 
+#: the incremental maintainers (streaming/scd2.py, bm25_ivm.py, dedup_ivm.py)
+#: push a changed-key set of up to this many keys BELOW the MOR fold as a
+#: :func:`key_set_predicate` (scan-level pruning); larger batches fall back
+#: to semi/anti joins over the fold
+MAX_KEY_LITERALS = 4096
+
+
 def key_set_predicate(rows: Sequence[Sequence], fields: Sequence[StructField]) -> Column:
     """``(k1, ..) IN (rows)`` over the key columns ``fields`` — selects
     exactly what ``isin`` over literals cast to the key types selects.
@@ -956,7 +963,7 @@ class KeyedParquetTable:
         surviving key's fold), so it reaches the parquet scans — row-group
         skipping instead of shuffling the full log to answer a point or
         changed-keys read. The per-batch incremental maintainers
-        (streaming/scd2.py, streaming/bm25_ivm.py) live on this with a
+        (streaming/scd2.py, bm25_ivm.py, dedup_ivm.py) live on this with a
         :func:`key_set_predicate`: their read cost becomes O(affected
         keys' rows), not O(log). Like every sink read, building the frame
         runs no job: the scans take the schemas the commits recorded.

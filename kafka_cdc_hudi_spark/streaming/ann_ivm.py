@@ -4,9 +4,10 @@ The batch ANN entries (``ann_topk_ivf*``) index a STATIC corpus; real
 retrieval corpora are maintained by CDC — documents get re-embedded
 (UPDATE: the vector moves, possibly to another cell) and retired (DELETE:
 it must stop appearing in results). This module is the retrieval-side
-sibling of :mod:`kafka_cdc_hudi_spark.streaming.dedup_ivm`: it maintains
-the IVF cell-assignment index as a keyed table so queries always probe the
-LIVE corpus.
+sibling of :mod:`kafka_cdc_hudi_spark.streaming.dedup_ivm` (whose signature
+index and pair set are keyed tables of the same kind): it maintains the IVF
+cell-assignment index as a keyed table so queries always probe the LIVE
+corpus.
 
 Design — the index is exactly a keyed-upsert maintenance problem, so it
 composes out of two pieces the repo already trusts:

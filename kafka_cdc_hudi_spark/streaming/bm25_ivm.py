@@ -2,9 +2,10 @@
 
 The third maintained retrieval structure, next to the near-dup pair set
 (:mod:`~kafka_cdc_hudi_spark.streaming.dedup_ivm`) and the ANN/IVF index
-(:mod:`~kafka_cdc_hudi_spark.streaming.ann_ivm`): real RAG / hybrid-search
-corpora are CDC-maintained, and the lexical side of hybrid retrieval is a
-BM25 inverted index that must reflect upserts and deletes without a corpus
+(:mod:`~kafka_cdc_hudi_spark.streaming.ann_ivm`), all three kept in MOR
+keyed tables: real RAG / hybrid-search corpora are CDC-maintained, and the
+lexical side of hybrid retrieval is a BM25 inverted index that must
+reflect upserts and deletes without a corpus
 re-tokenize. The reference job keeps only the latest row per key
 (/root/reference/glue/cdc_hudi.py:183-216); this maintains the derived
 index that makes those rows searchable.
@@ -18,7 +19,7 @@ composes out of the repo's standing pieces:
   terms), never a corpus re-scan (the stale-posting read pushes the
   churn-bounded changed-doc set BELOW the MOR fold as a key-literal
   predicate via ``read_where_keys``, the same scan-pruning scheme
-  streaming/scd2.py uses; oversized batches fall back to a semi-join
+  streaming/scd2.py and dedup_ivm.py use; oversized batches fall back to a semi-join
   over the fold). The tombstone/insert pair for a term surviving an
   update is ordered by a doubled sequence (tombstone ``2*seq``, insert
   ``2*seq + 1``) so the sink's precombine resolves them
@@ -67,16 +68,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_cdc_hudi_spark.functions.textfns import tokens
-from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable, key_set_predicate
+from kafka_cdc_hudi_spark.sinks.keyed_table import (
+    MAX_KEY_LITERALS,
+    KeyedParquetTable,
+    key_set_predicate,
+)
 
 #: BM25 constants (Robertson defaults)
 K1, B = 1.2, 0.75
-
-#: batches touching up to this many docs read stale postings through a
-#: doc_id-literal predicate pushed BELOW the MOR fold (scan-level pruning,
-#: sinks/keyed_table.py:read_where_keys); larger batches fall back to the
-#: broadcast semi-join AFTER the fold (same scheme as streaming/scd2.py)
-_MAX_DOC_LITERALS = 4096
 
 
 def _ordered_sum(col_struct_list):
@@ -246,10 +245,10 @@ class Bm25IndexMaintainer:
             #    (r15: this collect doubles as the empty-batch gate — the
             #    old upfront batch.isEmpty() paid one extra execution of
             #    the batch lineage per batch.)
-            changed_rows = changed.limit(_MAX_DOC_LITERALS + 1).collect()
+            changed_rows = changed.limit(MAX_KEY_LITERALS + 1).collect()
             if not changed_rows:
                 return False
-            if len(changed_rows) <= _MAX_DOC_LITERALS:
+            if len(changed_rows) <= MAX_KEY_LITERALS:
                 # one JVM call builds the IN-list (key_set_predicate)
                 existing = self.postings.read_where_keys(
                     spark,

@@ -49,7 +49,11 @@ from pyspark.sql import functions as F
 
 from kafka_cdc_hudi_spark.operators.merge import merge_upsert
 from kafka_cdc_hudi_spark.operators.temporal import scd2_history
-from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable, key_set_predicate
+from kafka_cdc_hudi_spark.sinks.keyed_table import (
+    MAX_KEY_LITERALS,
+    KeyedParquetTable,
+    key_set_predicate,
+)
 
 #: the CDC op's delete flag is stored as DATA (a tombstone EVENT is a
 #: history row, not a deletion of a history row)
@@ -59,12 +63,6 @@ _OP_DELETED = "__op_deleted"
 _HSEQ = "__hseq"
 #: columns the history derives from the events; recomputed every batch
 _DERIVED = ("valid_from", "valid_to", "is_current")
-
-#: batches touching up to this many keys read the history through a
-#: key-literal predicate pushed BELOW the MOR fold (scan-level pruning,
-#: sinks/keyed_table.py:read_where_keys); larger batches fall back to the
-#: broadcast semi-join AFTER the fold
-_MAX_KEY_LITERALS = 4096
 
 
 @dataclass
@@ -146,11 +144,11 @@ class Scd2HistoryMaintainer:
             # past the literal cap may hide a NULL key beyond the collected
             # prefix and pays a separate job.
             affected = b.select(*keys).distinct()
-            aff_rows = affected.limit(_MAX_KEY_LITERALS + 1).collect()
+            aff_rows = affected.limit(MAX_KEY_LITERALS + 1).collect()
             if not aff_rows:
                 return False
             has_null = any(r[k] is None for r in aff_rows for k in keys)
-            if not has_null and len(aff_rows) > _MAX_KEY_LITERALS:
+            if not has_null and len(aff_rows) > MAX_KEY_LITERALS:
                 null_key = None
                 for k in keys:
                     c = F.col(k).isNull()
@@ -168,7 +166,7 @@ class Scd2HistoryMaintainer:
             # batches fall back to the broadcast semi-join above the fold.
             # The IN-list is built in one JVM call for integral/string keys
             # (key_set_predicate), literals typed as the batch's key columns.
-            if len(aff_rows) <= _MAX_KEY_LITERALS:
+            if len(aff_rows) <= MAX_KEY_LITERALS:
                 stored = self.history.read_where_keys(
                     spark, key_set_predicate(aff_rows, affected.schema.fields)
                 )

@@ -7,7 +7,10 @@ small mixed churn (inserts that copy live texts -> new near-dup pairs,
 updates that either clone another doc or scramble -> pairs appear AND
 retract, deletes -> retractions), recording per-batch wall time vs
 changed-doc count, and asserts the IVM invariant (live_pairs == full LSH
-recompute of the live corpus) at checkpoints.
+recompute of the live corpus) at checkpoints. The maintainer keeps its
+signature index and pair set as two MOR keyed tables under one temp root
+(``index/`` and ``pairs/``), so the walls include their compactions
+(every 8th commit).
 
 Run it at two corpus sizes with the SAME absolute churn to read the
 flat-in-corpus-size table:
@@ -76,7 +79,7 @@ def main() -> None:
     next_id = max(live) + 1
     seq = 0
     root = tempfile.mkdtemp(prefix="soak_churn_")
-    m = DedupPairMaintainer(spark, f"{root}/sig_ops", f"{root}/pair_deltas")
+    m = DedupPairMaintainer(spark, f"{root}/index", f"{root}/pairs")
 
     def run_batch(bid: int, rows: list) -> float:
         df = spark.createDataFrame(

@@ -48,3 +48,53 @@ def test_batch_marker_only_absent_reads_as_none(spark, tmp_path):
     t._write_batch_marker(spark, "7x")
     with pytest.raises(ValueError):
         t.last_batch_id(spark)
+
+
+def test_batch_marker_survives_a_killed_writer(spark, tmp_path, monkeypatch):
+    """A marker write killed at any point leaves the last committed id
+    readable: killed after the new id landed but before the older one is
+    deleted, and killed mid-write (only its uncommitted ``_temporary/0``
+    output exists), the marker still reads 7 — never "no marker", which
+    would re-apply committed batches."""
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    class InjectedCrash(RuntimeError):
+        pass
+
+    # torn: the job's tasks wrote their output, its commit never ran, so
+    # everything the write left is still under _temporary/0
+    real_text = DataFrameWriter.text
+
+    def torn_text(self, path, *a, **kw):
+        real_text(self, path, *a, **kw)
+        staged = os.path.join(path, "_temporary", "0")
+        os.makedirs(staged)
+        for name in os.listdir(path):
+            if name != "_temporary":
+                shutil.move(os.path.join(path, name), staged)
+        raise InjectedCrash("killed before the job commit")
+
+    torn = HudiKeyedTable(root=str(tmp_path / "torn"), keys=["id"])
+    torn._write_batch_marker(spark, 7)
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "text", torn_text)
+        with pytest.raises(InjectedCrash):
+            torn._write_batch_marker(spark, 8)
+    assert torn.last_batch_id(spark) == 7
+    torn._write_batch_marker(spark, 8)
+    assert torn.last_batch_id(spark) == 8
+
+    # killed after 7 landed beside 6, before 6 is deleted
+    def dying_drop(self, spark_, keep):
+        raise InjectedCrash("killed before the older marker is deleted")
+
+    undeleted = HudiKeyedTable(root=str(tmp_path / "undeleted"), keys=["id"])
+    undeleted._write_batch_marker(spark, 6)
+    with monkeypatch.context() as mp:
+        mp.setattr(HudiKeyedTable, "_drop_older_markers", dying_drop)
+        with pytest.raises(InjectedCrash):
+            undeleted._write_batch_marker(spark, 7)
+    assert undeleted.last_batch_id(spark) == 7

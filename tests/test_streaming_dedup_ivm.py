@@ -5,17 +5,17 @@ The insert-only streaming ingest (test_streaming_incremental_dedup)
 discovers each pair exactly once but can never change its mind. Real
 corpora are CDC-maintained: documents are UPDATED (their near-dup
 relationships change) and DELETED (their pairs must be retracted). The
-maintainer emits a pair DELTA stream; the invariant pinned here:
+maintainer keeps the pair set as a keyed table; the invariant pinned here:
 
-    after ANY prefix of CDC batches, pairs whose cumulative delta is 1
-    are EXACTLY the full-recompute LSH pairs of the live corpus at that
-    point
+    after ANY prefix of CDC batches, the live pairs are EXACTLY the
+    full-recompute LSH pairs of the live corpus at that point
 
 — i.e. the similarity graph obeys the same IVM contract as the aggregate
 maintainers in operators/incremental.py, at O(changed docs) per batch.
 
 Also pinned: exactly-once under at-least-once replay (re-delivering an
-OLD batch after later ones have run leaves both stores equivalent), and
+OLD batch after later ones have run commits nothing on either keyed
+table), crash consistency at the maintainer's two commits, and
 intra-batch precombine (latest seq per doc wins).
 """
 
@@ -23,7 +23,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, settled_job_ids
 
 
 def _truth_pairs(spark, live: dict[int, str]):
@@ -60,9 +60,7 @@ def test_cdc_pair_ivm_matches_full_recompute(spark, tmp_path):
     base = [i for i in ids if i % 3 != 2]           # arrives in batch 0
     a, b, c = base[0], base[1], base[2]
 
-    m = DedupPairMaintainer(
-        spark, str(tmp_path / "sig_ops"), str(tmp_path / "pair_deltas")
-    )
+    m = DedupPairMaintainer(spark, str(tmp_path / "index"), str(tmp_path / "pairs"))
     live: dict[int, str] = {}
 
     def run(bid, rows):
@@ -74,14 +72,7 @@ def test_cdc_pair_ivm_matches_full_recompute(spark, tmp_path):
                 live[did] = text
         got = {
             (r.doc_a, r.doc_b): round(r.est_jaccard, 9)
-            for r in m.live_pairs()
-            .join(
-                spark.read.parquet(m.pair_deltas_store)
-                .groupBy("doc_a", "doc_b")
-                .agg(F.max("est_jaccard").alias("est_jaccard")),
-                ["doc_a", "doc_b"],
-            )
-            .collect()
+            for r in m.live_pairs_with_est().collect()
         }
         assert got == _truth_pairs(spark, live), f"IVM diverged after batch {bid}"
         return got
@@ -117,16 +108,16 @@ def test_cdc_pair_ivm_matches_full_recompute(spark, tmp_path):
     assert set(p1) - set(p2), "no retraction ever happened — vacuous"
 
     # at-least-once replay of an OLD batch (batch 1) AFTER batch 2 ran:
-    # the bid-partition overwrite + before_bid index fold must leave both
-    # stores equivalent — same live pairs, same per-bid row counts.
-    n_deltas = spark.read.parquet(m.pair_deltas_store).count()
-    n_ops = spark.read.parquet(m.sig_ops_store).count()
+    # the batch-id gate makes it a no-op — no commit on either table, the
+    # same live pairs
+    tables = (m.index, m.pairs)
+    before = [(t.versions(), t.last_batch_id()) for t in tables]
+    assert [lb for _, lb in before] == [2, 2]
     m.process(_batch_df(spark, rows1), 1)
+    assert [(t.versions(), t.last_batch_id()) for t in tables] == before
     assert {
         (r.doc_a, r.doc_b) for r in m.live_pairs().collect()
     } == set(p2), "replay changed the live pair set"
-    assert spark.read.parquet(m.pair_deltas_store).count() == n_deltas
-    assert spark.read.parquet(m.sig_ops_store).count() == n_ops
 
 
 def test_pair_ivm_entry_nonvacuous(spark):
@@ -273,87 +264,173 @@ def test_pair_ivm_under_structured_streaming(spark, tmp_path):
     assert got, "streaming IVM found no pairs — vacuous"
 
 
-def test_crash_between_delta_and_sigops_writes_then_replay(spark, tmp_path):
-    """process() writes pair_deltas/bid=N then sig_ops/bid=N (each an
-    exactly-once per-bid partition overwrite). Kill between the two: the
-    replayed batch folds the signature index from sig_ops BELOW bid=N
-    (untouched by the crash), recomputes, and OVERWRITES both partitions —
-    the stores converge to the same state an uncrashed run reaches."""
+def _small_corpus(spark):
     from kafka_cdc_hudi_spark.sources.tables import load_table
-    from kafka_cdc_hudi_spark.streaming.dedup_ivm import DedupPairMaintainer
 
-    class InjectedCrash(RuntimeError):
-        pass
-
-    corpus = {
+    return {
         int(r.doc_id): r.text
         for r in load_table(spark, SF_DIR, "documents")
         .select("doc_id", "text")
         .filter(F.col("doc_id") < 40)
         .collect()
     }
-    ids = sorted(corpus)
-    m = DedupPairMaintainer(
-        spark, str(tmp_path / "sig_ops"), str(tmp_path / "pair_deltas")
-    )
-    b0 = [("i", i, corpus[i], i) for i in ids]
-    m.process(_batch_df(spark, b0), 0)
 
-    live = dict(corpus)
-    # batch 1: one update (takes a neighbor's text) + one delete
+
+def _crash_script(corpus):
+    """Batch 0 inserts the corpus; batch 1 updates one doc to a neighbor's
+    text and deletes another. Returns both batches and the live corpus
+    after batch 1."""
+    ids = sorted(corpus)
+    b0 = [("i", i, corpus[i], i) for i in ids]
     b1 = [("u", ids[3], corpus[ids[5]], 1000), ("d", ids[7], None, 1001)]
+    live = dict(corpus)
     live[ids[3]] = corpus[ids[5]]
     del live[ids[7]]
+    return b0, b1, live
 
-    # crash AFTER the pair_deltas write, BEFORE the sig_ops write
-    import pyspark.sql.readwriter as rw
 
-    real_parquet = rw.DataFrameWriter.parquet
-    state = {"armed": True}
+class InjectedCrash(RuntimeError):
+    pass
 
-    def parquet_spy(self, path, *a, **k):
-        if state["armed"] and "sig_ops" in path and path.endswith("bid=1"):
-            raise InjectedCrash("dies before sig_ops write")
-        return real_parquet(self, path, *a, **k)
 
-    rw.DataFrameWriter.parquet = parquet_spy
-    try:
-        with pytest.raises(InjectedCrash):
-            m.process(_batch_df(spark, b1), 1)
-    finally:
-        state["armed"] = False
-        rw.DataFrameWriter.parquet = real_parquet
+def test_crash_between_pairs_and_index_commits_then_replay(spark, tmp_path):
+    """process() commits the pairs table, then the index. Kill between the
+    two: the pairs hold batch 1, the index still reads batch 0. The replay
+    recomputes from that index, the pairs table's gate skips its committed
+    side, and the index commit completes — converging on the uncrashed
+    result."""
+    from kafka_cdc_hudi_spark.streaming.dedup_ivm import DedupPairMaintainer
 
-    # partial on-disk state: deltas for bid=1 landed, sig_ops did not
-    import os
+    corpus = _small_corpus(spark)
+    b0, b1, live = _crash_script(corpus)
+    roots = str(tmp_path / "index"), str(tmp_path / "pairs")
+    m = DedupPairMaintainer(spark, *roots)
+    m.process(_batch_df(spark, b0), 0)
 
-    assert os.path.isdir(f"{m.pair_deltas_store}/bid=1")
-    assert not os.path.isdir(f"{m.sig_ops_store}/bid=1")
+    def dying_merge(*a, **kw):
+        raise InjectedCrash("dies before the index commit")
 
-    # replay converges: both partitions overwritten, live pairs == truth
-    m.process(_batch_df(spark, b1), 1)
-    assert os.path.isdir(f"{m.sig_ops_store}/bid=1")
-    got = {(r.doc_a, r.doc_b) for r in m.live_pairs().collect()}
+    m.index.merge_batch = dying_merge
+    with pytest.raises(InjectedCrash):
+        m.process(_batch_df(spark, b1), 1)
+    assert (m.pairs.last_batch_id(), m.index.last_batch_id()) == (1, 0)
+    pairs_versions = m.pairs.versions()
+
+    m2 = DedupPairMaintainer(spark, *roots)
+    m2.process(_batch_df(spark, b1), 1)
+    assert m2.pairs.versions() == pairs_versions, "pairs re-committed on replay"
+    assert m2.index.last_batch_id() == 1
+    got = {(r.doc_a, r.doc_b) for r in m2.live_pairs().collect()}
+    assert got == set(_truth_pairs(spark, live))
+
+
+@pytest.mark.parametrize("table", ["pairs", "index"])
+def test_crash_at_pointer_swap_then_replay(spark, tmp_path, table):
+    """Kill one table's commit for batch 1 after its data files are
+    written, before its pointer swap (the SCD2 history kill point). A
+    fresh maintainer reads exactly what committed before the crash — the
+    batch-0 pairs when the pairs swap dies, the batch-1 pairs when the
+    index swap dies after the pairs committed — and the replay converges
+    on the full recompute."""
+    from kafka_cdc_hudi_spark.streaming.dedup_ivm import DedupPairMaintainer
+
+    corpus = _small_corpus(spark)
+    b0, b1, live = _crash_script(corpus)
+    roots = str(tmp_path / "index"), str(tmp_path / "pairs")
+    m = DedupPairMaintainer(spark, *roots)
+    m.process(_batch_df(spark, b0), 0)
+    pairs0 = {(r.doc_a, r.doc_b) for r in m.live_pairs().collect()}
+    assert pairs0 == set(_truth_pairs(spark, corpus))
+
+    victim = getattr(m, table)
+    real = victim._write_pointer
+
+    def dying(version, batch_id, *a, **kw):
+        if batch_id == 1:
+            raise InjectedCrash(f"{table} pointer swap dies")
+        return real(version, batch_id, *a, **kw)
+
+    victim._write_pointer = dying
+    with pytest.raises(InjectedCrash):
+        m.process(_batch_df(spark, b1), 1)
+    assert victim.last_batch_id() == 0
+
+    m2 = DedupPairMaintainer(spark, *roots)
+    assert m2.index.last_batch_id() == 0
     want = set(_truth_pairs(spark, live))
-    assert got == want
+    committed = pairs0 if table == "pairs" else want
+    assert {(r.doc_a, r.doc_b) for r in m2.live_pairs().collect()} == committed
+    m2.process(_batch_df(spark, b1), 1)
+    assert (m2.pairs.last_batch_id(), m2.index.last_batch_id()) == (1, 1)
+    assert {(r.doc_a, r.doc_b) for r in m2.live_pairs().collect()} == want
 
 
-def test_live_index_empty_only_when_no_store(spark, tmp_path):
-    """No store (absent, or only a torn first write under ``_temporary``)
-    is an empty index; a committed file with a corrupt footer raises
-    instead of pairing the batch against nothing."""
-    import shutil
+def test_corrupt_index_file_raises(spark, tmp_path):
+    """A committed index file with a corrupt footer fails the batch instead
+    of pairing it against a partial index, and neither table commits."""
+    from kafka_cdc_hudi_spark.streaming.dedup_ivm import DedupPairMaintainer
 
-    from kafka_cdc_hudi_spark.streaming.dedup_ivm import live_index
-
-    assert live_index(spark, str(tmp_path / "absent")) is None
-    src = tmp_path / "src"
-    spark.range(3).selectExpr("id AS doc_id", "'u' AS op").write.parquet(str(src))
-    shutil.copytree(src, tmp_path / "torn" / "bid=0" / "_temporary" / "0")
-    assert live_index(spark, str(tmp_path / "torn")) is None
-    shutil.copytree(src, tmp_path / "corrupt" / "bid=0", ignore=shutil.ignore_patterns("*.crc"))
-    for f in (tmp_path / "corrupt" / "bid=0").glob("*.parquet"):
+    corpus = _small_corpus(spark)
+    b0, b1, _ = _crash_script(corpus)
+    m = DedupPairMaintainer(spark, str(tmp_path / "index"), str(tmp_path / "pairs"))
+    m.process(_batch_df(spark, b0), 0)
+    files = list((tmp_path / "index").glob("*/*.parquet"))
+    assert files
+    for f in files:
         b = f.read_bytes()
         f.write_bytes(b[:-8] + bytes(4) + b[-4:])  # zero footer length, keep magic
-    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
-        live_index(spark, str(tmp_path / "corrupt"))
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        m.process(_batch_df(spark, b1), 1)
+    assert (m.pairs.last_batch_id(), m.index.last_batch_id()) == (0, 0)
+
+
+def test_over_cap_batches_use_joins(spark, tmp_path, monkeypatch):
+    """Batches past the key-literal cap read the stale pairs and the
+    surviving index through semi/anti joins over the full folds instead of
+    the pushed-down predicate — same pair set."""
+    from kafka_cdc_hudi_spark.streaming import dedup_ivm
+
+    monkeypatch.setattr(dedup_ivm, "MAX_KEY_LITERALS", 1)
+    corpus = _small_corpus(spark)
+    b0, b1, live = _crash_script(corpus)
+    # also move one member of a batch-0 pair to a unique text: a retraction
+    pairs0 = set(_truth_pairs(spark, corpus))
+    moved = min(pairs0)[0]
+    b1.append(("u", moved, "entirely novel text " + "x y z w " * 30, 1002))
+    live[moved] = b1[-1][2]
+    m = dedup_ivm.DedupPairMaintainer(spark, str(tmp_path / "index"), str(tmp_path / "pairs"))
+    m.process(_batch_df(spark, b0), 0)
+    m.process(_batch_df(spark, b1), 1)
+    got = {(r.doc_a, r.doc_b) for r in m.live_pairs().collect()}
+    assert got == set(_truth_pairs(spark, live))
+    assert pairs0 - got, "batch 1 retracted nothing — vacuous"
+
+
+def test_pair_ivm_warm_batch_job_count(spark, tmp_path):
+    """A warm 10-doc update batch over the fixture corpus runs at most 16
+    Spark jobs: the changed-id collect (which is also the empty-batch
+    gate), then one MOR commit per table. The changed ids reach both reads
+    as a key-literal predicate below the MOR fold, and the retracted pairs
+    come from the pairs table, not from re-probing old signatures. Kept as
+    a bid-partition op log with whole-log folds, the same batch ran 22."""
+    from kafka_cdc_hudi_spark.sources.tables import load_table
+    from kafka_cdc_hudi_spark.streaming.dedup_ivm import DedupPairMaintainer
+
+    corpus = {
+        int(r.doc_id): r.text
+        for r in load_table(spark, SF_DIR, "documents").select("doc_id", "text").collect()
+    }
+    ids = sorted(corpus)
+    m = DedupPairMaintainer(spark, str(tmp_path / "index"), str(tmp_path / "pairs"))
+    m.process(_batch_df(spark, [("i", i, corpus[i], i) for i in ids]), 0)
+    per_batch = []
+    for bid in range(1, 4):
+        rows = [
+            ("u", d, corpus[ids[(k * 7 + bid) % len(ids)]] + f" v{bid}", 10_000 * bid + k)
+            for k, d in enumerate(ids[bid * 10 : bid * 10 + 10])
+        ]
+        before = settled_job_ids(spark)
+        m.process(_batch_df(spark, rows), bid)
+        per_batch.append(len(settled_job_ids(spark) - before))
+    assert per_batch[-1] <= 16, per_batch
+    assert m.pairs.last_batch_id() == m.index.last_batch_id() == 3

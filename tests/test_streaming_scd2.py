@@ -170,9 +170,9 @@ class TestStoredTombstones:
         """A second batch past the key-literal cap reads the stored rows
         through the broadcast semi-join, over keys that already have
         history: updates, deletes and late events on every stored key."""
-        from kafka_cdc_hudi_spark.streaming.scd2 import _MAX_KEY_LITERALS
+        from kafka_cdc_hudi_spark.sinks.keyed_table import MAX_KEY_LITERALS
 
-        n = _MAX_KEY_LITERALS + 50
+        n = MAX_KEY_LITERALS + 50
         m = Scd2HistoryMaintainer(
             root=str(tmp_path / "oc"), keys=["id"], ts_col="mtime",
             tiebreakers=["val"], history_mode=history_mode, n_buckets=4,
@@ -350,10 +350,10 @@ class TestAdviceR9:
         prefix of the keys, so a NULL key beyond it must still be caught
         (by the separate NULL-key job) before the history commit; the same
         batch without the NULL commits through the semi-join path."""
-        from kafka_cdc_hudi_spark.streaming.scd2 import _MAX_KEY_LITERALS
+        from kafka_cdc_hudi_spark.sinks.keyed_table import MAX_KEY_LITERALS
 
         m = Scd2HistoryMaintainer(root=str(tmp_path / "cap"), keys=["id"], ts_col="mtime")
-        n = _MAX_KEY_LITERALS + 904
+        n = MAX_KEY_LITERALS + 904
         rows = spark.range(n).selectExpr(
             "id", "10L AS mtime", "'v' AS val", "false AS _deleted"
         )

@@ -16,8 +16,6 @@ from __future__ import annotations
 
 import struct
 
-AVI_MAGIC = b"RIFF"
-
 
 def _chunk(fourcc: bytes, payload: bytes) -> bytes:
     pad = b"\x00" if len(payload) % 2 else b""  # RIFF chunks are word-aligned

@@ -29,16 +29,6 @@ _GZIP_MAGIC = b"\x1f\x8b"
 _CRLF = b"\r\n"
 
 
-def is_warc(data: bytes) -> bool:
-    if data[:2] == _GZIP_MAGIC:
-        try:
-            head = zlib.decompressobj(wbits=31).decompress(data, 16)
-        except zlib.error:
-            return False
-        return head[:5] == b"WARC/"
-    return data[:5] == b"WARC/"
-
-
 def split_gzip_members(data: bytes) -> list[bytes]:
     """Split a multi-member gzip stream into DECOMPRESSED members via the
     decompressor's ``unused_data`` hand-off."""

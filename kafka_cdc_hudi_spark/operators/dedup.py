@@ -66,61 +66,6 @@ def latest_per_key_agg(
     return agg.select("__row.*")
 
 
-def topk_per_key(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    k: int,
-    tiebreakers: Sequence[str] = (),
-) -> DataFrame:
-    """Top-k rows per key by descending (order_col, tiebreakers) — direct
-    window strategy (one shuffle; ``WindowGroupLimit`` prunes to a running
-    top-k per task before the sort)."""
-    order = [F.col(order_col).desc_nulls_last()] + [
-        F.col(t).desc_nulls_last() for t in tiebreakers
-    ]
-    w = Window.partitionBy(*[F.col(c) for c in keys]).orderBy(*order)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
-
-
-def topk_per_key_salted(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    k: int,
-    tiebreakers: Sequence[str] = (),
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Skew-resistant top-k per key: two phases.
-
-    Phase 1 windows over (key, salt) so a hot key's rows are spread across
-    ``salt_buckets`` tasks, each keeping only its local top-k; phase 2 runs
-    the exact top-k over the surviving ``k * salt_buckets`` rows per key.
-    The second shuffle moves at most ``k * salt_buckets`` rows per key no
-    matter how hot the key was — the standard salting pattern for windowed
-    ranking where a single key would otherwise pin one task
-    (partial aggregation cannot help ``row_number``).
-
-    Salt is derived deterministically from a hash of ALL columns, so results
-    are stable run-to-run AND rows sharing the ordering value still spread
-    across buckets — salting by the ordering columns alone would collapse a
-    hot key with one repeated mtime into a single bucket, which is exactly
-    the skewed shape this function exists for. Equal to :func:`topk_per_key`
-    whenever (order_col, tiebreakers) is unique per row.
-    """
-    salt = F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(salt_buckets)).alias(
-        "__salt"
-    )
-    phase1 = topk_per_key(
-        df.withColumn("__salt", salt),
-        [*keys, "__salt"],
-        order_col,
-        k,
-        tiebreakers,
-    ).drop("__salt")
-    return topk_per_key(phase1, keys, order_col, k, tiebreakers)
-
-
 def pairs_within_groups_salted(
     df: DataFrame,
     group_cols: Sequence[str],

@@ -47,29 +47,6 @@ def _srp_planes(dim: int, n_bits: int, table: int, seed: str = "srp") -> np.ndar
     return planes
 
 
-def srp_signature_col(dim: int, n_bits: int, table: int, col: str = "embedding") -> F.Column:
-    """Signature of ONE table as a native expression: sign bits of plane
-    dot-products packed into a long, each dot an unrolled left-to-right
-    ``element_at`` sum parsed from a single SQL string. Kept as the
-    pure-relational reference implementation (tests pin it bit-equal to
-    the vectorized path); :func:`srp_bucketize` uses
-    :func:`_srp_sigs_udf` instead — measured at 32 planes x 64 dims,
-    BOTH relational forms are pathological: the ``zip_with``+``aggregate``
-    fold is interpreted per element (per-ROW cost), and this unrolled
-    2048-term tree costs a multi-second per-QUERY optimizer/codegen
-    constant."""
-    planes = _srp_planes(dim, n_bits, table)
-    bits = []
-    for b in range(n_bits):
-        dot = " + ".join(
-            f"CAST(element_at({col}, {j + 1}) AS DOUBLE)"
-            f" * CAST('{float(planes[b][j])!r}' AS DOUBLE)"
-            for j in range(dim)
-        )
-        bits.append(f"(CASE WHEN ({dot}) > 0.0D THEN {2 ** b}L ELSE 0L END)")
-    return F.expr("(" + " + ".join(bits) + ")")
-
-
 def _srp_sigs_udf(dim: int, n_bits: int, n_tables: int, seed: str = "srp"):
     """All n_tables signatures in one Arrow-batched numpy kernel — the
     dense-linear-algebra path (32 plane dots per row is a matmul, not a

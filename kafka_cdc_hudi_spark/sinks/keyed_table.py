@@ -63,6 +63,13 @@ drops the tombstone — Hudi's own MOR log-merge behavior
 (ordering-value precombine against delete markers), whereas COW filters
 deletes at each commit so the older insert would resurrect the row.
 
+Reads (every layout, every reader: :meth:`_snapshot`): ``read``,
+``read_where_keys``, ``read_keys`` and ``read_range`` share one snapshot
+scan — the layout's files (a bucket map, a stats-pruned base, or base +
+deltas) with an optional key-column predicate applied below the fold —
+so each restricted reader equals ``read().filter(...)`` of its predicate.
+Before the first commit every reader returns None.
+
 Exactly-once on top of at-least-once ``foreachBatch``: the pointer records
 the last merged streaming batch id; replaying an already-committed batch is
 a no-op (SURVEY §7 hard-part 5). The merge itself is also idempotent, so
@@ -191,6 +198,19 @@ def key_set_predicate(rows: Sequence[Sequence], fields: Sequence[StructField]) -
         for r in rows
     ]
     return F.struct(*[F.col(f.name).alias(f.name) for f in fields]).isin(lits)
+
+
+def _may_overlap(bounds: list | None, overlaps) -> bool:
+    """Whether a file whose indexed [min, max] for a column is ``bounds``
+    can hold a row ``overlaps(min, max)`` asks for. An unindexed file, or
+    bounds that no longer compare after the JSON round trip, count as
+    yes (conservative)."""
+    if not bounds:
+        return True
+    try:
+        return bool(overlaps(*bounds))
+    except TypeError:
+        return True
 
 
 def _dir_bytes(path: str) -> int:
@@ -551,12 +571,19 @@ class KeyedParquetTable:
         ``versions``. Every sink read goes through here: it passes the
         union of those commits' recorded schemas, so building the
         DataFrame runs no Spark job (Spark otherwise runs one
-        footer-inference job per ``read.parquet``). Commits without a
-        recorded schema fall back to ``mergeSchema`` inference, which
-        also covers cross-version drift."""
+        footer-inference job per ``read.parquet``). With no path (a
+        pruned-away or emptied snapshot) it is an empty local relation of
+        that schema: it opens no file, and a ``count()`` runs one 1-task
+        job where an empty ``createDataFrame`` runs one task per core.
+        Commits without a recorded schema fall back to ``mergeSchema``
+        inference, which also covers cross-version drift (and raises when
+        there is no file to infer from)."""
         schema = self._recorded_schema(p, versions)
         if schema is None:
             return spark.read.option("mergeSchema", "true").parquet(*paths)
+        if not paths:
+            nulls = [F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+            return spark.range(1).select(*nulls).filter(F.lit(False))
         return spark.read.schema(schema).parquet(*paths)
 
     def _stats_cols(self) -> list[str]:
@@ -699,193 +726,77 @@ class KeyedParquetTable:
             for v, m in p.get("bucket_maps", {}).items()
         }
 
-    def _bucket_path(self, holder: int, bucket: int) -> str:
-        return os.path.join(self._version_dir(holder), f"{_BUCKET_COL}={bucket}")
+    def _snapshot(
+        self, spark: SparkSession, p: dict, version: int, where: Column | None = None,
+        prune: tuple | None = None, buckets: Sequence[int] | None = None,
+    ) -> DataFrame:
+        """The committed state at ``version``: the one read path every
+        reader shares, and the only read code that branches on layout.
 
-    def _read_bucketed(self, spark: SparkSession, p: dict, version: int) -> DataFrame:
-        maps = self._bucket_maps(p)
-        if version not in maps:
-            raise FileNotFoundError(
-                f"version {version} not available (bucket-map retention keeps "
-                f"{self.keep_versions}; latest is {p['version']})"
-            )
-        bmap = maps[version]
-        if not bmap:
-            raise FileNotFoundError(
-                f"version {version} has no data (all keys deleted)"
-            )
-        paths = [self._bucket_path(hv, b) for b, hv in sorted(bmap.items())]
-        # leaf-dir reads drop the hive partition column — by design, the
-        # bucket id is layout, not data; the holders' recorded schemas
-        # union to cover cross-version drift
-        return self._scan(spark, p, bmap.values(), paths)
+        - Bucketed: the version's bucket map, restricted to ``buckets``
+          when given (path-level pruning, O(requested buckets) I/O).
+        - Plain base without pending deltas (COW, compacted MOR): the base
+          directory, minus the files the pointer's ``file_stats`` index
+          rules out for ``prune=(col, overlaps)``: a file is dropped only
+          when its [min, max] for ``col`` is indexed, comparable after the
+          JSON round trip, and ``overlaps(min, max)`` is false.
+        - MOR with pending deltas: the base + delta fold (:meth:`_fold`),
+          never stats-pruned (a pending delta can update any key).
 
-    def _stats_keep_files(self, vdir: str, stats_all: dict, col: str, overlaps):
-        """Shared file-skipping core for point lookups and range slices:
-        a file survives when the index has no entry for ``col``
-        (conservative), its [lo, hi] satisfies ``overlaps``, or its
-        bounds are incomparable after the JSON round trip. Returns
-        (all_names, kept_names) or None when the directory is unreadable."""
-        try:
-            names = sorted(n for n in os.listdir(vdir) if n.endswith(".parquet"))
-        except OSError:
-            return None
-        keep: list[str] = []
-        for name in names:
-            st = (stats_all.get(name) or {}).get(col)
-            if not st:
-                keep.append(name)  # unindexed file: include conservatively
-                continue
-            try:
-                if overlaps(st[0], st[1]):
-                    keep.append(name)
-            except TypeError:
-                keep.append(name)  # incomparable after JSON round trip
-        return names, keep
-
-    def read_range(self, spark: SparkSession, col: str, lo, hi) -> DataFrame:
-        """Range slice ``lo <= col <= hi`` with file-level skipping: on a
-        COW table whose pointer carries the column-stats index, only the
-        base files whose [min, max] for ``col`` overlap the range are
-        opened (with ``cluster_range_files`` layouts that is the touched
-        slice of the table, not all of it); the predicate is then applied
-        normally, so parquet row-group pruning still works inside the kept
-        files. Falls back to a full snapshot read + filter wherever the
-        index can't prune safely (MOR pending deltas, bucketed layout,
-        missing stats) — same results, more I/O."""
-        pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-        if self.mode == MODE_COW:
-            p = self._read_pointer()
-            stats_all = (p or {}).get("file_stats", {}).get(str(p["version"])) if p else None
-            if stats_all:
-                vdir = self._version_dir(p["version"])
-                kept = self._stats_keep_files(
-                    vdir, stats_all, col, lambda flo, fhi: flo <= hi and lo <= fhi
-                )
-                if kept is not None:
-                    names, keep = kept
-                    if names and not keep:
-                        return self._scan(spark, p, [p["version"]], [vdir]).filter(F.lit(False))
-                    if names and len(keep) < len(names):
-                        return self._scan(
-                            spark, p, [p["version"]], [os.path.join(vdir, n) for n in keep]
-                        ).filter(pred)
-        return self.read(spark).filter(pred)
-
-    def read_keys(self, spark: SparkSession, key_values: Sequence[Sequence]) -> DataFrame:
-        """Primary-key point lookups. On a bucketed table this reads ONLY
-        the bucket files that can contain the requested keys (path-level
-        pruning via the bucket map — O(requested buckets) I/O regardless
-        of table size, the random-access path a 100 TB keyed table needs;
-        full scans stay the :meth:`read` API). COW/MOR tables fall back to
-        a filtered snapshot read: their single predicate still pushes to
-        the parquet scan, but every file is consulted.
-
-        ``key_values``: one tuple per lookup, positionally matching
-        ``self.keys``. Bucket assignment for the literals runs through the
-        SAME ``_bucket_expr`` column, so Python never re-implements
-        xxhash64; for integral and string keys the literals form an inline
-        VALUES table the planner folds the hash into, so no job runs
-        (other key types pay a #keys-row local job)."""
-        rows = [tuple(kv) for kv in key_values]
-        if not rows:
-            raise ValueError("read_keys: no keys given")
-
-        def _match(df: DataFrame) -> DataFrame:
-            # literals typed as the table's key columns: an INT literal vs
-            # a BIGINT column is a struct-IN type mismatch, not a coercion
-            return df.filter(key_set_predicate(rows, df.select(*self.keys).schema.fields))
-
-        if self.mode == MODE_COW:
-            pruned = self._cow_stats_pruned(spark, rows)
-            if pruned is not None:
-                return _match(pruned)
-        if self.mode != MODE_COW_BUCKETED:
-            return _match(self.read(spark))
-        p = self._read_pointer()
-        if p is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        bmap = self._bucket_maps(p).get(p["version"], {})
-        snapshot = self._read_bucketed(spark, p, p["version"])
-        key_schema = snapshot.select(*self.keys).schema
-        # typed literals through the real bucket expression (type-faithful:
-        # xxhash64(int) != xxhash64(bigint))
-        tuples = _sql_tuples(rows, key_schema.fields)
-        if tuples is None:
-            probe = spark.createDataFrame(rows, key_schema)
+        ``where`` is a predicate over KEY columns only, applied to the
+        scans, below the fold on MOR. That is safe because the fold is
+        strictly per-key: dropping whole keys before folding cannot change
+        any surviving key's fold. Raises FileNotFoundError for a version
+        past the pointer or outside retention."""
+        if version > p["version"]:
+            # a higher-numbered dir is an in-flight or crashed write, not a
+            # committed snapshot
+            raise FileNotFoundError(f"version {version} not committed (latest is {p['version']})")
+        bucketed = self.mode == MODE_COW_BUCKETED
+        if bucketed:
+            bmap = self._bucket_maps(p).get(version)
+            retained = bmap is not None
         else:
-            probe = spark.sql(
-                f"SELECT * FROM VALUES {tuples} AS t({_sql_columns(key_schema.fields)})"
+            base, deltas = self._resolve(version, p)
+            retained = (deltas[-1] if deltas else base) == version
+        if not retained:
+            raise FileNotFoundError(
+                f"version {version} not available (retention keeps {self.keep_versions}; "
+                f"latest is {p['version']})"
             )
-        buckets = sorted(
-            {r["b"] for r in probe.select(self._bucket_expr().alias("b")).collect()}
-        )
-        held = [b for b in buckets if b in bmap]
-        if not held:
-            return _match(snapshot.filter(F.lit(False)))
-        pruned = self._scan(
-            spark, p, [bmap[b] for b in held], [self._bucket_path(bmap[b], b) for b in held]
-        )
-        return _match(pruned)
-
-    def _cow_stats_pruned(self, spark: SparkSession, rows: list[tuple]) -> DataFrame | None:
-        """COW point-lookup file pruning via the pointer's column-stats
-        index: keep only base files whose [min, max] for the first key
-        column can contain a requested value (plus any file the index
-        doesn't cover — conservative). Returns None when the index can't
-        prune safely (no pointer, no stats for the current version), in
-        which case the caller scans the full snapshot. MOR is excluded by
-        the caller: pending deltas must always be folded, so its lookups
-        go through :meth:`read`. With ``cluster_range_files`` layouts the
-        index reduces a point lookup to ~1 file regardless of table size;
-        on hash-laid-out tables every file spans the key domain and the
-        index degrades to the full-scan behavior."""
-        p = self._read_pointer()
-        if p is None:
-            return None
-        stats_all = (p.get("file_stats") or {}).get(str(p["version"]))
-        if not stats_all:
-            return None
-        vdir = self._version_dir(p["version"])
-        vals = {r[0] for r in rows}
-        kept = self._stats_keep_files(
-            vdir,
-            stats_all,
-            self.keys[0],
-            lambda lo, hi: any(lo <= v <= hi for v in vals),
-        )
-        if kept is None:
-            return None
-        names, keep = kept
-        if not keep:
-            # schema-only read: no file can contain any requested key
-            return self._scan(spark, p, [p["version"]], [vdir]).filter(F.lit(False))
-        if len(keep) == len(names):
-            return self._scan(spark, p, [p["version"]], [vdir])
-        return self._scan(spark, p, [p["version"]], [os.path.join(vdir, n) for n in keep])
+        if bucketed:
+            held = sorted(bmap.keys() if buckets is None else set(buckets) & bmap.keys())
+            # leaf-dir reads drop the hive partition column: the bucket id
+            # is layout, not data. The schema is the whole snapshot's (its
+            # holders' recorded schemas), so a restricted read has the
+            # columns of a full one; an emptied table has its commit's
+            versions = list(bmap.values()) or [version]
+            paths = [os.path.join(self._version_dir(bmap[b]), f"{_BUCKET_COL}={b}") for b in held]
+        elif deltas:
+            return self._fold(spark, p, base, deltas, pre_filter=where)
+        else:
+            versions, paths = [base], [self._version_dir(base)]
+            stats = (p.get("file_stats") or {}).get(str(base)) if prune else None
+            if stats:  # names every parquet file of the base (harvested at write)
+                col, overlaps = prune
+                keep = [n for n, s in sorted(stats.items()) if _may_overlap(s.get(col), overlaps)]
+                if len(keep) < len(stats):
+                    paths = [os.path.join(paths[0], n) for n in keep]
+        df = self._scan(spark, p, versions, paths)
+        return df if where is None else df.filter(where)
 
     def _merge_batch_bucketed(
         self, spark: SparkSession, batch: DataFrame, batch_id: int | None, p: dict | None
     ) -> bool:
         t0 = time.monotonic()
-        old_map = self._bucket_maps(p).get(p["version"], {}) if p is not None else {}
         touched = sorted(
             r[_BUCKET_COL]
             for r in batch.select(self._bucket_expr().alias(_BUCKET_COL))
             .distinct()
             .collect()
         )
-        held = [b for b in touched if b in old_map]
-        existing = (
-            self._scan(
-                spark, p, [old_map[b] for b in held],
-                [self._bucket_path(old_map[b], b) for b in held],
-            )
-            if held
-            else None
-        )
         merged = merge_upsert(
-            existing,
+            None if p is None else self._snapshot(spark, p, p["version"], buckets=touched),
             batch,
             self.keys,
             order_col=self.order_col,
@@ -914,6 +825,8 @@ class KeyedParquetTable:
         """Current state, or a past snapshot via ``version`` (time travel —
         any version still within the ``keep_versions`` retention horizon;
         mirrors Hudi/Delta incremental-query capability on the COW layout).
+        None before the first commit; a table whose every key was deleted
+        reads as an empty frame.
 
         ``read_optimized=True`` (MOR only) reads the latest base snapshot
         and SKIPS the delta fold — Hudi's ``_ro`` query type: stale up to
@@ -925,61 +838,87 @@ class KeyedParquetTable:
         p = self._read_pointer()
         if p is None:
             return None
-        v = p["version"] if version is None else version
         if self.mode == MODE_MOR and read_optimized and version is None:
             base, _deltas = self._resolve(p["version"], p)
-            if base is None:
-                return None
-            return self._scan(spark, p, [base], [self._version_dir(base)])
-        if self.mode == MODE_COW_BUCKETED:
-            return self._read_bucketed(spark, p, v)
-        if v > p["version"]:
-            # never read past the committed pointer: a higher-numbered dir is
-            # an in-flight or crashed write, not a committed snapshot
-            raise FileNotFoundError(
-                f"version {v} not committed (latest is {p['version']})"
-            )
-        base, deltas = self._resolve(v, p)
-        if not deltas:
-            if base != v or base is None:
-                raise FileNotFoundError(
-                    f"version {v} not available (retention keeps {self.keep_versions}; "
-                    f"latest is {p['version']})"
-                )
-            return self._scan(spark, p, [base], [self._version_dir(base)])
-        if deltas[-1] != v and base != v:
-            raise FileNotFoundError(
-                f"version {v} not available (retention keeps {self.keep_versions}; "
-                f"latest is {p['version']})"
-            )
-        return self._fold(spark, p, base, deltas)
+            return None if base is None else self._snapshot(spark, p, base)
+        return self._snapshot(spark, p, p["version"] if version is None else version)
 
-    def read_where_keys(self, spark: SparkSession, predicate) -> DataFrame | None:
+    def read_where_keys(self, spark: SparkSession, predicate: Column) -> DataFrame | None:
         """Current state restricted to keys satisfying ``predicate`` — a
         Column expression over KEY columns only. Semantically identical to
-        ``read(spark).filter(predicate)``, but on a MOR table the predicate
-        is applied BELOW the delta fold (safe because the fold is strictly
-        per-key: dropping whole keys before folding cannot change any
-        surviving key's fold), so it reaches the parquet scans — row-group
-        skipping instead of shuffling the full log to answer a point or
-        changed-keys read. The per-batch incremental maintainers
-        (streaming/scd2.py, bm25_ivm.py, dedup_ivm.py) live on this with a
-        :func:`key_set_predicate`: their read cost becomes O(affected
-        keys' rows), not O(log). Like every sink read, building the frame
-        runs no job: the scans take the schemas the commits recorded.
-        COW/bucketed modes delegate to ``read().filter`` (already
-        scan-pruned by normal pushdown)."""
+        ``read(spark).filter(predicate)``, but the predicate is applied to
+        the scans, BELOW the delta fold on a MOR table, so it reaches the
+        parquet readers — row-group skipping instead of shuffling the full
+        log to answer a point or changed-keys read. The per-batch
+        incremental maintainers (streaming/scd2.py, bm25_ivm.py,
+        dedup_ivm.py) live on this with a :func:`key_set_predicate`: their
+        read cost becomes O(affected keys' rows), not O(log). None when the
+        table has no commit."""
+        p = self._read_pointer()
+        return None if p is None else self._snapshot(spark, p, p["version"], where=predicate)
+
+    def read_keys(self, spark: SparkSession, key_values: Sequence[Sequence]) -> DataFrame | None:
+        """Primary-key point lookups: ``read(spark)`` restricted to the
+        given keys, the key set pushed into the scans as a
+        :func:`key_set_predicate` (below the fold on MOR) after pruning
+        files. A bucketed table reads ONLY the requested keys' bucket files
+        (O(requested buckets) I/O regardless of table size — the
+        random-access path a 100 TB keyed table needs); a plain base (COW,
+        compacted MOR) keeps only the files whose first-key [min, max] can
+        hold a requested value (~1 file with ``cluster_range_files``
+        layouts, every file on hash-laid-out tables).
+
+        ``key_values``: one tuple per lookup, positionally matching
+        ``self.keys``. None when the table has no commit."""
+        rows = [tuple(kv) for kv in key_values]
+        if not rows:
+            raise ValueError("read_keys: no keys given")
         p = self._read_pointer()
         if p is None:
             return None
-        if self.mode != MODE_MOR:
-            return self.read(spark).filter(predicate)
-        base, deltas = self._resolve(p["version"], p)
-        if not deltas:
-            if base is None:
-                return None
-            return self._scan(spark, p, [base], [self._version_dir(base)]).filter(predicate)
-        return self._fold(spark, p, base, deltas, pre_filter=predicate)
+        # literals typed as the table's key columns (an INT literal vs a
+        # BIGINT column is a struct-IN type mismatch, not a coercion), read
+        # from the latest commit's recorded schema: no second plan to build
+        schema = self._recorded_schema(p, [p["version"]]) or self._snapshot(spark, p, p["version"]).schema
+        fields = [StructField(k, schema[k].dataType) for k in self.keys]  # nullable, like a scan's
+        buckets = None
+        if self.mode == MODE_COW_BUCKETED:
+            # bucket ids through the SAME _bucket_expr over typed literals
+            # (xxhash64(int) != xxhash64(bigint)), so Python never
+            # re-implements xxhash64. Integral and string keys form an
+            # inline VALUES table the planner folds the hash into, so no
+            # job runs; other key types pay a #keys-row local job
+            tuples = _sql_tuples(rows, fields)
+            if tuples is None:
+                probe = spark.createDataFrame(rows, StructType(list(fields)))
+            else:
+                probe = spark.sql(f"SELECT * FROM VALUES {tuples} AS t({_sql_columns(fields)})")
+            buckets = [r["b"] for r in probe.select(self._bucket_expr().alias("b")).collect()]
+        vals = {r[0] for r in rows}
+        return self._snapshot(
+            spark, p, p["version"], where=key_set_predicate(rows, fields),
+            prune=(self.keys[0], lambda lo, hi: any(lo <= v <= hi for v in vals)),
+            buckets=buckets,
+        )
+
+    def read_range(self, spark: SparkSession, col: str, lo, hi) -> DataFrame | None:
+        """Range slice ``lo <= col <= hi``: ``read(spark).filter(...)``
+        with file-level skipping. On a plain base (COW, compacted MOR)
+        whose pointer carries the column-stats index, only the files whose
+        [min, max] for ``col`` overlap the range are opened (with
+        ``cluster_range_files`` layouts that is the touched slice of the
+        table, not all of it); parquet row-group pruning still works
+        inside the kept files. When ``col`` is a key column the predicate
+        is also applied below the MOR fold. None when the table has no
+        commit."""
+        p = self._read_pointer()
+        if p is None:
+            return None
+        pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
+        prune = (col, lambda flo, fhi: flo <= hi and lo <= fhi)
+        if col in self.keys:
+            return self._snapshot(spark, p, p["version"], where=pred, prune=prune)
+        return self._snapshot(spark, p, p["version"], prune=prune).filter(pred)
 
     def _fold(
         self,
@@ -998,8 +937,8 @@ class KeyedParquetTable:
         schemas (a column added by a later delta reads as null in the
         earlier ones), the base scan with the base's — no inference job
         (:meth:`_scan`). ``pre_filter`` (key-column predicate, see
-        :meth:`read_where_keys`) is applied to the base and delta scans
-        BEFORE the fold."""
+        :meth:`_snapshot`) is applied to the base and delta scans BEFORE
+        the fold."""
         delta_df = self._scan(spark, p, deltas, [self._delta_dir(d) for d in deltas])
         if pre_filter is not None:
             delta_df = delta_df.filter(pre_filter)
@@ -1709,7 +1648,7 @@ class KeyedParquetTable:
             bmap = self._bucket_maps(p).get(p["version"], {})
             if not bmap or set(bmap.values()) == {p["version"]}:
                 return None  # empty, or already a single-version snapshot
-            state = self._read_bucketed(spark, p, p["version"])
+            state = self._snapshot(spark, p, p["version"])
             return self._commit_buckets(
                 p, self._next_version(p), p.get("last_batch_id"), "snapshot", state, t0
             )

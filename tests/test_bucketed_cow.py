@@ -243,7 +243,7 @@ def test_point_lookup_reads_only_key_buckets(spark, pair):
     all_files = set(bkt.read(spark).inputFiles())
     assert lookup_files and lookup_files < all_files
 
-    # COW fallback: same values through the filtered snapshot read
+    # plain COW: same values through the stats-pruned base scan
     assert cow.merge_batch(spark, rows_df(spark, base), batch_id=0)
     got_cow = {(r["id"], r["val"]) for r in cow.read_keys(spark, [(3,), (8,)]).collect()}
     assert got_cow == {(3, "a3"), (8, "a8")}

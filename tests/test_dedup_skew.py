@@ -1,4 +1,5 @@
-"""Skew-resistant salted top-k must agree with the direct window top-k.
+"""Skew handling: the hot-key merge stays flat under map-side combine, and
+the salted band self-join matches the unsalted one while spreading rows.
 
 Wall-clock margin assertions here are SELF-GUARDING (VERDICT r8 item 2):
 each timed leg first runs the fixed-work calibration probe (same design as
@@ -12,8 +13,6 @@ once purely from a documented host-contention episode."""
 import time
 
 from pyspark.sql import functions as F
-
-from kafka_cdc_hudi_spark.operators.dedup import topk_per_key, topk_per_key_salted
 
 #: fixed-work CPU probe reads ~0.19-0.29s warm-JVM on an idle box at the
 #: test config (SPARK_GRAFT_CPUS=4); beyond this band the box is loaded
@@ -46,34 +45,6 @@ def _timing_ok(spark, label: str, when: str = "before") -> bool:
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _skewed(spark):
-    # key 0 is hot: 5000 rows; keys 1..9 have 50 each; seq unique
-    hot = spark.range(5000).selectExpr("0 AS k", "id AS seq", "id % 97 AS score")
-    cold = spark.range(450).selectExpr("1 + CAST(id / 50 AS INT) AS k", "10000 + id AS seq", "id % 31 AS score")
-    return hot.unionByName(cold)
-
-
-def test_salted_topk_matches_direct(spark):
-    df = _skewed(spark)
-    direct = topk_per_key(df, ["k"], "score", 5, tiebreakers=["seq"])
-    salted = topk_per_key_salted(df, ["k"], "score", 5, tiebreakers=["seq"], salt_buckets=8)
-    a = {tuple(r) for r in direct.collect()}
-    b = {tuple(r) for r in salted.collect()}
-    assert a == b
-    assert direct.groupBy("k").count().filter(F.col("count") > 5).count() == 0
-
-
-def test_salted_phase1_bounds_rows(spark):
-    df = _skewed(spark)
-    # phase-1 output is capped at k * salt_buckets rows per key
-    from kafka_cdc_hudi_spark.operators.dedup import topk_per_key as tpk
-
-    salt = F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(8)).alias("__salt")
-    p1 = tpk(df.withColumn("__salt", salt), ["k", "__salt"], "score", 5, ["seq"])
-    per_key = {r["k"]: r["count"] for r in p1.groupBy("k").count().collect()}
-    assert per_key[0] <= 5 * 8
 
 
 def test_hot_key_merge_agg_skew_immunity(spark):
@@ -166,18 +137,6 @@ def test_hot_key_merge_agg_skew_immunity(spark):
     finally:
         spark.conf.set(key, default)
         df.unpersist()
-
-
-def test_salt_spreads_constant_order_values(spark):
-    """A hot key whose rows all share one mtime must still spread across
-    salt buckets (the all-columns hash), not collapse into one."""
-    df = spark.range(2000).selectExpr("0 AS k", "5 AS score", "id AS seq")
-    salt = F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(8))
-    n_buckets = df.select(salt.alias("s")).distinct().count()
-    assert n_buckets >= 6  # 8 buckets, allow a couple empty by chance
-    direct = topk_per_key(df, ["k"], "score", 3, tiebreakers=["seq"])
-    salted = topk_per_key_salted(df, ["k"], "score", 3, tiebreakers=["seq"], salt_buckets=8)
-    assert {tuple(r) for r in direct.collect()} == {tuple(r) for r in salted.collect()}
 
 
 def test_hot_band_salted_pairs_match_and_spread(spark):

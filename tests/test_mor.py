@@ -6,7 +6,10 @@ the same commit sequence, (b) the documented tombstone divergence, (c)
 compaction equivalence + pruning, (d) replay/time-travel/diff behavior.
 """
 
+import re
+
 import pytest
+from pyspark.sql import functions as F
 
 from kafka_cdc_hudi_spark.operators.merge import merge_upsert
 from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable
@@ -443,35 +446,33 @@ class TestSizeBasedCompaction:
 
 class TestReadWhereKeys:
     def test_equivalent_to_read_filter_and_prunes_below_fold(self, spark, tmp_path):
-        """read_where_keys == read().filter for key predicates, with the
-        predicate applied BELOW the MOR fold (visible as a PushedFilters/
-        Filter on the scan side of the aggregate, and as pre-fold pruning
-        in the fold input)."""
-        from pyspark.sql import functions as F
-
-        t = _mor(tmp_path, "rwk", compact_every=None)
-        for i, b in enumerate(BATCHES):
+        """Each key-restricted reader == read().filter, with the key
+        predicate applied BELOW the MOR fold: in the optimized plan it
+        sits under the aggregate on both the base and the delta scan (no
+        full-log fold)."""
+        t = _mor(tmp_path, "rwk", compact_every=2)
+        for i, b in enumerate(BATCHES[:3]):
             t.merge_batch(spark, _df(spark, b), batch_id=i)
-        pred = F.col("id").isin([1, 3])
-        want = _state(t.read(spark).filter(pred))
-        got_df = t.read_where_keys(spark, pred)
-        assert _state(got_df) == want and want  # non-vacuous
-        # tombstoned key (4) and unselected key (2) absent either way
+        assert len(t._resolve(t._read_pointer()["version"])[1]) == 1  # base + a delta
+        want = _state(t.read(spark).filter(F.col("id").isin([1, 3])))
+        # tombstoned key (2) and unselected key (4) absent
         assert set(want) == {1, 3}
-        # pre-fold pruning: the fold's aggregate input must already be
-        # key-filtered — the optimized plan's scan side carries the IN
-        # filter below the aggregate (no full-log fold)
-        plan = got_df._jdf.queryExecution().optimizedPlan().toString()
-        agg_pos = plan.find("Aggregate")
-        filt_pos = max(plan.rfind("Filter"), plan.rfind("PushedFilters"))
-        assert agg_pos != -1 and filt_pos > agg_pos, plan
-        # empty table -> None
-        t2 = _mor(tmp_path, "rwk_empty")
-        assert t2.read_where_keys(spark, pred) is None
+        readers = {  # key 2 is tombstoned, so the id range 1..3 selects 1 and 3
+            "read_where_keys": lambda t: t.read_where_keys(spark, F.col("id").isin([1, 3])),
+            "read_keys": lambda t: t.read_keys(spark, [(1,), (3,)]),
+            "read_range": lambda t: t.read_range(spark, "id", 1, 3),
+        }
+        for reader, read in readers.items():
+            got_df = read(t)
+            assert _state(got_df) == want, reader
+            plan = got_df._jdf.queryExecution().optimizedPlan().toString()
+            above, _, below = plan.partition("Aggregate")
+            assert below and not re.search(r"Filter .*\bid#", above), (reader, plan)
+            assert len(re.findall(r"Filter .*\bid#", below)) == 2, (reader, plan)
+            # empty table -> None
+            assert read(_mor(tmp_path, "rwk_empty")) is None, reader
 
     def test_base_plus_deltas_after_compaction(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
         t = _mor(tmp_path, "rwk2", compact_every=2)
         for i, b in enumerate(BATCHES):
             t.merge_batch(spark, _df(spark, b), batch_id=i)

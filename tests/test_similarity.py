@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_cdc_hudi_spark.operators.similarity import (
+    _srp_planes,
     ivf_assign,
     ivf_topk,
     ivf_train_centroids,
@@ -17,6 +18,23 @@ from kafka_cdc_hudi_spark.sources.tables import load_table
 from .conftest import SF_DIR
 
 DIM = 64
+
+
+def srp_signature_col(dim: int, n_bits: int, table: int, col: str = "embedding"):
+    """Relational reference for one SRP table's signature: sign bits of
+    the plane dot-products packed into a long, each dot an unrolled
+    left-to-right ``element_at`` sum (the addition order of the
+    vectorized kernel, so the two agree bit for bit)."""
+    planes = _srp_planes(dim, n_bits, table)
+    bits = []
+    for b in range(n_bits):
+        dot = " + ".join(
+            f"CAST(element_at({col}, {j + 1}) AS DOUBLE)"
+            f" * CAST('{float(planes[b][j])!r}' AS DOUBLE)"
+            for j in range(dim)
+        )
+        bits.append(f"(CASE WHEN ({dot}) > 0.0D THEN {2 ** b}L ELSE 0L END)")
+    return F.expr("(" + " + ".join(bits) + ")")
 
 
 @pytest.fixture(scope="module")
@@ -55,8 +73,6 @@ def test_srp_udf_matches_relational_reference(spark, emb):
     # the Arrow-batched numpy kernel must be BIT-identical to the pure-SQL
     # unrolled reference (same addition order) — this is what licenses the
     # ArrowEvalPython exemption in test_plan_invariants.py
-    from kafka_cdc_hudi_spark.operators.similarity import srp_signature_col
-
     sample = emb.limit(100).select("vec_id", "embedding")
     via_udf = {
         (r["vec_id"], r["tbl"]): r["sig"]

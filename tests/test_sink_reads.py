@@ -52,15 +52,29 @@ def _strip_schemas(root, *keys):
         json.dump(p, f)
 
 
-@pytest.mark.parametrize("mode", [MODE_COW, MODE_MOR, MODE_COW_BUCKETED])
+MODES = [MODE_COW, MODE_MOR, MODE_COW_BUCKETED]
+
+
+def _emptied(spark, t):
+    """Commit four keys to ``t``, then delete every one of them."""
+    t.merge_batch(spark, _batch(spark, [(i, f"a{i}", 1, False) for i in range(4)]), 0)
+    t.merge_batch(spark, _batch(spark, [(i, None, 2, True) for i in range(4)]), 1)
+
+
+@pytest.mark.parametrize("mode", [*MODES, "emptied"])
 def test_building_reads_launches_no_job(spark, tmp_path, mode):
-    t = KeyedParquetTable(str(tmp_path / mode), keys=["id"], mode=mode, n_buckets=4)
+    t = KeyedParquetTable(
+        str(tmp_path / mode), keys=["id"], n_buckets=4,
+        mode=MODE_COW_BUCKETED if mode == "emptied" else mode,
+    )
     if mode == MODE_MOR:  # base + 2 deltas
         t.merge_batch(spark, _batch(spark, [(i, f"a{i}", 1, False) for i in range(8)]), 0)
         t.compact(spark)
         t.merge_batch(spark, _batch(spark, [(1, "b", 2, False), (2, None, 2, True)]), 1)
         t.merge_batch(spark, _batch(spark, [(3, "c", 3, False)]), 2)
         assert len(t._resolve(t._read_pointer()["version"])[1]) == 2
+    elif mode == "emptied":
+        _emptied(spark, t)
     else:
         for bid in range(3):
             t.merge_batch(spark, _batch(spark, [(i, f"v{bid}", bid, False) for i in range(bid, 8)]), bid)
@@ -69,11 +83,82 @@ def test_building_reads_launches_no_job(spark, tmp_path, mode):
         t.read(spark),
         t.read_where_keys(spark, F.col("id").isin(1, 3)),
         t.read_keys(spark, [(1,), (3,), (99,)]),
+        t.read_range(spark, "id", 1, 3).filter(F.col("id") != 2),
     ]
     assert settled_job_ids(spark) == before
     want = {r["id"]: r["val"] for r in frames[0].collect()}
+    assert bool(want) == (mode != "emptied")
     for df in frames[1:]:
-        assert {r["id"]: r["val"] for r in df.collect()} == {k: want[k] for k in (1, 3)}
+        assert {r["id"]: r["val"] for r in df.collect()} == {k: want[k] for k in (1, 3) if k in want}
+
+
+READERS = {
+    "read": lambda t, spark: t.read(spark),
+    "read_where_keys": lambda t, spark: t.read_where_keys(spark, F.col("id") == 1),
+    "read_keys": lambda t, spark: t.read_keys(spark, [(1,)]),
+    "read_range": lambda t, spark: t.read_range(spark, "id", 0, 9),
+}
+
+
+@pytest.mark.parametrize("reader", sorted(READERS))
+@pytest.mark.parametrize("mode", MODES)
+def test_every_reader_returns_none_before_the_first_commit(spark, tmp_path, mode, reader):
+    t = KeyedParquetTable(str(tmp_path / "t"), keys=["id"], mode=mode, n_buckets=4)
+    assert READERS[reader](t, spark) is None
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_emptied_table_reads_as_an_empty_frame(spark, tmp_path, mode):
+    """Once every key is deleted, every reader returns an empty frame with
+    the table's columns. On the bucketed layout (whose bucket map is then
+    empty) the frame is a local relation: counting it runs one 1-task job,
+    not one task per core."""
+    t = KeyedParquetTable(str(tmp_path / "t"), keys=["id"], mode=mode, n_buckets=4)
+    _emptied(spark, t)
+    for reader in READERS.values():
+        df = reader(t, spark)
+        assert sorted(df.columns) == ["id", "mtime", "val"] and df.collect() == []
+    if mode == MODE_COW_BUCKETED:
+        assert t._bucket_maps(t._read_pointer())[t._read_pointer()["version"]] == {}
+        df, before = t.read(spark), settled_job_ids(spark)
+        assert df.count() == 0 and df.inputFiles() == []
+        tracker = spark.sparkContext.statusTracker()
+        stages = [s for j in settled_job_ids(spark) - before for s in tracker.getJobInfo(j).stageIds]
+        assert sum(tracker.getStageInfo(s).numTasks for s in stages) <= 1
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_restricted_readers_equal_filtered_read(spark, tmp_path, mode):
+    """read_keys, read_where_keys and read_range (on a key and on a
+    non-key column) each equal read().filter(...) of their predicate: on
+    a compacted base carrying the stats index (the lookups then open
+    fewer files than the snapshot), and after a batch that updates a key,
+    tombstones one and adds one (a pending delta on MOR), over a key set
+    that includes an absent key."""
+    t = KeyedParquetTable(
+        str(tmp_path / "t"), keys=["id"], mode=mode, n_buckets=4,
+        cluster_cols=["id"], cluster_range_files=4,
+    )
+    t.merge_batch(spark, _batch(spark, [(i, f"a{i}", 1, False) for i in range(40)]), 0)
+    t.compact(spark)
+    key_set = F.col("id").isin([3, 7, 50, 999])
+
+    def check():
+        full = t.read(spark)
+        for got, pred in [
+            (t.read_keys(spark, [(3,), (7,), (50,), (999,)]), key_set),
+            (t.read_where_keys(spark, key_set), key_set),
+            (t.read_range(spark, "id", 2, 8), F.col("id").between(2, 8)),
+            (t.read_range(spark, "mtime", 2, 2), F.col("mtime") == 2),
+        ]:
+            assert _rows(got) == _rows(full.filter(pred))
+
+    check()
+    assert set(t.read_keys(spark, [(3,)]).inputFiles()) < set(t.read(spark).inputFiles())
+    t.merge_batch(spark, _batch(spark, [(3, "b3", 2, False), (7, None, 2, True), (50, "n", 2, False)]), 1)
+    if mode == MODE_MOR:
+        assert t._resolve(t._read_pointer()["version"])[1], "no pending delta"
+    check()
 
 
 def test_every_commit_records_its_schema(spark, tmp_path):

@@ -19,10 +19,20 @@ from kafka_cdc_hudi_spark.functions.warc import (
     encode_warc,
     http_body,
     http_charset,
-    is_warc,
     split_gzip_members,
     split_http,
 )
+
+
+def is_warc(data: bytes) -> bool:
+    """A WARC container, plain or gzip-member layout: its first record
+    (decompressed, for the gzip layout) starts with the version line."""
+    if data[:2] == b"\x1f\x8b":
+        try:
+            data = zlib.decompressobj(wbits=31).decompress(data, 16)
+        except zlib.error:
+            return False
+    return data[:5] == b"WARC/"
 
 
 def _recs():
@@ -260,7 +270,6 @@ def test_corpus_to_wet_roundtrip(spark):
     """WET output is genuine WARC: one container per source media_id,
     warcinfo first, conversion records carrying URI + refers-to, bodies
     = the extracted text; the same reader walks it back."""
-    from kafka_cdc_hudi_spark.functions.warc import is_warc
     from kafka_cdc_hudi_spark.operators.multimodal import (
         WET_WARCINFO_BLOCK,
         corpus_to_wet,

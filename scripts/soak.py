@@ -15,30 +15,20 @@ Usage: python scripts/soak.py [mor|cow|both] [out.json]
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-# calib_gate lives next to this script; the repo-root insert above doesn't
-# cover `python -m scripts.foo`-style invocation (ADVICE r10)
-sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import soak_harness as h  # noqa: E402  (puts the repo root on sys.path)
 
-import duckdb  # noqa: E402
-
-from kafka_cdc_hudi_spark.config import DIALECT_DEBEZIUM, JobConfig, TableSpec  # noqa: E402
+from kafka_cdc_hudi_spark.config import TableSpec  # noqa: E402
 from kafka_cdc_hudi_spark.plans.cdc_fixtures import debezium_envelopes  # noqa: E402
-from kafka_cdc_hudi_spark.session import get_spark  # noqa: E402
-from kafka_cdc_hudi_spark.sources.kafka import json_file_value_stream  # noqa: E402
 from kafka_cdc_hudi_spark.sources.tables import load_table  # noqa: E402
-from kafka_cdc_hudi_spark.streaming.driver import CdcStreamDriver  # noqa: E402
-from calib_gate import end_calib, gated_calib  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_FILES = 5
+SPEC = TableSpec(db="test_db", table="events", primary_keys=("user_id",))
 
 
 #: idle-box MOR throughput reference at sf1 (SOAK r10: 80.4k in-band
@@ -48,66 +38,26 @@ MOR_EVS_REF_K = 85.8
 EVS_BAND_FRAC = 0.20
 
 
-def run(spark, mode: str, src: str, n_events: int, check: bool = True) -> dict:
-    work = tempfile.mkdtemp(prefix=f"soak_{mode}_")
-    spec = TableSpec(db="test_db", table="events", primary_keys=("user_id",))
-    cfg = JobConfig(
-        dialect=DIALECT_DEBEZIUM,
-        tables=[spec],
-        sink_root=os.path.join(work, "sink"),
-        checkpoint_location=os.path.join(work, "ckpt"),
-        sink_mode=mode,
-        trigger_interval="0 seconds",  # drain-the-source; 30s would serialize
-        max_workers=2,
-    )
-    driver = CdcStreamDriver(spark, cfg)
-    t0 = time.perf_counter()
-    q = driver.start(json_file_value_stream(spark, src, max_files_per_trigger=1))
-    q.processAllAvailable()
-    # per-batch walls from the engine's own progress events (batchDuration
-    # covers addBatch + commit — the per-micro-batch cost profile the
-    # artifact records round-over-round)
-    batch_ms = [
-        p["batchDuration"]
-        for p in (q.recentProgress or [])
-        if p.get("numInputRows", 0) > 0
-    ]
-    q.stop()
-    dt = time.perf_counter() - t0
-    state = driver.sink_for(spec).read(spark)
+def run_mode(spark, work: str, mode: str, files: list[str], n_events: int, check: bool = True) -> dict:
+    driver, timing = h.drive(spark, work, [SPEC], files, mode=mode)
+    dt = timing["total_wall_sec"]
+    state = driver.sink_for(SPEC).read(spark)
     n_state = state.count()
-    print(f"{mode}: {dt:.1f} s  ({n_events / dt / 1000:.1f}k ev/s)  final state {n_state} rows")
+    print(f"{mode}: {dt:.1f} s  ({n_events / dt / 1000:.1f}k ev/s)  final state {n_state} rows",
+          file=sys.stderr)
     result = {
         "mode": mode,
-        "wall_sec": round(dt, 2),
+        "wall_sec": dt,
         "ev_per_sec": round(n_events / dt, 1),
         "n_events": n_events,
         "n_state_rows": n_state,
-        "batch_duration_ms": batch_ms,
+        "batch_duration_ms": timing["batch_duration_ms"],
         "oracle": None,
     }
-
     if check and mode == "mor":  # oracle-exact check on the fold path
-        # driver testdata is a single parquet file; Spark-written scale data
-        # (scripts/make_scale_data.py) is a directory of part files
-        ev_path = f"{SF}/events.parquet"
-        if os.path.isdir(ev_path):
-            ev_path = f"{ev_path}/*.parquet"
         got = {(r["user_id"], r["event_id"]) for r in state.collect()}
-        want = {
-            tuple(r)
-            for r in duckdb.sql(f"""
-              SELECT user_id, event_id FROM (
-                SELECT user_id, event_id, event_id % 10 = 0 AS del
-                FROM read_parquet('{ev_path}')
-                QUALIFY row_number() OVER (PARTITION BY user_id
-                    ORDER BY ts DESC, event_id DESC) = 1
-              ) WHERE NOT del
-            """).fetchall()
-        }
-        assert got == want, f"MOR state mismatch: {len(got)} vs {len(want)}"
-        print("mor: state oracle-exact")
-        result["oracle"] = "exact"
+        result["oracle"] = "exact" if got == h.events_oracle(SF) else "MISMATCH"
+        print(f"mor: state oracle {result['oracle']}", file=sys.stderr)
     shutil.rmtree(work, ignore_errors=True)
     return result
 
@@ -115,65 +65,44 @@ def run(spark, mode: str, src: str, n_events: int, check: bool = True) -> dict:
 def main() -> None:
     which = sys.argv[1] if len(sys.argv) > 1 else "both"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    spark = get_spark(shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    # ambient-load gate (VERDICT r9 item 5; the one soak that lacked it):
-    # refuse-or-stamp like bench/sweep/the churn soaks
-    stamp = gated_calib(spark)
-    print(f"# calib: {stamp}", file=sys.stderr)
+    run = h.start("soak", shuffle_partitions=32)
+    spark = run.spark
+    modes_run = ("mor", "cow") if which == "both" else (which,)
 
-
-    src = tempfile.mkdtemp(prefix="soak_src_")
     env = debezium_envelopes(load_table(spark, SF, "events"))
     n_events = env.count()
+    src, warm_src = os.path.join(run.work, "src"), os.path.join(run.work, "warm_src")
     # .write.text, NOT .write.json (which double-encodes into {"value": ...})
     env.select("value").repartition(N_FILES).write.mode("overwrite").text(src)
 
     # warmup: tiny end-to-end pass so the FIRST measured mode doesn't absorb
     # ~10 s of one-time codegen (PLANS.md measurement trap #1)
-    warm_src = tempfile.mkdtemp(prefix="soak_warm_")
     debezium_envelopes(load_table(spark, "/root/testdata/sf0.001", "events")).select(
         "value"
     ).coalesce(1).write.mode("overwrite").text(warm_src)
-    for m in ("mor", "cow") if which == "both" else (which,):
-        run(spark, m, warm_src, 1, check=False)
-    print(f"-- warmed; soaking {n_events} events from {N_FILES} files --")
+    files, warm = h.part_files(src), h.part_files(warm_src)
+    for m in modes_run:
+        run_mode(spark, os.path.join(run.work, f"warm_{m}"), m, warm, 1, check=False)
+    print(f"-- warmed; soaking {n_events} events from {N_FILES} files --", file=sys.stderr)
 
-    modes = {}
-    for m in ("mor", "cow") if which == "both" else (which,):
-        modes[m] = run(spark, m, src, n_events)
-    end_calib(spark, stamp)
-    print(f"# calib end: {stamp}", file=sys.stderr)
-    if stamp["contaminated"]:
-        print("# WARNING: contaminated run — throughput numbers untrustworthy", file=sys.stderr)
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(warm_src, ignore_errors=True)
+    modes = {m: run_mode(spark, os.path.join(run.work, m), m, files, n_events) for m in modes_run}
 
-    # band verdict: only meaningful on an uncontaminated run at sf1
-    band_verdict = None
-    if "mor" in modes:
-        evs_k = modes["mor"]["ev_per_sec"] / 1000.0
-        lo = MOR_EVS_REF_K * (1 - EVS_BAND_FRAC)
-        in_band = evs_k >= lo
-        band_verdict = {
-            "mor_ev_per_sec_k": round(evs_k, 1),
-            "ref_k": MOR_EVS_REF_K,
-            "band_frac": EVS_BAND_FRAC,
-            "in_band": bool(in_band),
-            "applicable": not stamp["contaminated"] and SF.rstrip("/").endswith("sf1"),
-        }
-    artifact = {
-        "sf_dir": SF,
-        "n_files": N_FILES,
-        "modes": modes,
-        "band": band_verdict,
-        **stamp,
-    }
-    line = json.dumps(artifact)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
+    def artifact() -> dict:
+        # band verdict: only meaningful on an uncontaminated run at sf1
+        band = None
+        if "mor" in modes:
+            evs_k = modes["mor"]["ev_per_sec"] / 1000.0
+            band = {
+                "mor_ev_per_sec_k": round(evs_k, 1),
+                "ref_k": MOR_EVS_REF_K,
+                "band_frac": EVS_BAND_FRAC,
+                "in_band": evs_k >= MOR_EVS_REF_K * (1 - EVS_BAND_FRAC),
+                "applicable": not run.stamp["contaminated"] and SF.rstrip("/").endswith("sf1"),
+            }
+        return {"sf_dir": SF, "n_files": N_FILES, "modes": modes, "band": band}
+
+    ok = all(r["oracle"] != "MISMATCH" for r in modes.values())
+    h.finish(run, artifact, ok, out_path)
 
 
 if __name__ == "__main__":

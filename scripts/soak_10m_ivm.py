@@ -27,15 +27,12 @@ import glob
 import json
 import os
 import random
-import shutil
 import sys
-import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import soak_harness as h  # noqa: E402  (puts the repo root on sys.path)
 
-import duckdb  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.types import (  # noqa: E402
     LongType,
@@ -44,15 +41,10 @@ from pyspark.sql.types import (  # noqa: E402
     StructType,
 )
 
-from kafka_cdc_hudi_spark.config import DIALECT_DEBEZIUM, JobConfig, TableSpec  # noqa: E402
-from kafka_cdc_hudi_spark.functions.textfns import tokens  # noqa: E402
+from kafka_cdc_hudi_spark.config import TableSpec  # noqa: E402
 from kafka_cdc_hudi_spark.plans.cdc_fixtures import debezium_envelopes  # noqa: E402
-from kafka_cdc_hudi_spark.session import get_spark  # noqa: E402
-from kafka_cdc_hudi_spark.sources.kafka import json_file_value_stream  # noqa: E402
 from kafka_cdc_hudi_spark.sources.tables import load_table  # noqa: E402
-from kafka_cdc_hudi_spark.streaming.bm25_ivm import Bm25IndexMaintainer, bm25_topk  # noqa: E402
-from kafka_cdc_hudi_spark.streaming.driver import CdcStreamDriver  # noqa: E402
-from calib_gate import end_calib, gated_calib  # noqa: E402
+from kafka_cdc_hudi_spark.streaming.bm25_ivm import Bm25IndexMaintainer  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scaledata/sf10"
 OUT = sys.argv[2] if len(sys.argv) > 2 else None
@@ -70,38 +62,19 @@ DOC_PAYLOAD = StructType(
 
 
 def main() -> None:
-    spark = get_spark(shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    stamp = gated_calib(spark)
-    print(f"# calib: {stamp}", file=sys.stderr)
+    run = h.start("soak_10m_ivm", shuffle_partitions=32)
+    spark, work = run.spark, run.work
 
     rng = random.Random(SEED)
     events = load_table(spark, SF, "events")
     n_events_total = events.count()
-    live = {
-        int(r["doc_id"]): r["text"]
-        for r in load_table(spark, SF, "documents").select("doc_id", "text").collect()
-    }
+    live = h.documents(spark, SF)
     n_docs0 = len(live)
     next_id = max(live) + 1
-    queries_rows = [(1_000_000 + i, live[k]) for i, k in enumerate(sorted(live)[:N_QUERIES])]
-    queries = spark.createDataFrame(
-        queries_rows, "query_id BIGINT, text STRING"
-    ).localCheckpoint()
+    queries = h.bm25_queries(spark, live, N_QUERIES)
 
-    src = tempfile.mkdtemp(prefix="soak10m_src_")
-    work = tempfile.mkdtemp(prefix="soak10m_")
     ev_spec = TableSpec(db="test_db", table="events", primary_keys=("user_id",))
     doc_spec = TableSpec(db="test_db", table="documents", primary_keys=("doc_id",))
-    cfg = JobConfig(
-        dialect=DIALECT_DEBEZIUM,
-        tables=[ev_spec, doc_spec],
-        sink_root=os.path.join(work, "sink"),
-        checkpoint_location=os.path.join(work, "ckpt"),
-        sink_mode="mor",
-        trigger_interval="0 seconds",
-        max_workers=2,
-    )
     mb = Bm25IndexMaintainer(root=os.path.join(work, "bm25"), compact_every=4)
     maint_walls: dict[int, float] = {}
 
@@ -118,13 +91,6 @@ def main() -> None:
             batch_id,
         )
         maint_walls[batch_id] = round(time.perf_counter() - t0, 2)
-
-    driver = CdcStreamDriver(
-        spark,
-        cfg,
-        payload_schemas={"documents": DOC_PAYLOAD},
-        side_processors={"documents": bm25_side},
-    )
 
     # ---- pre-materialize the event envelope slices (untimed prep) --------
     env = debezium_envelopes(events).select(
@@ -186,8 +152,7 @@ def main() -> None:
         ids = sorted(plan_live)
         donors = rng.sample(ids, n_upd)
         for i, donor in zip(rng.sample(ids, n_upd), donors):
-            wa, wb = plan_live[i].split(), plan_live[donor].split()
-            t = " ".join(wa[: len(wa) // 2] + wb[len(wb) // 2 :])
+            t = h.splice(plan_live[i], plan_live[donor])
             seq += 1
             doc_lines.append(_dbz_doc("u", i, t, seq))
             effects.append((i, t))
@@ -201,104 +166,70 @@ def main() -> None:
             next_id += 1
         batch_plan.append((my_slots, doc_lines, None, effects))
 
-    def publish(bi):
-        """Concatenate the batch's event slices + doc lines into ONE file,
-        atomically renamed into the source dir (batch = one micro-batch;
-        the file-ordering trap from PLANS.md)."""
-        my_slots, doc_lines, boot_dir, effects = batch_plan[bi]
-        tmp = os.path.join(work, f"stage_b{bi}.txt")
-        n_ev = 0
-        with open(tmp, "wb") as out:
-            for s in my_slots:
-                for part in sorted(glob.glob(os.path.join(ev_dir, f"slot={s}", "part-*"))):
-                    with open(part, "rb") as f:
-                        data = f.read()
-                        n_ev += data.count(b"\n")
-                        out.write(data)
-            if boot_dir is not None:
-                for part in sorted(glob.glob(os.path.join(boot_dir, "part-*"))):
-                    with open(part, "rb") as f:
-                        out.write(f.read())
-            if doc_lines:
-                out.write(("\n".join(doc_lines) + "\n").encode())
-        os.rename(tmp, os.path.join(src, f"b{bi}.txt"))
-        for k, v in effects:
-            if v is None:
-                live.pop(k, None)
-            else:
-                live[k] = v
-        return n_ev
+    n_events: list[int] = []
 
-    def topk_set(df):
-        return {(r["query_id"], r["doc_id"], r["rank"]) for r in df.collect()}
+    def staged():
+        """Each batch's event slices + doc lines concatenated into ONE file
+        (one micro-batch), its doc effects then applied to ``live``."""
+        for bi, (my_slots, doc_lines, boot_dir, effects) in enumerate(batch_plan):
+            path = os.path.join(work, f"stage_b{bi}.txt")
+            n_ev = 0
+            with open(path, "wb") as out:
+                for s in my_slots:
+                    for part in sorted(glob.glob(os.path.join(ev_dir, f"slot={s}", "part-*"))):
+                        with open(part, "rb") as f:
+                            data = f.read()
+                            n_ev += data.count(b"\n")
+                            out.write(data)
+                if boot_dir is not None:
+                    for part in sorted(glob.glob(os.path.join(boot_dir, "part-*"))):
+                        with open(part, "rb") as f:
+                            out.write(f.read())
+                if doc_lines:
+                    out.write(("\n".join(doc_lines) + "\n").encode())
+            for k, v in effects:
+                if v is None:
+                    live.pop(k, None)
+                else:
+                    live[k] = v
+            n_events.append(n_ev)
+            yield path
 
-    def rebuild_topk():
-        docs = spark.createDataFrame(
-            sorted(live.items()), "doc_id BIGINT, text STRING"
-        ).repartition(spark.sparkContext.defaultParallelism)
-        posts = (
-            docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-            .groupBy("term", "doc_id")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        dl = docs.select("doc_id", F.size(tokens("text")).cast("long").alias("dl"))
-        return bm25_topk(queries, posts, dl, k=K)
+    checks = []
 
-    q = driver.start(json_file_value_stream(spark, src, max_files_per_trigger=1))
-    batches, checks = [], []
-    t_total0 = time.perf_counter()
-    for bi in range(len(batch_plan)):
-        n_ev = publish(bi)
-        t0 = time.perf_counter()
-        q.processAllAvailable()
-        wall = round(time.perf_counter() - t0, 2)
-        churned = len(batch_plan[bi][1] or [])
+    def checkpoint(bi: int) -> None:
+        if bi >= 2:  # checkpoints after b2, b3, b4 — 3/3
+            t0 = time.perf_counter()
+            _, ok = h.bm25_check(spark, mb, queries, live, K)
+            checks.append({"after_batch": bi, "exact": ok,
+                           "check_sec": round(time.perf_counter() - t0, 2)})
+            print(f"# checkpoint b{bi}: exact={ok}", file=sys.stderr)
+
+    driver, timing = h.drive(
+        spark, os.path.join(work, "drive"), [ev_spec, doc_spec], staged(), after_batch=checkpoint,
+        payload_schemas={"documents": DOC_PAYLOAD}, side_processors={"documents": bm25_side},
+    )
+    batches = []
+    for bi, (n_ev, wall) in enumerate(zip(n_events, timing["batch_wall_sec"])):
         batches.append(
             {
                 "batch": bi,
                 "events": n_ev,
-                "docs_churned": churned if bi else n_docs0,
+                "docs_churned": len(batch_plan[bi][1]) if bi else n_docs0,
                 "wall_sec": wall,
                 "maintainer_sec": maint_walls.get(bi),
                 "driver_sec": round(wall - (maint_walls.get(bi) or 0.0), 2),
             }
         )
-        print(f"# b{bi}: {n_ev} ev, {churned if bi else n_docs0} doc ops, "
-              f"wall {wall}s (maintainer {maint_walls.get(bi)}s)", file=sys.stderr)
-        if bi >= 2:  # checkpoints after b2, b3, b4 — 3/3
-            t0 = time.perf_counter()
-            ok = topk_set(mb.topk(spark, queries, k=K)) == topk_set(rebuild_topk())
-            checks.append({"after_batch": bi, "exact": bool(ok),
-                           "check_sec": round(time.perf_counter() - t0, 2)})
-            print(f"# checkpoint b{bi}: exact={ok}", file=sys.stderr)
-            assert ok, f"maintained BM25 diverged from rebuild after batch {bi}"
-    total_wall = round(time.perf_counter() - t_total0, 2)
-    q.stop()
 
     # final events MOR state oracle vs DuckDB over all 10M rows
     state = driver.sink_for(ev_spec).read(spark)
     got = {(r["user_id"], r["event_id"]) for r in state.collect()}
-    ev_path = f"{SF}/events.parquet"
-    if os.path.isdir(ev_path):
-        ev_path = f"{ev_path}/*.parquet"
-    want = {
-        tuple(r)
-        for r in duckdb.sql(f"""
-          SELECT user_id, event_id FROM (
-            SELECT user_id, event_id, event_id % 10 = 0 AS del
-            FROM read_parquet('{ev_path}')
-            QUALIFY row_number() OVER (PARTITION BY user_id
-                ORDER BY ts DESC, event_id DESC) = 1
-          ) WHERE NOT del
-        """).fetchall()
-    }
-    events_oracle = got == want
-    print(f"# events MOR state: {'oracle-exact' if events_oracle else 'MISMATCH'} "
+    events_ok = got == h.events_oracle(SF)
+    print(f"# events MOR state: {'oracle-exact' if events_ok else 'MISMATCH'} "
           f"({len(got)} rows)", file=sys.stderr)
-    assert events_oracle
 
-    stamp = end_calib(spark, stamp)
-    driven = sum(b["events"] for b in batches)
+    driven = sum(n_events)
     artifact = {
         "what": "10M-event streaming drive with Bm25IndexMaintainer attached "
                 "(scripts/soak_10m_ivm.py, VERDICT r11 item 4)",
@@ -308,18 +239,11 @@ def main() -> None:
         "churn_frac": CHURN_FRAC,
         "batches": batches,
         "ev_per_sec": round(driven / sum(b["wall_sec"] for b in batches), 1),
-        "total_wall_sec": total_wall,
+        "total_wall_sec": timing["total_wall_sec"],
         "checkpoints": checks,
-        "events_mor_oracle": "exact",
-        **stamp,
+        "events_mor_oracle": "exact" if events_ok else "MISMATCH",
     }
-    line = json.dumps(artifact)
-    print(line)
-    if OUT:
-        with open(OUT, "w") as f:
-            f.write(line + "\n")
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(work, ignore_errors=True)
+    h.finish(run, artifact, events_ok and all(c["exact"] for c in checks), OUT)
 
 
 if __name__ == "__main__":

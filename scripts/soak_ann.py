@@ -11,21 +11,21 @@ Run at two corpus sizes with the SAME absolute churn:
 
     python scripts/soak_ann.py /root/testdata/sf0.1 out_sf01.json
     python scripts/soak_ann.py /root/repo/.scaledata/sf1 out_sf1.json
+
+Defaults: 24 churn batches of 100 vectors, checkpoints every 8 batches
+(``SOAK_BATCHES`` / ``SOAK_CHURN`` / ``SOAK_CHECK_EVERY``, see
+``soak_harness``).
 """
 
 from __future__ import annotations
 
-import json
+import itertools
 import os
 import random
 import sys
-import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-# calib_gate lives next to this script; the repo-root insert above doesn't
-# cover `python -m scripts.foo`-style invocation (ADVICE r10)
-sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import soak_harness as h  # noqa: E402  (puts the repo root on sys.path)
 
 import numpy as np  # noqa: E402
 
@@ -34,16 +34,12 @@ from kafka_cdc_hudi_spark.operators.similarity import (  # noqa: E402
     ivf_static_codebook,
     ivf_topk,
 )
-from kafka_cdc_hudi_spark.session import get_spark  # noqa: E402
 from kafka_cdc_hudi_spark.sources.tables import load_table  # noqa: E402
 from kafka_cdc_hudi_spark.streaming.ann_ivm import AnnIndexMaintainer  # noqa: E402
-from calib_gate import end_calib, gated_calib  # noqa: E402
 
-N_BATCHES = int(os.environ.get("SOAK_ANN_BATCHES", "24"))
-CHURN_VECS = int(os.environ.get("SOAK_ANN_VECS", "100"))
-CHECK_EVERY = int(os.environ.get("SOAK_ANN_CHECK_EVERY", "8"))
+CHURN_VECS = h.churn_size(100)
 DIM, CELLS, K, PROBE, N_QUERIES = 64, 8, 10, 3, 16
-SEED = 20260815
+SCHEMA = "op STRING, vec_id BIGINT, embedding ARRAY<FLOAT>, seq BIGINT"
 
 
 def _perturb(rng: random.Random, v: list[float], scale: float) -> list[float]:
@@ -55,26 +51,17 @@ def _perturb(rng: random.Random, v: list[float], scale: float) -> list[float]:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
+    run = h.start("soak_ann")
+    spark = run.spark
 
-    spark = get_spark(app_name="soak_ann")
-    spark.sparkContext.setLogLevel("ERROR")
-    # ambient-load gate (VERDICT r9 item 5): the r9 sf0.1 artifact was
-    # captured at loadavg 15.4 - refuse-or-stamp like bench/sweep do
-    stamp = gated_calib(spark)
-
-    rng = random.Random(SEED)
+    rng = random.Random(h.SEED)
     cents = ivf_static_codebook(DIM, CELLS)
-
     live = {
         int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for r in load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .collect()
+        for r in load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").collect()
     }
     n0 = len(live)
-    next_id = max(live) + 1
-    seq = 0
-    qr = np.random.RandomState(SEED)
+    qr = np.random.RandomState(h.SEED)
     queries = spark.createDataFrame(
         [
             (10_000_000 + j,
@@ -84,112 +71,30 @@ def main() -> None:
         "vec_id BIGINT, embedding ARRAY<FLOAT>",
     ).localCheckpoint()
 
-    m = AnnIndexMaintainer(
-        root=tempfile.mkdtemp(prefix="soak_ann_"), cents=cents
-    )
-    # count compactions so per-batch walls can be split by whether the
-    # keyed table compacted in that batch (the periodic spike is the
-    # compact_every amortization, not churn cost - report them apart)
-    compactions = {"n": 0}
-    _tbl = m.table
-    _orig_compact = _tbl._compact_locked
-
-    def _compact_spy(*a, **k):
-        compactions["n"] += 1
-        return _orig_compact(*a, **k)
-
-    _tbl._compact_locked = _compact_spy
-
-    SCHEMA = "op STRING, vec_id BIGINT, embedding ARRAY<FLOAT>, seq BIGINT"
-
-    def run_batch(bid, rows):
-        df = spark.createDataFrame(rows, SCHEMA)
-        t0 = time.perf_counter()
-        m.process(spark, df, batch_id=bid)
-        return round(time.perf_counter() - t0, 2)
-
-    rows0 = []
-    for i, v in sorted(live.items()):
-        rows0.append(("i", i, v, seq)); seq += 1
-    t_ingest = run_batch(0, rows0)
-    print(f"# ingest: {n0} vectors in {t_ingest}s", file=sys.stderr)
+    m = AnnIndexMaintainer(root=run.work, cents=cents)
+    seq = itertools.count()
+    ingest = spark.createDataFrame([("i", i, v, next(seq)) for i, v in sorted(live.items())], SCHEMA)
 
     def topk_set(df):
         return {(r["qid"], r["nid"], r["rank"]) for r in df.collect()}
 
-    batches, checks = [], []
-    for bid in range(1, N_BATCHES + 1):
-        rows = []
-        ids = sorted(live)
-        n_del = max(1, CHURN_VECS // 5)
-        n_ins = max(1, CHURN_VECS // 5)
-        n_upd = CHURN_VECS - n_del - n_ins
-        for i in rng.sample(ids, n_del):
-            rows.append(("d", i, None, seq)); seq += 1
-            del live[i]
-        ids = sorted(live)
-        for i in rng.sample(ids, n_upd):
-            v = _perturb(rng, live[rng.choice(ids)], scale=0.5)
-            rows.append(("u", i, v, seq)); seq += 1
-            live[i] = v
-        for _ in range(n_ins):
-            v = _perturb(rng, live[rng.choice(ids)], scale=0.05)
-            rows.append(("i", next_id, v, seq)); seq += 1
-            live[next_id] = v
-            next_id += 1
-        n_compact_before = compactions["n"]
-        wall = run_batch(bid, rows)
-        compacted = compactions["n"] > n_compact_before
-        batches.append(
-            {"bid": bid, "n_changed": len(rows), "wall_s": wall, "compacted": compacted}
-        )
-        print(f"# batch {bid}: {len(rows)} changed vectors, {wall}s", file=sys.stderr)
-        if bid % CHECK_EVERY == 0 or bid == N_BATCHES:
-            t0 = time.perf_counter()
-            got = topk_set(m.topk(spark, queries, k=K, n_probe=PROBE))
-            corpus = spark.createDataFrame(
-                [(i, v) for i, v in sorted(live.items())],
-                "vec_id BIGINT, embedding ARRAY<FLOAT>",
-            )
-            want = topk_set(
-                ivf_topk(queries, ivf_assign(corpus, cents), cents, k=K, n_probe=PROBE)
-            )
-            ok = got == want
-            checks.append(
-                {"bid": bid, "n_results": len(got), "match": ok,
-                 "check_s": round(time.perf_counter() - t0, 2)}
-            )
-            print(f"# checkpoint {bid}: {len(got)} results, match={ok}", file=sys.stderr)
+    def check():
+        got = topk_set(m.topk(spark, queries, k=K, n_probe=PROBE))
+        corpus = spark.createDataFrame(sorted(live.items()), "vec_id BIGINT, embedding ARRAY<FLOAT>")
+        want = topk_set(ivf_topk(queries, ivf_assign(corpus, cents), cents, k=K, n_probe=PROBE))
+        return len(got), got == want
 
-    churn_walls = [b["wall_s"] for b in batches]
-    cw = [b["wall_s"] for b in batches if b["compacted"]]
-    ncw = [b["wall_s"] for b in batches if not b["compacted"]]
-    result = {
-        "sf_dir": sf_dir,
-        "corpus_vectors": n0,
-        "churn_vecs_per_batch": CHURN_VECS,
-        "n_batches": N_BATCHES,
-        "ingest_s": t_ingest,
-        "churn_wall_mean_s": round(sum(churn_walls) / len(churn_walls), 2),
-        "churn_wall_max_s": max(churn_walls),
-        # split: the compaction batches carry the amortized fold cost
-        "compaction_batches": len(cw),
-        "compact_wall_mean_s": round(sum(cw) / len(cw), 2) if cw else None,
-        "compact_wall_max_s": max(cw) if cw else None,
-        "noncompact_wall_mean_s": round(sum(ncw) / len(ncw), 2) if ncw else None,
-        "noncompact_wall_max_s": max(ncw) if ncw else None,
-        "batches": batches,
-        "checkpoints": checks,
-        "all_checks_match": all(c["match"] for c in checks),
-        **end_calib(spark, stamp),
-    }
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
-    spark.stop()
-    sys.exit(0 if result["all_checks_match"] else 1)
+    summary = h.churn_loop(
+        spark, [m.table], lambda df, bid: m.process(spark, df, batch_id=bid), ingest,
+        h.mixed_churn(
+            rng, live, CHURN_VECS, seq,
+            update=lambda i, ids, s: _perturb(rng, live[rng.choice(ids)], scale=0.5),
+            insert=lambda ids, s: _perturb(rng, live[rng.choice(ids)], scale=0.05),
+        ),
+        SCHEMA, check, "n_results",
+    )
+    artifact = {"sf_dir": sf_dir, "corpus_vectors": n0, "churn_vecs_per_batch": CHURN_VECS, **summary}
+    h.finish(run, artifact, summary["all_checks_match"], out_path)
 
 
 if __name__ == "__main__":

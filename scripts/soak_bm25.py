@@ -13,174 +13,54 @@ Run at two corpus sizes with the SAME absolute churn:
 
     python scripts/soak_bm25.py /root/testdata/sf0.1 out_sf01.json
     python scripts/soak_bm25.py /root/repo/.scaledata/sf1 out_sf1.json
+
+Defaults: 24 churn batches of 100 docs, checkpoints every 8 batches
+(``SOAK_BATCHES`` / ``SOAK_CHURN`` / ``SOAK_CHECK_EVERY``, see
+``soak_harness``).
 """
 
 from __future__ import annotations
 
-import json
+import itertools
 import os
 import random
 import sys
-import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-# calib_gate lives next to this script; the repo-root insert above doesn't
-# cover `python -m scripts.foo`-style invocation (ADVICE r10)
-sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import soak_harness as h  # noqa: E402  (puts the repo root on sys.path)
 
-from pyspark.sql import functions as F  # noqa: E402
+from kafka_cdc_hudi_spark.streaming.bm25_ivm import Bm25IndexMaintainer  # noqa: E402
 
-from kafka_cdc_hudi_spark.functions.textfns import tokens  # noqa: E402
-from kafka_cdc_hudi_spark.session import get_spark  # noqa: E402
-from kafka_cdc_hudi_spark.sources.tables import load_table  # noqa: E402
-from kafka_cdc_hudi_spark.streaming.bm25_ivm import (  # noqa: E402
-    Bm25IndexMaintainer,
-    bm25_topk,
-)
-from calib_gate import end_calib, gated_calib  # noqa: E402
-
-N_BATCHES = int(os.environ.get("SOAK_BM25_BATCHES", "24"))
-CHURN_DOCS = int(os.environ.get("SOAK_BM25_DOCS", "100"))
-CHECK_EVERY = int(os.environ.get("SOAK_BM25_CHECK_EVERY", "8"))
+CHURN_DOCS = h.churn_size(100)
 K, N_QUERIES = 10, 8
-SEED = 20260815
+SCHEMA = "op STRING, doc_id BIGINT, text STRING, seq BIGINT"
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
+    run = h.start("soak_bm25")
+    spark = run.spark
 
-    spark = get_spark(app_name="soak_bm25")
-    spark.sparkContext.setLogLevel("ERROR")
-    stamp = gated_calib(spark)
-
-    rng = random.Random(SEED)
-    live = {
-        int(r["doc_id"]): r["text"]
-        for r in load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .collect()
-    }
+    rng = random.Random(h.SEED)
+    live = h.documents(spark, sf_dir)
     n0 = len(live)
-    next_id = max(live) + 1
-    seq = 0
-    # fixed query set: the first N_QUERIES original texts (stable strings)
-    queries = spark.createDataFrame(
-        [(1_000_000 + i, live[k]) for i, k in enumerate(sorted(live)[:N_QUERIES])],
-        "query_id BIGINT, text STRING",
-    ).localCheckpoint()
+    queries = h.bm25_queries(spark, live, N_QUERIES)
+    m = Bm25IndexMaintainer(root=run.work)
+    seq = itertools.count(1)
+    ingest = spark.createDataFrame([("i", i, t, next(seq)) for i, t in sorted(live.items())], SCHEMA)
 
-    m = Bm25IndexMaintainer(root=tempfile.mkdtemp(prefix="soak_bm25_"))
-    from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable
-
-    compactions = {"n": 0}
-    _orig_compact = KeyedParquetTable._compact_locked
-
-    def _spy(self, *a, **k):
-        compactions["n"] += 1
-        return _orig_compact(self, *a, **k)
-
-    KeyedParquetTable._compact_locked = _spy
-
-    SCHEMA = "op STRING, doc_id BIGINT, text STRING, seq BIGINT"
-
-    def run_batch(bid, rows):
-        df = spark.createDataFrame(rows, SCHEMA)
-        t0 = time.perf_counter()
-        m.process(spark, df, batch_id=bid)
-        return round(time.perf_counter() - t0, 2)
-
-    rows0 = [("i", i, t, (seq := seq + 1)) for i, t in sorted(live.items())]
-    t_ingest = run_batch(0, rows0)
-    print(f"# ingest: {n0} docs in {t_ingest}s", file=sys.stderr)
-
-    def topk_set(df):
-        return {(r["query_id"], r["doc_id"], r["rank"]) for r in df.collect()}
-
-    def rebuild_topk():
-        docs = spark.createDataFrame(
-            sorted(live.items()), "doc_id BIGINT, text STRING"
-        ).repartition(spark.sparkContext.defaultParallelism)
-        posts = (
-            docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-            .groupBy("term", "doc_id")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        dl = docs.select("doc_id", F.size(tokens("text")).cast("long").alias("dl"))
-        return bm25_topk(queries, posts, dl, k=K)
-
-    def splice(a: str, b: str) -> str:
-        wa, wb = a.split(), b.split()
-        return " ".join(wa[: len(wa) // 2] + wb[len(wb) // 2:])
-
-    batches, checks = [], []
-    for bid in range(1, N_BATCHES + 1):
-        rows = []
-        ids = sorted(live)
-        n_del = max(1, CHURN_DOCS // 5)
-        n_ins = max(1, CHURN_DOCS // 5)
-        n_upd = CHURN_DOCS - n_del - n_ins
-        for i in rng.sample(ids, n_del):
-            rows.append(("d", i, None, (seq := seq + 1)))
-            del live[i]
-        ids = sorted(live)
-        for i in rng.sample(ids, n_upd):
-            t = splice(live[i], live[rng.choice(ids)])
-            rows.append(("u", i, t, (seq := seq + 1)))
-            live[i] = t
-        for _ in range(n_ins):
-            t = live[rng.choice(ids)]
-            rows.append(("i", next_id, t, (seq := seq + 1)))
-            live[next_id] = t
-            next_id += 1
-        before = compactions["n"]
-        wall = run_batch(bid, rows)
-        compacted = compactions["n"] > before
-        batches.append(
-            {"bid": bid, "n_changed": len(rows), "wall_s": wall, "compacted": compacted}
-        )
-        print(f"# batch {bid}: {len(rows)} changed docs, {wall}s", file=sys.stderr)
-        if bid % CHECK_EVERY == 0 or bid == N_BATCHES:
-            t0 = time.perf_counter()
-            got = topk_set(m.topk(spark, queries, k=K))
-            want = topk_set(rebuild_topk())
-            ok = got == want
-            checks.append(
-                {"bid": bid, "n_results": len(got), "match": ok,
-                 "check_s": round(time.perf_counter() - t0, 2)}
-            )
-            print(f"# checkpoint {bid}: {len(got)} results, match={ok}", file=sys.stderr)
-
-    KeyedParquetTable._compact_locked = _orig_compact
-    walls = [b["wall_s"] for b in batches]
-    cw = [b["wall_s"] for b in batches if b["compacted"]]
-    ncw = [b["wall_s"] for b in batches if not b["compacted"]]
-    result = {
-        "sf_dir": sf_dir,
-        "corpus_docs": n0,
-        "churn_docs_per_batch": CHURN_DOCS,
-        "n_batches": N_BATCHES,
-        "ingest_s": t_ingest,
-        "churn_wall_mean_s": round(sum(walls) / len(walls), 2),
-        "churn_wall_max_s": max(walls),
-        "compaction_batches": len(cw),
-        "compact_wall_mean_s": round(sum(cw) / len(cw), 2) if cw else None,
-        "compact_wall_max_s": max(cw) if cw else None,
-        "noncompact_wall_mean_s": round(sum(ncw) / len(ncw), 2) if ncw else None,
-        "noncompact_wall_max_s": max(ncw) if ncw else None,
-        "batches": batches,
-        "checkpoints": checks,
-        "all_checks_match": all(c["match"] for c in checks),
-        **end_calib(spark, stamp),
-    }
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
-    spark.stop()
-    sys.exit(0 if result["all_checks_match"] else 1)
+    summary = h.churn_loop(
+        spark, [m.postings, m.doclens], lambda df, bid: m.process(spark, df, batch_id=bid), ingest,
+        h.mixed_churn(
+            rng, live, CHURN_DOCS, seq,
+            update=lambda i, ids, s: h.splice(live[i], live[rng.choice(ids)]),
+            insert=lambda ids, s: live[rng.choice(ids)],
+        ),
+        SCHEMA, lambda: h.bm25_check(spark, m, queries, live, K), "n_results",
+    )
+    artifact = {"sf_dir": sf_dir, "corpus_docs": n0, "churn_docs_per_batch": CHURN_DOCS, **summary}
+    h.finish(run, artifact, summary["all_checks_match"], out_path)
 
 
 if __name__ == "__main__":

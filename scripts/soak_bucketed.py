@@ -22,23 +22,18 @@ Needs SPARK_GRAFT_DRIVER_MEM=32g at the sf10 default.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import soak_harness as h  # noqa: E402  (puts the repo root on sys.path)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from kafka_cdc_hudi_spark.functions.timefns import epoch_millis  # noqa: E402
-from kafka_cdc_hudi_spark.session import get_spark  # noqa: E402
 from kafka_cdc_hudi_spark.sinks.keyed_table import KeyedParquetTable  # noqa: E402
 from kafka_cdc_hudi_spark.sources.tables import load_table  # noqa: E402
-from calib_gate import end_calib, gated_calib  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scaledata/sf10"
 OUT = sys.argv[2] if len(sys.argv) > 2 else None
@@ -50,10 +45,8 @@ MODES = ["cow", "cow-bucketed", "mor"]
 
 
 def main() -> None:
-    spark = get_spark(shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    stamp = gated_calib(spark)
-    print(f"# calib: {stamp}", file=sys.stderr)
+    run = h.start("soak_bucketed", shuffle_partitions=32)
+    spark, work = run.spark, run.work
 
     state0 = (
         load_table(spark, SF, "events")
@@ -92,7 +85,7 @@ def main() -> None:
         )
 
     results = {}
-    work = tempfile.mkdtemp(prefix="soak_bkt_")
+    committed = True  # every merge below reported a commit
     for mode in MODES:
         t = KeyedParquetTable(
             os.path.join(work, mode.replace("-", "_")),
@@ -102,7 +95,7 @@ def main() -> None:
             n_buckets=N_BUCKETS,
         )
         t0 = time.perf_counter()
-        assert t.merge_batch(spark, state0, batch_id=0)
+        committed &= t.merge_batch(spark, state0, batch_id=0)
         ingest = round(time.perf_counter() - t0, 2)
         v0 = t.versions()[-1]
         m0 = t.commit_meta().get(v0, {})
@@ -112,7 +105,7 @@ def main() -> None:
         batches = []
         for b, (targets, cdf) in enumerate(churn, start=1):
             t0 = time.perf_counter()
-            assert t.merge_batch(spark, cdf, batch_id=b)
+            committed &= t.merge_batch(spark, cdf, batch_id=b)
             wall = round(time.perf_counter() - t0, 2)
             v = t.versions()[-1]
             m = t.commit_meta().get(v, {})
@@ -159,10 +152,9 @@ def main() -> None:
         return (row["n"], row["h"])
 
     fps = {m: fingerprint(m) for m in MODES}
-    assert len(set(fps.values())) == 1, f"mode states diverged: {fps}"
-    print(f"# all modes equal: {fps['cow']}", file=sys.stderr)
+    states_equal = len(set(fps.values())) == 1
+    print(f"# mode states equal={states_equal}: {fps}", file=sys.stderr)
 
-    stamp = end_calib(spark, stamp)
     artifact = {
         "what": "write amplification per commit under bucket-local churn at "
                 "10M-key state (scripts/soak_bucketed.py)",
@@ -171,15 +163,10 @@ def main() -> None:
         "n_buckets": N_BUCKETS,
         "churn_keys_per_batch": CHURN_KEYS,
         "modes": results,
-        "states_equal": True,
-        **stamp,
+        "all_committed": committed,
+        "states_equal": states_equal,
     }
-    line = json.dumps(artifact)
-    print(line)
-    if OUT:
-        with open(OUT, "w") as f:
-            f.write(line + "\n")
-    shutil.rmtree(work, ignore_errors=True)
+    h.finish(run, artifact, committed and states_equal, OUT)
 
 
 if __name__ == "__main__":

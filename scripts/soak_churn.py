@@ -19,39 +19,31 @@ flat-in-corpus-size table:
     python scripts/soak_churn.py /root/repo/.scaledata/sf1 out_sf1.json
 
 Defaults: 24 churn batches of ~250 docs (0.5% of the sf1 corpus), seeded
-RNG, checkpoints at batches 8/16/24.
+RNG, checkpoints at batches 8/16/24 (``SOAK_BATCHES`` / ``SOAK_CHURN`` /
+``SOAK_CHECK_EVERY``, see ``soak_harness``).
 """
 
 from __future__ import annotations
 
-import json
+import itertools
 import os
 import random
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-# calib_gate lives next to this script; the repo-root insert above doesn't
-# cover `python -m scripts.foo`-style invocation (ADVICE r10)
-sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import soak_harness as h  # noqa: E402  (puts the repo root on sys.path)
 
-from pyspark.sql import functions as F  # noqa: E402
+from kafka_cdc_hudi_spark.plans.catalog_text import minhash_signatures_for  # noqa: E402
+from kafka_cdc_hudi_spark.streaming.dedup_ivm import (  # noqa: E402
+    DedupPairMaintainer,
+    _pairs_between,
+)
 
-from kafka_cdc_hudi_spark.session import get_spark  # noqa: E402
-from kafka_cdc_hudi_spark.sources.tables import load_table  # noqa: E402
-from kafka_cdc_hudi_spark.streaming.dedup_ivm import DedupPairMaintainer  # noqa: E402
-from calib_gate import end_calib, gated_calib  # noqa: E402
-
-N_BATCHES = int(os.environ.get("SOAK_CHURN_BATCHES", "24"))
-CHURN_DOCS = int(os.environ.get("SOAK_CHURN_DOCS", "250"))
-CHECK_EVERY = int(os.environ.get("SOAK_CHURN_CHECK_EVERY", "8"))
-SEED = 20260815
+CHURN_DOCS = h.churn_size(250)
+SCHEMA = "op STRING, doc_id BIGINT, text STRING, seq BIGINT"
 
 
 def _truth_pairs(spark, live: dict[int, str]) -> set:
-    from kafka_cdc_hudi_spark.plans.catalog_text import minhash_signatures_for
-    from kafka_cdc_hudi_spark.streaming.dedup_ivm import _pairs_between
-
     docs = spark.createDataFrame(
         sorted(live.items()), "doc_id BIGINT, text STRING"
     ).repartition(spark.sparkContext.defaultParallelism)
@@ -62,106 +54,43 @@ def _truth_pairs(spark, live: dict[int, str]) -> set:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scaledata/sf1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    import tempfile
+    run = h.start("soak_churn")
+    spark = run.spark
 
-    spark = get_spark(app_name="soak_churn")
-    spark.sparkContext.setLogLevel("ERROR")
-    # ambient-load gate (VERDICT r9 item 5), same stamp as bench/sweep
-    stamp = gated_calib(spark)
-
-    rng = random.Random(SEED)
-
-    live = {
-        int(r.doc_id): r.text
-        for r in load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
-    }
+    rng = random.Random(h.SEED)
+    live = h.documents(spark, sf_dir)
     n0 = len(live)
-    next_id = max(live) + 1
-    seq = 0
-    root = tempfile.mkdtemp(prefix="soak_churn_")
-    m = DedupPairMaintainer(spark, f"{root}/index", f"{root}/pairs")
-
-    def run_batch(bid: int, rows: list) -> float:
-        df = spark.createDataFrame(
-            rows, "op STRING, doc_id BIGINT, text STRING, seq BIGINT"
-        )
-        t0 = time.perf_counter()
-        m.process(df, bid)
-        return round(time.perf_counter() - t0, 2)
-
+    m = DedupPairMaintainer(spark, f"{run.work}/index", f"{run.work}/pairs")
+    seq = itertools.count()
     # batch 0: full-corpus ingest (the one corpus-sized batch, by design)
-    rows0 = []
-    for d, t in live.items():
-        rows0.append(("i", d, t, seq))
-        seq += 1
-    t_ingest = run_batch(0, rows0)
-    print(f"# ingest: {n0} docs in {t_ingest}s", file=sys.stderr)
+    ingest = spark.createDataFrame([("i", d, t, next(seq)) for d, t in live.items()], SCHEMA)
 
-    batches, checks = [], []
-    for bid in range(1, N_BATCHES + 1):
-        rows = []
-        live_ids = sorted(live)
-        n_del = max(1, CHURN_DOCS // 5)
-        n_ins = max(1, CHURN_DOCS // 5)
-        n_upd = CHURN_DOCS - n_del - n_ins
-        for d in rng.sample(live_ids, n_del):
-            rows.append(("d", d, None, seq)); seq += 1
-            del live[d]
-        live_ids = sorted(live)
-        for d in rng.sample(live_ids, n_upd):
-            if rng.random() < 0.5:
-                # clone another live doc (+suffix) -> near-dup pair appears
-                t = live[rng.choice(live_ids)] + f" churn{seq}"
-            else:
-                # scramble -> prior pairs retract
-                words = (live[d] or "x").split()
-                rng.shuffle(words)
-                t = " ".join(words[: max(3, len(words) // 2)]) + f" upd{seq}"
-            rows.append(("u", d, t, seq)); seq += 1
-            live[d] = t
-        for _ in range(n_ins):
-            t = live[rng.choice(live_ids)] + f" ins{seq}"
-            rows.append(("i", next_id, t, seq)); seq += 1
-            live[next_id] = t
-            next_id += 1
-        wall = run_batch(bid, rows)
-        batches.append({"bid": bid, "n_changed": len(rows), "wall_s": wall})
-        print(f"# batch {bid}: {len(rows)} changed docs, {wall}s", file=sys.stderr)
-        if bid % CHECK_EVERY == 0 or bid == N_BATCHES:
-            t0 = time.perf_counter()
-            got = {(r.doc_a, r.doc_b) for r in m.live_pairs().collect()}
-            want = _truth_pairs(spark, live)
-            ok = got == want
-            checks.append(
-                {"bid": bid, "n_pairs": len(got), "match": ok,
-                 "check_s": round(time.perf_counter() - t0, 2)}
-            )
-            print(f"# checkpoint {bid}: {len(got)} pairs, match={ok}", file=sys.stderr)
-            if not ok:
-                extra, missing = got - want, want - got
-                print(f"# MISMATCH: +{len(extra)} -{len(missing)}", file=sys.stderr)
+    def rewrite(d: int, ids: list[int], s: int) -> str:
+        if rng.random() < 0.5:
+            # clone another live doc (+suffix) -> near-dup pair appears
+            return live[rng.choice(ids)] + f" churn{s}"
+        # scramble -> prior pairs retract
+        words = (live[d] or "x").split()
+        rng.shuffle(words)
+        return " ".join(words[: max(3, len(words) // 2)]) + f" upd{s}"
 
-    churn_walls = [b["wall_s"] for b in batches]
-    result = {
-        "sf_dir": sf_dir,
-        "corpus_docs": n0,
-        "churn_docs_per_batch": CHURN_DOCS,
-        "n_batches": N_BATCHES,
-        "ingest_s": t_ingest,
-        "churn_wall_mean_s": round(sum(churn_walls) / len(churn_walls), 2),
-        "churn_wall_max_s": max(churn_walls),
-        "batches": batches,
-        "checkpoints": checks,
-        "all_checks_match": all(c["match"] for c in checks),
-        **end_calib(spark, stamp),
-    }
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
-    spark.stop()
-    sys.exit(0 if result["all_checks_match"] else 1)
+    def check():
+        got = {(r.doc_a, r.doc_b) for r in m.live_pairs().collect()}
+        want = _truth_pairs(spark, live)
+        if got != want:
+            print(f"# MISMATCH: +{len(got - want)} -{len(want - got)}", file=sys.stderr)
+        return len(got), got == want
+
+    summary = h.churn_loop(
+        spark, [m.index, m.pairs], m.process, ingest,
+        h.mixed_churn(
+            rng, live, CHURN_DOCS, seq,
+            update=rewrite, insert=lambda ids, s: live[rng.choice(ids)] + f" ins{s}",
+        ),
+        SCHEMA, check, "n_pairs",
+    )
+    artifact = {"sf_dir": sf_dir, "corpus_docs": n0, "churn_docs_per_batch": CHURN_DOCS, **summary}
+    h.finish(run, artifact, summary["all_checks_match"], out_path)
 
 
 if __name__ == "__main__":

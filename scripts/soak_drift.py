@@ -19,27 +19,20 @@ Usage: python scripts/soak_drift.py [out.json]
 
 from __future__ import annotations
 
-import json
+import datetime
 import os
-import shutil
 import sys
-import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import soak_harness as h  # noqa: E402  (puts the repo root on sys.path)
 
-import duckdb  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
-from kafka_cdc_hudi_spark.config import DIALECT_DEBEZIUM, JobConfig, TableSpec  # noqa: E402
+from kafka_cdc_hudi_spark.config import TableSpec  # noqa: E402
 from kafka_cdc_hudi_spark.plans.cdc_fixtures import (  # noqa: E402
     drift_segmented_debezium_envelopes,
 )
-from kafka_cdc_hudi_spark.session import get_spark  # noqa: E402
-from kafka_cdc_hudi_spark.sources.kafka import json_file_value_stream  # noqa: E402
 from kafka_cdc_hudi_spark.sources.tables import load_table  # noqa: E402
-from kafka_cdc_hudi_spark.streaming.driver import CdcStreamDriver  # noqa: E402
-from calib_gate import end_calib, gated_calib  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scaledata/sf10"))
 N_BATCHES = 5
@@ -50,10 +43,8 @@ DRIFT_BATCH = 2  # 0-based index of the first drifted batch
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else None
-    spark = get_spark(shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    stamp = gated_calib(spark)
-    print(f"# calib: {stamp}", file=sys.stderr)
+    run = h.start("soak_drift", shuffle_partitions=32)
+    spark = run.spark
 
     events = load_table(spark, SF, "events")
     # equal-count time slices -> batch boundaries at ts quantiles
@@ -61,9 +52,6 @@ def main() -> None:
     cuts = epochs.stat.approxQuantile("e", [i / N_BATCHES for i in range(1, N_BATCHES)], 0.0001)
     cuts_sql = [int(c) for c in cuts]
     ts_cut_micros = cuts_sql[DRIFT_BATCH - 1]  # boundary entering batch DRIFT_BATCH
-
-    import datetime
-
     # fromtimestamp(tz=utc) — utcfromtimestamp is deprecated since 3.12
     ts_cut = datetime.datetime.fromtimestamp(
         ts_cut_micros / 1e6, tz=datetime.timezone.utc
@@ -72,12 +60,8 @@ def main() -> None:
 
     env = drift_segmented_debezium_envelopes(events, ts_cut)
     n_events = env.count()
-
     # stage the N time-ordered batch files
-    stage = tempfile.mkdtemp(prefix="drift_stage_")
     bounds = [None, *cuts_sql, None]
-    from pyspark.sql import functions as F
-
     seg_files = []
     for i in range(N_BATCHES):
         seg = env
@@ -85,71 +69,31 @@ def main() -> None:
             seg = seg.filter(F.unix_micros("ts") >= bounds[i])
         if bounds[i + 1] is not None:
             seg = seg.filter(F.unix_micros("ts") < bounds[i + 1])
-        d = os.path.join(stage, f"seg{i}")
+        d = os.path.join(run.work, f"seg{i}")
         seg.select("value").repartition(1).write.mode("overwrite").text(d)
-        part = [n for n in os.listdir(d) if n.startswith("part-")][0]
-        seg_files.append(os.path.join(d, part))
+        seg_files += h.part_files(d)
 
-    work = tempfile.mkdtemp(prefix="soak_drift_")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
     spec = TableSpec(db="test_db", table="events", primary_keys=("user_id",))
-    cfg = JobConfig(
-        dialect=DIALECT_DEBEZIUM,
-        tables=[spec],
-        sink_root=os.path.join(work, "sink"),
-        checkpoint_location=os.path.join(work, "ckpt"),
-        sink_mode="mor",
-        trigger_interval="0 seconds",
-        max_workers=2,
-    )
-    driver = CdcStreamDriver(spark, cfg)
-    q = driver.start(json_file_value_stream(spark, src, max_files_per_trigger=1))
-    batch_walls = []
-    t_all = time.perf_counter()
-    for i, f in enumerate(seg_files):
-        shutil.move(f, os.path.join(src, f"b{i}.txt"))
-        t0 = time.perf_counter()
-        q.processAllAvailable()
-        batch_walls.append(round(time.perf_counter() - t0, 2))
-        print(f"# batch {i}: {batch_walls[-1]} s", file=sys.stderr)
-    wall = time.perf_counter() - t_all
-    q.stop()
-
+    driver, timing = h.drive(spark, os.path.join(run.work, "drive"), [spec], seg_files)
     state = driver.sink_for(spec).read(spark)
     cols = state.columns
-    assert "score" in cols and "props" in cols, f"merged schema missing drift columns: {cols}"
-    got = {
-        (r["user_id"], r["event_id"], r["score"], r["props"] is None)
-        for r in state.select("user_id", "event_id", "score", "props").collect()
-    }
-
-    ev_path = f"{SF}/events.parquet"
-    if os.path.isdir(ev_path):
-        ev_path = f"{ev_path}/*.parquet"
-    want = {
-        tuple(r)
-        for r in duckdb.sql(f"""
-          SELECT user_id, event_id,
-                 CASE WHEN drifted THEN user_id + 1000 END AS score,
-                 drifted AS props_is_null
-          FROM (
-            SELECT user_id, event_id,
-                   ts >= TIMESTAMP '{ts_cut}' AS drifted,
-                   event_id % 10 = 0 AS del
-            FROM read_parquet('{ev_path}')
-            QUALIFY row_number() OVER (PARTITION BY user_id
-                ORDER BY ts DESC, event_id DESC) = 1
-          ) WHERE NOT del
-        """).fetchall()
-    }
+    got = set()
+    if {"score", "props"} <= set(cols):
+        got = {
+            (r["user_id"], r["event_id"], r["score"], r["props"] is None)
+            for r in state.select("user_id", "event_id", "score", "props").collect()
+        }
+    else:
+        print(f"# merged schema missing drift columns: {cols}", file=sys.stderr)
+    drifted = f"ts >= TIMESTAMP '{ts_cut}'"
+    want = h.events_oracle(
+        SF, f"user_id, event_id, CASE WHEN {drifted} THEN user_id + 1000 END, {drifted}"
+    )
     oracle = "exact" if got == want else "MISMATCH"
-    print(f"# state {len(got)} rows vs oracle {len(want)}: {oracle}", file=sys.stderr)
-    assert oracle == "exact", f"{len(got - want)} extra / {len(want - got)} missing"
+    print(f"# state {len(got)} rows vs oracle {len(want)}: {oracle}"
+          f" ({len(got - want)} extra / {len(want - got)} missing)", file=sys.stderr)
 
-    end_calib(spark, stamp)
-    shutil.rmtree(work, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
+    wall = timing["total_wall_sec"]
     artifact = {
         "what": "schema drift at production batch size: 10M events, drift at batch boundary "
         f"{DRIFT_BATCH} (score added, props dropped), bounded probe + union-by-name merge",
@@ -158,19 +102,14 @@ def main() -> None:
         "n_batches": N_BATCHES,
         "drift_batch": DRIFT_BATCH,
         "ts_cut": ts_cut,
-        "batch_wall_sec": batch_walls,
-        "total_wall_sec": round(wall, 2),
+        "batch_wall_sec": timing["batch_wall_sec"],
+        "total_wall_sec": wall,
         "ev_per_sec": round(n_events / wall, 1),
         "n_state_rows": len(got),
         "oracle": oracle,
         "final_columns": cols,
-        **stamp,
     }
-    line = json.dumps(artifact)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
+    h.finish(run, artifact, oracle == "exact", out_path)
 
 
 if __name__ == "__main__":

@@ -23,35 +23,28 @@ Run at two corpus sizes with the SAME absolute churn:
 
     python scripts/soak_scd2.py /root/testdata/sf0.1 out_sf01.json
     python scripts/soak_scd2.py /root/repo/.scaledata/sf1 out_sf1.json
+
+Defaults: 24 churn batches of 200 users, checkpoints every 8 batches
+(``SOAK_BATCHES`` / ``SOAK_CHURN`` / ``SOAK_CHECK_EVERY``, see
+``soak_harness``).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import random
 import sys
-import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-# calib_gate lives next to this script; the repo-root insert above doesn't
-# cover `python -m scripts.foo`-style invocation (ADVICE r10)
-sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import soak_harness as h  # noqa: E402  (puts the repo root on sys.path)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from kafka_cdc_hudi_spark.operators.temporal import scd2_history  # noqa: E402
-from kafka_cdc_hudi_spark.session import get_spark  # noqa: E402
 from kafka_cdc_hudi_spark.sources.tables import load_table  # noqa: E402
 from kafka_cdc_hudi_spark.streaming.scd2 import Scd2HistoryMaintainer  # noqa: E402
-from calib_gate import end_calib, gated_calib  # noqa: E402
 
-N_BATCHES = int(os.environ.get("SOAK_SCD2_BATCHES", "24"))
-CHURN_USERS = int(os.environ.get("SOAK_SCD2_USERS", "200"))
-CHECK_EVERY = int(os.environ.get("SOAK_SCD2_CHECK_EVERY", "8"))
-SEED = 20260815
-
+CHURN_USERS = h.churn_size(200)
 SCHEMA = "user_id BIGINT, mtime BIGINT, event_id BIGINT, val STRING, _deleted BOOLEAN"
 HASH_COLS = ["user_id", "mtime", "event_id", "val", "valid_from", "valid_to", "is_current"]
 
@@ -70,14 +63,10 @@ def _checksum(df):
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
+    run = h.start("soak_scd2")
+    spark = run.spark
 
-    spark = get_spark(app_name="soak_scd2")
-    spark.sparkContext.setLogLevel("ERROR")
-    # ambient-load gate (VERDICT r9 item 5), same stamp as bench/sweep
-    stamp = gated_calib(spark)
-
-    rng = random.Random(SEED)
-
+    rng = random.Random(h.SEED)
     ev = (
         load_table(spark, sf_dir, "events")
         .select(
@@ -102,27 +91,20 @@ def main() -> None:
     now = max(hi for _, hi in spans.values()) + 1_000_000
     next_eid = 10_000_000_000
 
-    root = tempfile.mkdtemp(prefix="soak_scd2_")
     m = Scd2HistoryMaintainer(
-        root=root,
+        root=run.work,
         keys=["user_id"],
         ts_col="mtime",
         tiebreakers=["event_id"],
         history_mode="mor",
         history_compact_every=8,
     )
+    fed = []  # every churn row so far: the recompute's input beside ``ev``
 
-    t0 = time.perf_counter()
-    m.apply_batch(spark, ev, batch_id=0)
-    t_ingest = round(time.perf_counter() - t0, 2)
-    print(f"# ingest: {n0} change events in {t_ingest}s", file=sys.stderr)
-
-    batches, checks = [], []
-    fed = ev
-    for bid in range(1, N_BATCHES + 1):
+    def next_batch(bid: int) -> list[tuple]:
+        nonlocal now, next_eid
         rows = []
-        picked = rng.sample(live_users, min(CHURN_USERS, len(live_users)))
-        for u in picked:
+        for u in rng.sample(live_users, min(CHURN_USERS, len(live_users))):
             lo, hi = spans[u]
             r = rng.random()
             now += 1000
@@ -137,53 +119,34 @@ def main() -> None:
             else:
                 rows.append((u, now, next_eid, None, True))
                 spans[u] = (lo, max(hi, now))
-        df = spark.createDataFrame(rows, SCHEMA)
-        fed = fed.unionByName(df)
-        t0 = time.perf_counter()
-        m.apply_batch(spark, df, batch_id=bid)
-        wall = round(time.perf_counter() - t0, 2)
-        batches.append({"bid": bid, "n_changed": len(rows), "wall_s": wall})
-        print(f"# batch {bid}: {len(rows)} change events, {wall}s", file=sys.stderr)
-        if bid % CHECK_EVERY == 0 or bid == N_BATCHES:
-            t0 = time.perf_counter()
-            got = _checksum(m.read(spark))
-            want = _checksum(
-                scd2_history(fed, ["user_id"], "mtime", tiebreakers=["event_id"])
-            )
-            ok = got == want
-            checks.append(
-                {"bid": bid, "history_rows": got[0], "match": ok,
-                 "check_s": round(time.perf_counter() - t0, 2)}
-            )
-            print(
-                f"# checkpoint {bid}: {got[0]} history rows, match={ok}"
-                + ("" if ok else f"  got={got} want={want}"),
-                file=sys.stderr,
-            )
+        fed.extend(rows)
+        return rows
 
-    churn_walls = [b["wall_s"] for b in batches]
-    result = {
+    def check():
+        got = _checksum(m.read(spark))
+        want = _checksum(
+            scd2_history(
+                ev.unionByName(spark.createDataFrame(fed, SCHEMA)),
+                ["user_id"], "mtime", tiebreakers=["event_id"],
+            )
+        )
+        if got != want:
+            print(f"# MISMATCH: got={got} want={want}", file=sys.stderr)
+        return got[0], got == want
+
+    summary = h.churn_loop(
+        spark, [m.history], lambda df, bid: m.apply_batch(spark, df, batch_id=bid), ev,
+        next_batch, SCHEMA, check, "history_rows",
+    )
+    artifact = {
         "sf_dir": sf_dir,
         "corpus_events": n0,
         "n_users": len(live_users),
         "churn_users_per_batch": CHURN_USERS,
-        "n_batches": N_BATCHES,
         "history_mode": "mor",
-        "ingest_s": t_ingest,
-        "churn_wall_mean_s": round(sum(churn_walls) / len(churn_walls), 2),
-        "churn_wall_max_s": max(churn_walls),
-        "batches": batches,
-        "checkpoints": checks,
-        "all_checks_match": all(c["match"] for c in checks),
-        **end_calib(spark, stamp),
+        **summary,
     }
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
-    spark.stop()
-    sys.exit(0 if result["all_checks_match"] else 1)
+    h.finish(run, artifact, summary["all_checks_match"], out_path)
 
 
 if __name__ == "__main__":

@@ -19,16 +19,14 @@ Writes one JSON line; numbers are recorded in PLANS.md per round.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import soak_harness as h  # noqa: E402  (puts the repo root on sys.path)
 
-from kafka_cdc_hudi_spark.session import get_spark  # noqa: E402
 from kafka_cdc_hudi_spark.streaming.metrics import attach_metrics  # noqa: E402
 from kafka_cdc_hudi_spark.streaming.windows import (  # noqa: E402
     interval_join_streams,
@@ -49,7 +47,7 @@ def _write_hour_files(spark, src: str) -> None:
     hour per batch. Deterministic id arithmetic, no RNG."""
     from pyspark.sql import functions as F
 
-    for h in range(N_BATCHES):
+    for hour in range(N_BATCHES):
         df = (
             spark.range(EVENTS_PER_BATCH)
             .select(
@@ -62,7 +60,7 @@ def _write_hour_files(spark, src: str) -> None:
                 # spread events across the hour, seconds granularity
                 (
                     F.col("t0")
-                    + F.make_interval(secs=F.lit(h * 3600) + F.col("i") % 3600)
+                    + F.make_interval(secs=F.lit(hour * 3600) + F.col("i") % 3600)
                 ).alias("ts"),
                 ((F.col("i") % 97).cast("double") / 10.0).alias("value"),
                 F.concat(F.lit("type_"), (F.col("i") % 7).cast("string")).alias(
@@ -70,16 +68,20 @@ def _write_hour_files(spark, src: str) -> None:
                 ),
             )
         )
-        df.coalesce(1).write.mode("overwrite").json(os.path.join(src, f"h{h:02d}"))
-    # flatten: the file source wants one directory of files
+        df.coalesce(1).write.mode("overwrite").json(os.path.join(src, f"h{hour:02d}"))
+    # flatten: the file source wants one directory of files. It takes them
+    # in modification-time order, and copies made in one loop can share a
+    # timestamp, so stamp them one second apart in hour order
     flat = os.path.join(src, "flat")
     os.makedirs(flat, exist_ok=True)
-    n = 0
-    for h in range(N_BATCHES):
-        d = os.path.join(src, f"h{h:02d}")
+    n, t0 = 0, time.time()
+    for hour in range(N_BATCHES):
+        d = os.path.join(src, f"h{hour:02d}")
         for f in sorted(os.listdir(d)):
             if f.endswith(".json"):
-                shutil.copy(os.path.join(d, f), os.path.join(flat, f"b{h:02d}_{n}.json"))
+                dst = os.path.join(flat, f"b{hour:02d}_{n}.json")
+                shutil.copy(os.path.join(d, f), dst)
+                os.utime(dst, (t0 + n, t0 + n))
                 n += 1
 
 
@@ -91,20 +93,18 @@ def _stream(spark, flat: str):
     )
 
 
-def _drain(spark, out_df, mode: str, name: str) -> list[dict]:
+def _drain(spark, out_df, mode: str, ckpt: str) -> list[dict]:
     listener = attach_metrics(spark)
-    ckpt = tempfile.mkdtemp(prefix=f"soakstate_{name}_")
     q = (
         out_df.writeStream.outputMode(mode)
         .format("noop")
-        .option("checkpointLocation", os.path.join(ckpt, "ckpt"))
+        .option("checkpointLocation", ckpt)
         .trigger(processingTime="0 seconds")
         .start()
     )
     q.processAllAvailable()
     q.stop()
     spark.streams.removeListener(listener)
-    shutil.rmtree(ckpt, ignore_errors=True)
     return [r for r in listener.progress if r["batch_id"] is not None]
 
 
@@ -131,9 +131,9 @@ def _summarize(name: str, prog: list[dict], worst_case: int) -> dict:
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else None
-    spark = get_spark(app_name="soak_state")
-    spark.sparkContext.setLogLevel("ERROR")
-    src = tempfile.mkdtemp(prefix="soakstate_src_")
+    run = h.start("soak_state")
+    spark = run.spark
+    src = os.path.join(run.work, "src")
     _write_hour_files(spark, src)
     flat = os.path.join(src, "flat")
 
@@ -145,13 +145,13 @@ def main() -> None:
     #    unbounded would be all 24h x 6 slides x 7 types
     ev = _stream(spark, flat)
     sl = sliding_counts(ev, window="30 minutes", slide="10 minutes", watermark="1 hour")
-    prog = _drain(spark, sl, "append", "sliding")
+    prog = _drain(spark, sl, "append", os.path.join(run.work, "sliding"))
     results.append(_summarize("sliding_counts", prog, worst_case=24 * 6 * 7))
 
     # 2. custom stateful operator: one state row per user, forever-flat
     ev = _stream(spark, flat)
     rs = running_user_stats(ev)
-    prog = _drain(spark, rs, "update", "running_stats")
+    prog = _drain(spark, rs, "update", os.path.join(run.work, "running_stats"))
     rec = _summarize("running_user_stats", prog, worst_case=USERS * N_BATCHES)
     rec["bounded"] = rec["state_max_tail"] <= USERS  # exact bound: keys
     results.append(rec)
@@ -163,7 +163,7 @@ def main() -> None:
     ij = interval_join_streams(
         clicks, buys, on=["user_id"], within="30 minutes", watermark="1 hour"
     )
-    prog = _drain(spark, ij, "append", "interval_join")
+    prog = _drain(spark, ij, "append", os.path.join(run.work, "interval_join"))
     results.append(
         _summarize(
             "interval_join_streams",
@@ -176,13 +176,12 @@ def main() -> None:
     #    watermark horizon, not keys ever seen
     ev = _stream(spark, flat)
     dd = streaming_dedup(ev, ["user_id", "event_type"], watermark="1 hour")
-    prog = _drain(spark, dd, "append", "dedup")
+    prog = _drain(spark, dd, "append", os.path.join(run.work, "dedup"))
     results.append(
         _summarize("streaming_dedup", prog, worst_case=USERS * 7 * N_BATCHES)
     )
 
     wall = round(time.perf_counter() - t0, 1)
-    shutil.rmtree(src, ignore_errors=True)
     summary = {
         "n_batches": N_BATCHES,
         "events_per_batch": EVENTS_PER_BATCH,
@@ -191,13 +190,7 @@ def main() -> None:
         "queries": results,
         "loadavg": list(os.getloadavg()),
     }
-    line = json.dumps(summary)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
-    spark.stop()
-    sys.exit(0 if summary["all_bounded"] else 1)
+    h.finish(run, summary, summary["all_bounded"], out_path)
 
 
 if __name__ == "__main__":
